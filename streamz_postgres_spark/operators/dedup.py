@@ -1605,7 +1605,7 @@ def _winnow_pairs(
     # groupBy(gram) reuses the window's hashpartitioning(gram)
     # exchange (guide §2.4), so the plan still has exactly one
     # exchange below the pair explode (verified in
-    # plans/r14/q_dedup_substring_after.txt).
+    # plans/r14/q_dedup_substring_after_hazard.txt).
     #
     # df semantics unchanged: count(*) over the partition counts
     # NULL-doc_id rows toward the cap (matching the oracle's

@@ -1072,7 +1072,9 @@ def q_retrieval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_retrieval_topk was planned and executed twice — the before
     # plan (plans/r14/q_retrieval_prf_before.txt) scans documents
     # EIGHT times. seeds is Q x 5 rows: one eager localCheckpoint
-    # runs BM25 once; blocks released next invocation (lifecycle).
+    # runs BM25 once; the blocks are freed by ContextCleaner after
+    # the next invocation drops this reference (track_scoped's
+    # unpersist alone does not free localCheckpoint blocks).
     from streamz_postgres_spark.lifecycle import track_scoped
 
     seeds = seeds.localCheckpoint(eager=True)

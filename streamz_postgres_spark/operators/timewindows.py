@@ -1334,7 +1334,8 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times. bars is O(types x bars) (hundreds of rows): one eager
     # localCheckpoint materializes the only input-sized stage once;
     # the residual joins all run over the tiny checkpointed blocks,
-    # released on the next invocation via the standard lifecycle.
+    # freed by ContextCleaner after the next invocation drops this
+    # reference (track_scoped's unpersist does not free them).
     from streamz_postgres_spark.lifecycle import track_scoped
 
     bars = bars.localCheckpoint(eager=True)

@@ -275,30 +275,25 @@ class PsqlPollingLoader:
         import subprocess
         import tempfile
 
-        out = subprocess.run(
-            [
-                self.psql_path,
-                *self.dsn,
-                "-X",
-                "-c",
-                # FORCE_QUOTE * so every non-NULL value is quoted:
-                # an unquoted empty field is then unambiguously NULL
-                # and a quoted "" unambiguously the empty string
-                # (round-7 review find — COPY's default leaves empty
-                # strings unquoted, identical to the NULL sentinel)
-                f"COPY ({query}) TO STDOUT "
-                "(FORMAT CSV, HEADER, FORCE_QUOTE *)",
-            ],
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        f = tempfile.NamedTemporaryFile(
-            mode="w", suffix=".csv", delete=False, prefix="psql_poll_"
-        )
-        f.write(out.stdout)
-        f.close()
-        self._scratch.append(f.name)
+        # FORCE_QUOTE * so every non-NULL value is quoted: an unquoted
+        # empty field is then unambiguously NULL and a quoted ""
+        # unambiguously the empty string (round-7 review find — COPY's
+        # default leaves empty strings unquoted, identical to the NULL
+        # sentinel)
+        copy = f"COPY ({query}) TO STDOUT (FORMAT CSV, HEADER, FORCE_QUOTE *)"
+        # psql streams COPY's output straight into the scratch file
+        # (registered first, so close() removes it even when COPY
+        # fails); only stderr is buffered, for the error
+        with tempfile.NamedTemporaryFile(
+            suffix=".csv", delete=False, prefix="psql_poll_"
+        ) as f:
+            self._scratch.append(f.name)
+            subprocess.run(
+                [self.psql_path, *self.dsn, "-X", "-c", copy],
+                stdout=f,
+                stderr=subprocess.PIPE,
+                check=True,
+            )
         return (
             self.spark.read.option("header", True)
             # RFC-4180 options (round-7 review find): PG COPY doubles
@@ -483,15 +478,26 @@ def apply_changes(
     )
 
 
+def _count_and_max_seq(env: DataFrame) -> tuple[int, int]:
+    """Row count and max ``seq`` of a persisted envelope batch, from
+    ONE aggregate job."""
+    row = env.agg(
+        F.count(F.lit(1)).alias("n"), F.max("seq").alias("hi")
+    ).collect()[0]
+    return int(row["n"]), int(row["hi"] or 0)
+
+
 class PollingCdcSource:
     """The reference's poll loop, Spark-side (SURVEY §3.1).
 
     snapshot -> 'r' envelopes -> apply_fn; then each poll reads rows
-    with cursor > last, wraps them as 'c'/'u' envelopes, advances the
-    cursor, and hands the batch to ``apply_fn(batch_df, poll_idx)``
-    — the driver-loop analogue of foreachBatch. The cursor is plain
-    state a caller can checkpoint (the streaming runner persists it
-    alongside the Spark checkpoint dir).
+    with cursor > last, wraps them as 'c'/'u' envelopes, hands the
+    batch to ``apply_fn(batch_df, poll_idx)`` — the driver-loop
+    analogue of foreachBatch — and advances the cursor only once
+    ``apply_fn`` has returned (a raising apply leaves it where it
+    was, so the batch is re-read). The cursor is plain state a caller
+    can checkpoint (the streaming runner persists it alongside the
+    Spark checkpoint dir).
     """
 
     def __init__(
@@ -506,15 +512,16 @@ class PollingCdcSource:
         self.cursor: int = 0
 
     def start(self, apply_fn: Callable[[DataFrame, int], None]) -> None:
-        # persist the envelope batch so the apply and the cursor agg
+        # persist the envelope batch so the stats job and the apply
         # read ONE materialized execution of the source query — two
-        # independent lazy executions of a live JDBC read could see
-        # different data, silently skipping rows committed in between
+        # independent lazy executions of a live source read could see
+        # different data, silently skipping rows committed in between.
+        # The stats job fills the cache; apply_fn then reads from it.
         env = to_envelope(self.loader.snapshot(), self.key_cols, "r").persist()
         try:
+            _, hi = _count_and_max_seq(env)
             apply_fn(env, 0)
-            row = env.agg(F.max("seq").alias("c")).collect()[0]
-            self.cursor = int(row["c"] or 0)
+            self.cursor = hi
         finally:
             env.unpersist()
             # the batch is fully consumed: let scratch-holding
@@ -545,13 +552,14 @@ class PollingCdcSource:
             op = F.when(self.is_create(inc), "c").otherwise("u")
         else:
             op = F.lit("c")
-        # one materialized execution serves count, apply, and cursor
+        # one materialized execution serves the stats and the apply;
+        # the stats job runs first, as an empty poll skips apply_fn (an
+        # Observation on apply_fn's job would also hang if it ran none)
         env = to_envelope(inc, self.key_cols, op).persist()
         try:
-            n = env.count()
+            n, hi = _count_and_max_seq(env)
             if n:
                 apply_fn(env, idx)
-                hi = int(env.agg(F.max("seq").alias("c")).collect()[0]["c"])
                 cap = hi if safe is None else min(hi, safe)
                 self.cursor = max(self.cursor, cap)
             elif safe is None:
@@ -572,14 +580,17 @@ class PsqlTableSink:
     materialized CDC table living IN Postgres, round-trippable
     without a JDBC driver on the classpath.
 
-    ``write`` creates the table from the frame's schema when absent
-    (Spark -> PG types via :func:`pg_types.pg_type_for`) and COPYs
-    the rows in as CSV through one psql process. The frame funnels
-    through the driver (``toPandas``) — right for a poll loop's
-    batch sizes and for tests against a live server; a 100 TB
-    backfill uses the JDBC writer (``df.write.jdbc``) or
-    per-partition COPY workers instead, and the docstring is the
-    contract that says so.
+    ``write`` collects the frame to the driver as Arrow
+    (``toArrow``), encodes it as CSV with pyarrow, and pipes it into
+    ONE psql process that runs, in one transaction, the
+    ``CREATE TABLE IF NOT EXISTS`` (Spark -> PG types via
+    :func:`pg_types.pg_type_for`), the ``TRUNCATE`` of an overwrite
+    and the ``COPY FROM STDIN``: a failing write leaves the table as
+    it was. Scalar columns only; ``binary`` lands in ``bytea`` via
+    its hex form. The driver funnel is right for a poll loop's batch
+    sizes and for tests against a live server; a 100 TB backfill
+    uses the JDBC writer (``df.write.jdbc``) or per-partition COPY
+    workers instead, and the docstring is the contract that says so.
     """
 
     spark: SparkSession
@@ -589,18 +600,6 @@ class PsqlTableSink:
 
     def __post_init__(self) -> None:
         self.table = quote_qualified_ident(self.table)
-
-    def _run(self, argv: list[str], stdin_text: str | None = None) -> str:
-        import subprocess
-
-        out = subprocess.run(
-            [self.psql_path, *self.dsn, "-X", *argv],
-            input=stdin_text,
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        return out.stdout
 
     def _ddl(self, df: DataFrame) -> str:
         from streamz_postgres_spark.sources.pg_types import pg_type_for
@@ -614,37 +613,50 @@ class PsqlTableSink:
     def write(self, df: DataFrame, mode: str = "append") -> int:
         """Write ``df`` into the PG table; returns rows written.
         ``mode``: 'append' adds rows, 'overwrite' truncates first.
+        Raises ValueError for an array, map or struct column, before
+        anything reaches Postgres, and CalledProcessError (psql's
+        message in ``stderr``) when the transaction rolls back.
         """
+        import subprocess
+
+        import pyarrow as pa
+        import pyarrow.csv as pacsv
+
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
-        self._run(["-c", self._ddl(df)])
-        if mode == "overwrite":
-            self._run(["-c", f"TRUNCATE {self.table}"])
-        # hand-rolled CSV from collected Rows (round-7 review find):
-        # toPandas coerces nullable integer columns to float64 ('1.0'
-        # breaks a bigint COPY) and its unquoted empty strings
-        # conflate with NULL. Rows keep Python ints/None; rendering
-        # None as unquoted-empty and EVERY string quoted makes NULL
-        # vs '' unambiguous under COPY's CSV rules.
-        def cell(v) -> str:
-            if v is None:
-                return ""
-            if isinstance(v, str):
-                return '"' + v.replace('"', '""') + '"'
-            return str(v)
-
-        cols = df.columns
-        rows = df.collect()
-        csv_text = "".join(
-            ",".join(cell(row[c]) for c in cols) + "\n" for row in rows
+        hexed = {}
+        for f in df.schema.fields:
+            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
+                raise ValueError(
+                    f"PsqlTableSink cannot write nested column {f.name!r}"
+                    f" ({f.dataType.simpleString()}): scalar columns only"
+                )
+            if isinstance(f.dataType, T.BinaryType):
+                # bytea's hex input form; raw bytes would break the CSV
+                name = "`" + f.name.replace("`", "``") + "`"
+                hexed[f.name] = F.concat(F.lit("\\x"), F.hex(F.col(name)))
+        rows = df.withColumns(hexed).toArrow()
+        # Arrow keeps nullable integers integral (toPandas would make
+        # them float64, and '1.0' breaks a bigint COPY); all_valid
+        # quotes every value and leaves NULL unquoted-empty: exactly
+        # the NULL-vs-'' split COPY's NULL '' reads back
+        csv = pa.BufferOutputStream()
+        pacsv.write_csv(
+            rows,
+            csv,
+            pacsv.WriteOptions(include_header=False, quoting_style="all_valid"),
         )
-        collist = ", ".join(f'"{c}"' for c in cols)
-        self._run(
-            [
-                "-c",
-                f"COPY {self.table} ({collist}) "
-                "FROM STDIN (FORMAT CSV, NULL '')",
-            ],
-            stdin_text=csv_text,
+        collist = ", ".join(f'"{c}"' for c in df.columns)
+        sql = [
+            self._ddl(df),
+            *([f"TRUNCATE {self.table}"] if mode == "overwrite" else []),
+            f"COPY {self.table} ({collist}) FROM STDIN (FORMAT CSV, NULL '')",
+        ]
+        subprocess.run(
+            [self.psql_path, *self.dsn, "-X", "-v", "ON_ERROR_STOP=1", "-1",
+             *(arg for cmd in sql for arg in ("-c", cmd))],
+            input=csv.getvalue(),
+            capture_output=True,
+            check=True,
         )
-        return len(rows)
+        return rows.num_rows

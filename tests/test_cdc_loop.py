@@ -80,6 +80,51 @@ def test_polling_cdc_loop(spark):
     assert state.count() == want
 
 
+def test_cursor_moves_only_after_apply_returns(spark):
+    """A raising apply_fn leaves the cursor where it was, in start and
+    in poll_once, so the next call re-reads the same batch."""
+    loader = GrowingLoader(spark, SF_DIR, snapshot_cursor=300, horizon=300)
+    src = PollingCdcSource(loader, key_cols=["user_id"])
+
+    def boom(df, i):
+        raise RuntimeError("apply failed")
+
+    with pytest.raises(RuntimeError):
+        src.start(boom)
+    assert src.cursor == 0
+    src.start(lambda df, i: None)
+    assert src.cursor == 300
+
+    loader.horizon = 550
+    with pytest.raises(RuntimeError):
+        src.poll_once(boom, 1)
+    assert src.cursor == 300
+    assert src.poll_once(lambda df, i: None, 2) == 250
+    assert src.cursor == 550
+
+
+def test_poll_once_job_count(spark):
+    """A non-empty poll costs the incremental read plus ONE stats
+    aggregate; any extra action in poll_once changes the count."""
+    sc = spark.sparkContext
+    loader = GrowingLoader(spark, SF_DIR, snapshot_cursor=300, horizon=300)
+    src = PollingCdcSource(loader, key_cols=["user_id"])
+    src.start(lambda df, i: None)
+    loader.horizon = 550
+    group = "test_poll_once_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        n = src.poll_once(lambda df, i: None, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 250
+    # 1 parquet schema-inference job for the incremental read, then 3
+    # for the count+max(seq) aggregate that also fills the envelope
+    # cache (AQE stages)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+
+
 def test_quote_qualified_ident():
     """JDBC table identifiers are validated and quoted before SQL
     interpolation (injection boundary + mixed-case safety)."""

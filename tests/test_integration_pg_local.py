@@ -365,6 +365,109 @@ def test_hostile_values_round_trip_live(spark, fresh_table):
     assert back == {i: (v, n) for i, v, n in hostile}
     ld.close()
 
+    # non-finite and edge doubles, microsecond timestamps (with and
+    # without zone), decimal, date, bool, tab and backslash: checked
+    # as the server's own text rendering of what it stored
+    from datetime import date, datetime, timezone
+    from decimal import Decimal
+
+    typed = spark.createDataFrame(
+        [
+            (1, float("nan"), datetime(2024, 2, 29, 23, 59, 59, 123456,
+             tzinfo=timezone.utc), datetime(1969, 12, 31, 23, 59, 59, 1),
+             Decimal("-12345678.9012"), date(2024, 2, 29), True, "a\tb"),
+            (2, float("inf"), None, None, Decimal("0.0001"),
+             date(1900, 3, 1), False, "back\\slash"),
+            (3, float("-inf"), None, None, None, None, None, 'tab\t"q",\\'),
+            (4, -0.0, None, None, None, None, None, None),
+            (5, 1e-300, None, None, None, None, None, None),
+            (6, 0.1 + 0.2, None, None, None, None, None, None),
+        ],
+        "id int, d double, ts timestamp, tsn timestamp_ntz,"
+        " dec decimal(12,4), dt date, b boolean, s string",
+    )
+    _sql(dsn, "DROP TABLE IF EXISTS t_typed")
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_typed")
+    assert sink.write(typed, mode="overwrite") == 6
+
+    def col(expr: str) -> list[str]:
+        return _sql(
+            dsn, f"SELECT coalesce(({expr})::text, 'NULL') FROM t_typed"
+            " ORDER BY id"
+        ).split("\n")
+
+    assert col("d") == [
+        "NaN", "Infinity", "-Infinity", "-0", "1e-300",
+        "0.30000000000000004",
+    ]
+    assert col("ts AT TIME ZONE 'UTC'")[:2] == [
+        "2024-02-29 23:59:59.123456", "NULL",
+    ]
+    assert col("tsn")[:2] == ["1969-12-31 23:59:59.000001", "NULL"]
+    assert col("dec")[:3] == ["-12345678.9012", "0.0001", "NULL"]
+    assert col("dt")[:3] == ["2024-02-29", "1900-03-01", "NULL"]
+    assert col("b")[:3] == ["true", "false", "NULL"]
+    assert col("s = E'a\\tb'")[0] == "true"
+    assert col("s = E'back\\\\slash'")[1] == "true"
+    assert col("s = E'tab\\t\"q\",\\\\'")[2] == "true"
+    assert col("s")[3] == "NULL"
+
+
+def test_sink_binary_and_nested_columns_live(spark, fresh_table):
+    """binary lands in bytea byte for byte (CSV-hostile bytes, empty
+    and NULL included); array, map and struct columns are refused
+    with a ValueError naming the column before any psql runs."""
+    from streamz_postgres_spark.sources.cdc import PsqlTableSink
+
+    dsn = fresh_table
+    _sql(dsn, "DROP TABLE IF EXISTS t_blob")
+    df = spark.createDataFrame(
+        [(1, bytes([0, 255, 44, 34, 10, 92])), (2, None), (3, b"")],
+        "id int, blob binary",
+    )
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_blob")
+    assert sink.write(df, mode="overwrite") == 3
+    assert _sql(
+        dsn,
+        "SELECT string_agg(coalesce(encode(blob, 'hex'), 'NULL'), ','"
+        " ORDER BY id) FROM t_blob",
+    ) == "00ff2c220a5c,NULL,"
+
+    # a psql that does not exist: reaching it would raise
+    # FileNotFoundError instead of the ValueError
+    refusing = PsqlTableSink(
+        spark=spark, dsn=dsn, table="t_nested", psql_path="/nonexistent/psql"
+    )
+    for name, expr in (
+        ("arr", "array(1, 2)"),
+        ("mp", "map('k', 'v')"),
+        ("st", "named_struct('a', 1)"),
+    ):
+        nested = spark.range(1).selectExpr("id", f"{expr} AS {name}")
+        with pytest.raises(ValueError, match=name):
+            refusing.write(nested)
+    assert _sql(dsn, "SELECT to_regclass('t_nested') IS NULL") == "t"
+
+
+def test_overwrite_is_atomic_live(spark, fresh_table):
+    """DDL, TRUNCATE and COPY run as one transaction: an overwrite
+    whose COPY fails leaves the previous rows in place."""
+    from streamz_postgres_spark.sources.cdc import PsqlTableSink
+
+    dsn = fresh_table
+    _sql(dsn, "DROP TABLE IF EXISTS t_atomic")
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_atomic")
+    good = spark.createDataFrame([(1, "a"), (2, "b")], "id int, note string")
+    assert sink.write(good, mode="overwrite") == 2
+    # the table's id is integer; 2^40 fails COPY after the TRUNCATE
+    bad = spark.createDataFrame([(2**40, "c")], "id bigint, note string")
+    with pytest.raises(subprocess.CalledProcessError) as err:
+        sink.write(bad, mode="overwrite")
+    assert b"out of range" in err.value.stderr
+    assert _sql(
+        dsn, "SELECT string_agg(id || note, ',' ORDER BY id) FROM t_atomic"
+    ) == "1a,2b"
+
 
 def test_pk_cursor_loader_live(spark, fresh_table):
     """The non-xmin cursor path live: a PK cursor has no
