@@ -54,6 +54,7 @@ xmin-polling traps):
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Protocol
 
@@ -109,6 +110,16 @@ class Loader(Protocol):
         """Highest cursor value guaranteed complete (no still-open
         transaction at or below it), or None when the source has no
         in-flight-work concept."""
+        ...
+
+    def batch_stats(self, frame: DataFrame) -> tuple[int, int] | None:
+        """Optional. ``(row count, max __cursor)`` of a frame this
+        loader returned, known without a Spark job, or None when the
+        loader cannot vouch for it. A loader that answers promises
+        that every re-read of ``frame`` sees exactly those rows until
+        its ``close()``, which must forget the stats. Loaders without
+        the method (or answering None) get a persisted batch and one
+        aggregate job from :class:`PollingCdcSource` instead."""
         ...
 
 
@@ -228,6 +239,15 @@ class PsqlPollingLoader:
     the ``schema`` names — fine for a poll loop's row volumes, wrong
     for a 100 TB backfill. ``schema`` is the table's Spark DDL
     WITHOUT the cursor column (appended automatically).
+
+    Transport and stats contract: each returned frame is a lazy
+    Spark read of one scratch CSV that psql wrote in full before the
+    method returned, and that nothing rewrites before ``close()``
+    deletes it. Every re-read of the frame therefore sees the same
+    rows, so :meth:`batch_stats` can count them and take the max
+    ``__cursor`` from the file itself — pyarrow parses the cursor
+    column only, with the same RFC-4180 rules as the Spark read — and
+    the poll loop needs neither a persist nor a stats job.
     """
 
     spark: SparkSession
@@ -246,14 +266,17 @@ class PsqlPollingLoader:
         # calls after each envelope batch is consumed, keeping the
         # poll loop leak-free without invalidating live frames.
         self._scratch: list[str] = []
+        # (frame, its scratch CSV) for batch_stats; dropped by close()
+        self._files: list[tuple[DataFrame, str]] = []
 
     def close(self) -> None:
-        """Remove every scratch CSV handed out so far. Frames
-        returned before this call must not be re-read afterwards
-        (same consume-within-the-batch contract PollingCdcSource
-        already imposes on envelope frames)."""
+        """Remove every scratch CSV handed out so far and forget
+        their stats. Frames returned before this call must not be
+        re-read afterwards (same consume-within-the-batch contract
+        PollingCdcSource already imposes on envelope frames)."""
         import os
 
+        self._files.clear()
         while self._scratch:
             try:
                 os.unlink(self._scratch.pop())
@@ -294,7 +317,7 @@ class PsqlPollingLoader:
                 stderr=subprocess.PIPE,
                 check=True,
             )
-        return (
+        frame = (
             self.spark.read.option("header", True)
             # RFC-4180 options (round-7 review find): PG COPY doubles
             # quotes ("" inside a quoted field) and keeps newlines
@@ -311,6 +334,48 @@ class PsqlPollingLoader:
             .schema(f"{self.schema}, __cursor bigint")
             .csv(f.name)
         )
+        self._files.append((frame, f.name))
+        return frame
+
+    def batch_stats(self, frame: DataFrame) -> tuple[int, int] | None:
+        """Row count and max ``__cursor`` of a frame returned since
+        the last ``close()``, read from its scratch CSV without a
+        Spark job; None for any other frame."""
+        import os
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.csv as pacsv
+
+        path = next((p for f, p in self._files if f is frame), None)
+        if path is None:
+            return None
+        # the same RFC-4180 reading as the Spark side: newlines inside
+        # quoted values, doubled quotes, and only an unquoted empty
+        # field is NULL
+        parse = pacsv.ParseOptions(newlines_in_values=True, double_quote=True)
+        convert = pacsv.ConvertOptions(
+            include_columns=["__cursor"],
+            column_types={"__cursor": pa.int64()},
+            null_values=[""],
+            quoted_strings_can_be_null=False,
+        )
+        # a row must fit in one parse block; grow the block for long
+        # multi-line values, up to the whole file
+        block = 1 << 20
+        while True:
+            try:
+                cursors = pacsv.read_csv(
+                    path,
+                    read_options=pacsv.ReadOptions(block_size=block),
+                    parse_options=parse,
+                    convert_options=convert,
+                )["__cursor"]
+                return len(cursors), int(pc.max(cursors).as_py() or 0)
+            except pa.ArrowInvalid:
+                if block > os.path.getsize(path):
+                    raise
+                block *= 4
 
     def snapshot(self) -> DataFrame:
         return self._frame(
@@ -487,6 +552,21 @@ def _count_and_max_seq(env: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["hi"] or 0)
 
 
+@dataclass(frozen=True)
+class PollRecord:
+    """What the last ``start``/``poll_once`` that returned did: the
+    rows it handed to ``apply_fn``, the cursor before and after, the
+    ``safe_cursor`` horizon it capped the cursor at (None: no probe),
+    and whether it reset the cursor to 0 — xid wraparound or a
+    restored source, so the batch re-read the table from the start."""
+
+    rows: int
+    cursor_before: int
+    cursor_after: int
+    safe: int | None
+    reset: bool
+
+
 class PollingCdcSource:
     """The reference's poll loop, Spark-side (SURVEY §3.1).
 
@@ -497,7 +577,8 @@ class PollingCdcSource:
     ``apply_fn`` has returned (a raising apply leaves it where it
     was, so the batch is re-read). The cursor is plain state a caller
     can checkpoint (the streaming runner persists it alongside the
-    Spark checkpoint dir).
+    Spark checkpoint dir); ``last_poll`` is a :class:`PollRecord` of
+    the last call.
     """
 
     def __init__(
@@ -510,23 +591,44 @@ class PollingCdcSource:
         self.key_cols = key_cols
         self.is_create = is_create
         self.cursor: int = 0
+        self.last_poll: PollRecord | None = None
+
+    @contextmanager
+    def _batch(self, frame: DataFrame, op: "F.Column | str"):
+        """Yield ``(envelopes, rows, max seq)`` for one captured batch,
+        then release it. The stats must describe exactly the rows
+        apply_fn will read. When the loader's ``batch_stats`` vouches
+        for a stable, counted frame they cost nothing, and nothing is
+        persisted. Only when it cannot is the envelope persisted, so
+        the stats job and the apply read ONE materialized execution
+        of the source query — two lazy executions of a live source
+        read could see different data, silently skipping rows
+        committed in between — and the stats job fills the cache
+        apply_fn then reads from."""
+        try:
+            stats = getattr(self.loader, "batch_stats", lambda f: None)(frame)
+            env = to_envelope(frame, self.key_cols, op)
+            if stats is None:
+                env = env.persist()
+                try:
+                    n, hi = _count_and_max_seq(env)
+                    yield env, n, hi
+                finally:
+                    env.unpersist()
+            else:
+                yield env, *stats
+        finally:
+            # the batch is fully consumed: let scratch-holding
+            # loaders (PsqlPollingLoader) drop their temp files and
+            # the stats that described them
+            getattr(self.loader, "close", lambda: None)()
 
     def start(self, apply_fn: Callable[[DataFrame, int], None]) -> None:
-        # persist the envelope batch so the stats job and the apply
-        # read ONE materialized execution of the source query — two
-        # independent lazy executions of a live source read could see
-        # different data, silently skipping rows committed in between.
-        # The stats job fills the cache; apply_fn then reads from it.
-        env = to_envelope(self.loader.snapshot(), self.key_cols, "r").persist()
-        try:
-            _, hi = _count_and_max_seq(env)
+        before = self.cursor
+        with self._batch(self.loader.snapshot(), "r") as (env, n, hi):
             apply_fn(env, 0)
             self.cursor = hi
-        finally:
-            env.unpersist()
-            # the batch is fully consumed: let scratch-holding
-            # loaders (PsqlPollingLoader) drop their temp files
-            getattr(self.loader, "close", lambda: None)()
+        self.last_poll = PollRecord(n, before, self.cursor, None, False)
 
     def poll_once(self, apply_fn: Callable[[DataFrame, int], None], idx: int) -> int:
         """One poll: returns the number of change rows emitted.
@@ -542,9 +644,13 @@ class PollingCdcSource:
         - loaders without a horizon (``safe_cursor() is None``) fall
           back to the table-max regression check on empty polls —
           catches restored backups, though not xmin wraparound.
+
+        Either reset shows as ``last_poll.reset``.
         """
+        before = self.cursor
         safe = getattr(self.loader, "safe_cursor", lambda: None)()
-        if safe is not None and safe < self.cursor:
+        reset = safe is not None and safe < self.cursor
+        if reset:
             # wraparound/regression: re-read from zero
             self.cursor = 0
         inc = self.loader.incremental(self.cursor)
@@ -552,24 +658,18 @@ class PollingCdcSource:
             op = F.when(self.is_create(inc), "c").otherwise("u")
         else:
             op = F.lit("c")
-        # one materialized execution serves the stats and the apply;
-        # the stats job runs first, as an empty poll skips apply_fn (an
+        # the stats come first: an empty poll skips apply_fn (an
         # Observation on apply_fn's job would also hang if it ran none)
-        env = to_envelope(inc, self.key_cols, op).persist()
-        try:
-            n, hi = _count_and_max_seq(env)
+        with self._batch(inc, op) as (env, n, hi):
             if n:
                 apply_fn(env, idx)
                 cap = hi if safe is None else min(hi, safe)
                 self.cursor = max(self.cursor, cap)
-            elif safe is None:
-                observed = self.loader.max_cursor()
-                if observed < self.cursor:
-                    # regression fallback (no horizon probe)
-                    self.cursor = 0
-        finally:
-            env.unpersist()
-            getattr(self.loader, "close", lambda: None)()
+            elif safe is None and self.loader.max_cursor() < self.cursor:
+                # regression fallback (no horizon probe)
+                self.cursor = 0
+                reset = True
+        self.last_poll = PollRecord(n, before, self.cursor, safe, reset)
         return n
 
 

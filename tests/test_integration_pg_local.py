@@ -507,3 +507,89 @@ def test_pk_cursor_loader_live(spark, fresh_table):
     # quiet poll exercises the table-max fallback branch (safe=None)
     assert src.poll_once(lambda env, idx: None, 3) == 0
     assert src.cursor == 9
+
+
+def _jobs_run(spark, group: str, fn):
+    """(fn(), Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_psql_poll_bookkeeping_runs_no_spark_job_live(spark, fresh_table):
+    """PsqlPollingLoader vouches for its batches, so poll_once runs no
+    Spark job of its own: an empty poll runs none, and neither does a
+    non-empty poll whose apply_fn runs no action. An apply that does
+    run an action shows up in the same count."""
+    from streamz_postgres_spark.sources.cdc import PollingCdcSource
+
+    dsn = fresh_table
+    _sql(dsn, "INSERT INTO t_cdc SELECT i, i, 'seed' FROM generate_series(1, 4) i")
+    src = PollingCdcSource(_loader(spark, dsn), key_cols=["id"])
+    src.start(lambda env, idx: None)
+    assert src.last_poll.rows == 4
+
+    assert _jobs_run(spark, "bk-empty", lambda: src.poll_once(
+        lambda env, idx: None, 1)) == (0, 0)
+
+    _sql(dsn, "INSERT INTO t_cdc SELECT i, i, 'new' FROM generate_series(5, 7) i")
+    c0 = src.cursor
+    assert _jobs_run(spark, "bk-rows", lambda: src.poll_once(
+        lambda env, idx: None, 2)) == (3, 0)
+    assert src.cursor > c0
+
+    _sql(dsn, "UPDATE t_cdc SET note = 'upd' WHERE id = 1")
+    counted = []
+    n, jobs = _jobs_run(spark, "bk-action", lambda: src.poll_once(
+        lambda env, idx: counted.append(env.count()), 3))
+    assert (n, counted) == (1, [1]) and jobs >= 1
+
+
+def test_batch_stats_match_spark_read_live(spark, fresh_table):
+    """The loader's stats equal frame.count() and max(__cursor) of the
+    frame Spark reads from the same scratch CSV, on rows that trip a
+    naive CSV reader: \\n and \\r\\n inside quoted values, doubled
+    quotes, '' next to NULL, a multi-line value longer than pyarrow's
+    default parse block, and a header-only batch. close() forgets
+    the stats."""
+    from pyspark.sql import functions as F
+
+    from streamz_postgres_spark.sources.cdc import PsqlPollingLoader
+
+    dsn = fresh_table
+    _sql(
+        dsn,
+        "INSERT INTO t_cdc VALUES"
+        " (1, 1, E'one\\ntwo'), (2, 2, E'crlf\\r\\nline'),"
+        " (3, 3, 'say \"hi\" \"\"twice\"\"'), (4, 4, ''), (5, NULL, NULL),"
+        " (6, 6, '\"'), (7, 7, repeat(E'line, \"q\"\\r\\n', 200000)),"
+        " (8, 8, 'after the long one')",
+    )
+    ld = PsqlPollingLoader(
+        spark=spark, dsn=dsn, table="t_cdc", schema=_SCHEMA, cursor_expr="id"
+    )
+
+    def spark_stats(frame):
+        row = frame.agg(F.count(F.lit(1)), F.max("__cursor")).first()
+        return row[0], int(row[1] or 0)
+
+    snap = ld.snapshot()
+    assert ld.batch_stats(snap) == spark_stats(snap) == (8, 8)
+    assert snap.filter("note = ''").count() == 1
+    assert snap.filter("note IS NULL").count() == 1
+    assert snap.filter("id = 7").first().note.count("\r\n") == 200000
+
+    inc = ld.incremental(2)
+    assert ld.batch_stats(inc) == spark_stats(inc) == (6, 8)
+    empty = ld.incremental(8)
+    assert ld.batch_stats(empty) == spark_stats(empty) == (0, 0)
+
+    # only frames the loader handed out, and only until close()
+    assert ld.batch_stats(snap.filter("id > 1")) is None
+    ld.close()
+    assert ld.batch_stats(snap) is None and ld.batch_stats(empty) is None
