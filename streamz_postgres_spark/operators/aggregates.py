@@ -237,9 +237,10 @@ def _with_standard_grand_total(
     branches share ONE input scan: plain persist() does NOT work
     here — DeduplicateRelations re-aliases the second self-union
     branch during analysis and the re-aliased subtree misses the
-    CacheManager's canonical-plan lookup (verified in the PLANS.md
-    audit: a full duplicate scan+Expand+agg subtree, doubling the
-    read at 100 TB) — while the checkpoint pins one shared RDD that
+    CacheManager's canonical-plan lookup (its plan carried a full
+    duplicate scan+Expand+agg subtree, doubling the read at 100 TB;
+    the tests/plan_budget.json entries of the four callers cap the
+    scans) — while the checkpoint pins one shared RDD that
     both branches read. ``slot`` is the caller's registered key —
     the standard scoped lifecycle (next invocation releases this
     one's blocks).
@@ -267,13 +268,13 @@ def _with_standard_grand_total(
     out = body.unionByName(total)
     # an underscore-prefixed gid marks a helper-internal column the
     # caller added only for this fix-up (q_cube/q_grouping_sets);
-    # drop it HERE so the _plan_audit_inner attribute below survives
+    # drop it HERE so the _plan_inner attribute below survives
     # (a caller-side .drop() would return a fresh DataFrame without it)
     if gid_col.startswith("_"):
         out = out.drop(gid_col)
     # keep the scan/pushdown evidence visible to the plan audit (the
     # checkpoint's ExistingRDD hides it; see explain_summary)
-    out._plan_audit_inner = (pre_checkpoint,)
+    out._plan_inner = (pre_checkpoint,)
     return out
 
 

@@ -1604,8 +1604,8 @@ def _winnow_pairs(
     # construction — its buffer is bounded at cap elements. The
     # groupBy(gram) reuses the window's hashpartitioning(gram)
     # exchange (guide §2.4), so the plan still has exactly one
-    # exchange below the pair explode (verified in
-    # plans/r14/q_dedup_substring_after_hazard.txt).
+    # exchange below the pair explode (the q_dedup_substring entry of
+    # tests/plan_budget.json caps its exchanges).
     #
     # df semantics unchanged: count(*) over the partition counts
     # NULL-doc_id rows toward the cap (matching the oracle's

@@ -179,11 +179,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r14 (guide §3.3/§2.4 — truncate duplicated subtrees): the
     # normalized edge list is consumed once per unrolled iteration,
-    # and each consumer is a separate broadcast subtree — the before
-    # plan (plans/r14/q_pagerank_before.txt) scans lineitem SIX times
-    # and carries 45 exchanges because the 4-way join + two groupBys
-    # behind `en` are re-planned per iteration (broadcast builds do
-    # not share in-flight cache fills, the r13 winnow lesson). `en`
+    # and each consumer is a separate broadcast subtree — the
+    # pre-checkpoint plan scanned lineitem SIX times and carried 45
+    # exchanges because the 4-way join + two groupBys behind `en` are
+    # re-planned per iteration (broadcast builds do not share
+    # in-flight cache fills, the r13 winnow lesson); the q_pagerank
+    # entry of tests/plan_budget.json caps the current plan. `en`
     # is O(nations^2) <= 625 rows: one eager localCheckpoint
     # materializes the edge build exactly once and every iteration
     # joins the tiny checkpointed blocks. track_scoped's unpersist on

@@ -1069,9 +1069,10 @@ def q_retrieval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §3.3 — truncate duplicated subtrees): seeds feeds
     # TWO consumers (the centroid build and the is_seed flag), both
     # broadcast subtrees, so the entire BM25 pipeline behind
-    # q_retrieval_topk was planned and executed twice — the before
-    # plan (plans/r14/q_retrieval_prf_before.txt) scans documents
-    # EIGHT times. seeds is Q x 5 rows: one eager localCheckpoint
+    # q_retrieval_topk was planned and executed twice — the
+    # pre-checkpoint plan scanned documents EIGHT times (the
+    # q_retrieval_prf entry of tests/plan_budget.json caps the current
+    # plan). seeds is Q x 5 rows: one eager localCheckpoint
     # runs BM25 once; the blocks are freed by ContextCleaner after
     # the next invocation drops this reference (track_scoped's
     # unpersist alone does not free localCheckpoint blocks).

@@ -1329,9 +1329,10 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds THREE consumers (median, MAD fence, final read-out), two
     # of them broadcast subtrees, and each evaluation re-ran the
     # events scan + exact-decimal bar aggregate twice (bars + its
-    # shifted self-join side) — the before plan
-    # (plans/r14/q_anomaly_seasonal_before.txt) scans events SIX
-    # times. bars is O(types x bars) (hundreds of rows): one eager
+    # shifted self-join side) — the pre-checkpoint plan scanned
+    # events SIX times (the q_anomaly_seasonal entry of
+    # tests/plan_budget.json caps the current plan). bars is
+    # O(types x bars) (hundreds of rows): one eager
     # localCheckpoint materializes the only input-sized stage once;
     # the residual joins all run over the tiny checkpointed blocks,
     # freed by ContextCleaner after the next invocation drops this

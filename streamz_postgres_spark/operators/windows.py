@@ -1257,8 +1257,9 @@ def q_rfm_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _rfm_customer_metrics(spark, sf_dir)
     # the fold feeds the boundary pass AND the scorer — persist it so
     # orders/customer are scanned ONCE, and melt via a single explode
-    # (a 3-way union of selects re-runs the fold per branch: PLANS.md
-    # showed 3 orders scans before this form)
+    # (a 3-way union of selects re-runs the fold per branch: its plan
+    # scanned orders 3 times; the q_rfm_boundaries entry of
+    # tests/plan_budget.json caps the scans of this form)
     persist_scoped("q_rfm_boundaries", cust)
     melt = cust.select(
         "seg",

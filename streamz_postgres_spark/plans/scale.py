@@ -15,8 +15,8 @@ Policies enforced across the library (see tests/test_scale_guards):
 This module adds the two tools that need code:
 - ``salted_join``: explicit skew mitigation for when AQE's runtime
   splitting isn't enough (e.g. one key is 30%% of a 100 TB fact);
-- ``explain_summary``: compact plan audit used by the bench and the
-  guard tests.
+- ``explain_summary``: compact plan audit used by the guard tests,
+  the plan budget (tests/plan_budget.json) and scripts/measure.py.
 """
 
 from __future__ import annotations
@@ -74,18 +74,31 @@ def salted_join(
     return out.drop("__salt")
 
 
+#: plan counters: summary key -> formatted-explain detail-header
+#: pattern. Formatted explain prints every node twice (tree + detail);
+#: matching only the "(4) Exchange" detail headers counts each node
+#: once. ReusedExchange / BroadcastExchange headers do not match
+#: "Exchange\b", so a shared shuffle counts once.
+PLAN_COUNTERS = {
+    "exchanges": r"Exchange\b",
+    "scans": r"Scan (?!ExistingRDD\b)",
+    "joins": r"(?:BroadcastHash|SortMerge|ShuffledHash|BroadcastNestedLoop)Join\b"
+    r"|CartesianProduct\b",
+    "nested_loop_joins": r"BroadcastNestedLoopJoin\b",
+    "python_nodes": r"\w*(?:Python|Pandas|InArrow)\w*",
+    "checkpoint_scans": r"Scan ExistingRDD\b",
+}
+
+
 def explain_summary(df: DataFrame) -> dict:
-    """Compact audit of a physical plan: pushdown, pruning, join
-    strategies, exchanges — the things to check before a query is
-    allowed near a cluster."""
+    """Compact audit of a physical plan: node counts (the
+    ``PLAN_COUNTERS`` keys, which tests/plan_budget.json caps per batch
+    key), plus the two flags no plan may raise: a cartesian product
+    and a window over a single partition."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     s = buf.getvalue()
-    # formatted explain prints every node twice (tree + detail); count
-    # only detail headers "(4) Exchange" so each shuffle counts once,
-    # and ReusedExchange ("(n) ReusedExchange") doesn't match
-    n_exchanges = len(re.findall(r"^\(\d+\) Exchange\b", s, re.M))
     # a window is single-partition iff ITS child exchange is
     # SinglePartition — "SinglePartition" anywhere in the plan also
     # fires on harmless global agg/limit stages
@@ -107,30 +120,20 @@ def explain_summary(df: DataFrame) -> dict:
                 sp_window = sp_window or cid in sp_ids
                 break
     out = {
-        "pushed_filters": re.findall(r"PushedFilters: \[[^\]]*\]", s),
-        "read_schemas": re.findall(r"ReadSchema: [^\n]*", s),
-        "joins": sorted(set(re.findall(
-            r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
-            r"|BroadcastNestedLoopJoin|CartesianProduct)", s))),
-        "n_exchanges": n_exchanges,
-        "has_cartesian": "CartesianProduct" in s,
-        "single_partition_windows": sp_window,
+        key: len(re.findall(rf"^\(\d+\) (?:{pat})", s, re.M))
+        for key, pat in PLAN_COUNTERS.items()
     }
+    out["has_cartesian"] = "CartesianProduct" in s
+    out["single_partition_windows"] = sp_window
     # A localCheckpoint truncates lineage, so the audited plan stops
     # at ExistingRDD and the scan/join evidence below it would go
     # dark. Operators that checkpoint an intermediate stash the
-    # pre-checkpoint frame(s) in ``_plan_audit_inner`` — merge their
-    # summaries so pushdown/pruning/shuffle accounting still covers
-    # the WHOLE computation.
-    for inner in getattr(df, "_plan_audit_inner", ()) or ():
-        isum = explain_summary(inner)
-        out["pushed_filters"] += isum["pushed_filters"]
-        out["read_schemas"] += isum["read_schemas"]
-        out["joins"] = sorted(set(out["joins"]) | set(isum["joins"]))
-        out["n_exchanges"] += isum["n_exchanges"]
-        out["has_cartesian"] = out["has_cartesian"] or isum["has_cartesian"]
-        out["single_partition_windows"] = (
-            out["single_partition_windows"]
-            or isum["single_partition_windows"]
-        )
+    # pre-checkpoint frame(s) in ``_plan_inner`` — add their counts
+    # and flags so the summary still covers the WHOLE computation.
+    for inner in getattr(df, "_plan_inner", ()) or ():
+        for key, value in explain_summary(inner).items():
+            if isinstance(value, bool):
+                out[key] = out[key] or value
+            else:
+                out[key] += value
     return out

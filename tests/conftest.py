@@ -9,14 +9,52 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
 
+#: per batch key, ceilings on explain_summary's plan counters at SF_DIR
+#: (rewrite with ``python scripts/measure.py budget``)
+PLAN_BUDGET = Path(__file__).resolve().parent / "plan_budget.json"
 
-@pytest.fixture(scope="session")
-def spark():
+
+def spark_session():
+    """The test session. ``scripts/measure.py budget`` builds its plans
+    in this same session, so the budget and its test cannot drift."""
     from streamz_postgres_spark.session import get_spark
 
     s = get_spark("pytest", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
-    yield s
+    return s
+
+
+def batch_keys() -> list[str]:
+    """Every registered key whose DataFrame is a plan to audit.
+    Streaming and CDC keys are left out: building their DataFrame runs
+    the bounded stream, and their plans materialize through a sink."""
+    from streamz_postgres_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    return [k for k in sorted(REGISTRY) if not k.startswith(("q_stream", "q_cdc"))]
+
+
+def batch_plan_summaries(spark):
+    """Yield (key, explain_summary) for every batch key, each plan
+    built once, in key order, starting from an empty cache. A plan
+    depends on what is cached: once q_dedup_minhash has run, its
+    materialized signature cache (the same plan as
+    q_dedup_incremental's) gives q_dedup_incremental 3 exchanges
+    instead of 2. Releasing every pinned frame first makes the counts
+    the same in a fresh session and after any other test."""
+    from streamz_postgres_spark.lifecycle import release_all
+    from streamz_postgres_spark.plans.scale import explain_summary
+    from streamz_postgres_spark.registry import REGISTRY
+
+    release_all()
+    spark.catalog.clearCache()
+    for key in batch_keys():
+        yield key, explain_summary(REGISTRY[key].spark_fn(spark, SF_DIR))
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield spark_session()
 
 
 @pytest.fixture(scope="session")

@@ -25,7 +25,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from streamz_postgres_spark.sqlext import _parse_pattern
+from streamz_postgres_spark.sqlext import _max_match_len, _parse_pattern
 
 _SYMS = "VCPE"
 
@@ -204,6 +204,44 @@ def test_overlap_enumeration_matches_duckdb_probe(pat, s):
         [s, s, f"^({canonical})"],
     ).fetchone()[0]
     assert [(t["sp"], t["mlen"]) for t in got] == want
+
+
+def _bounded(pat: str) -> str:
+    """``pat`` with an upper bound on every unbounded quantifier."""
+    pat = re.sub(r"\{(\d+),\}", lambda m: f"{{{m[1]},{int(m[1]) + 1}}}", pat)
+    return pat.replace("*", "{0,2}").replace("+", "{1,2}")
+
+
+@given(pat=_pattern(), s=st.text(_SYMS + "-", max_size=30), data=st.data())
+@settings(max_examples=300, deadline=None)
+def test_max_match_len_bounds_every_anchored_probe(pat, s, data):
+    """_probe_hay truncates each per-position probe haystack to
+    _max_match_len characters. That is sound only if the bound really
+    bounds: no match of the canonical regex is longer than it, and
+    matching on the truncated suffix gives the same match as on the
+    full suffix at every position. Unbounded quantifiers (``*``,
+    ``+``, ``{n,}``) must yield None, which keeps the full suffix.
+    Most generated patterns are unbounded, so the bound is checked on
+    the pattern with its quantifiers capped; and random symbol
+    strings rarely hold a long match, so the haystack starts with a
+    string the capped regex matches in full."""
+    try:
+        regex = _parse_pattern(pat)
+        capped = _parse_pattern(_bounded(pat))
+    except ValueError:
+        return  # refused patterns never reach the lowering
+    unbounded = re.search(r"[*+]|\{\d+,\}", regex) is not None
+    assert (_max_match_len(regex) is None) == unbounded, regex
+    n = _max_match_len(capped)
+    assert n is not None, capped
+    word = data.draw(st.from_regex(f"(?:{capped})", fullmatch=True))
+    assert len(word) <= n, (capped, word)
+    hay = word + s
+    anchored = re.compile(f"^({capped})")
+    for p in range(len(hay) + 1):
+        full = anchored.match(hay[p:])
+        cut = anchored.match(hay[p : p + n])
+        assert (full and full.group(1)) == (cut and cut.group(1)), (capped, hay, p)
 
 
 @given(
