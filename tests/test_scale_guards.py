@@ -10,6 +10,8 @@ import contextlib
 import io
 import json
 
+import pytest
+
 from streamz_postgres_spark.registry import REGISTRY, _load_all
 from tests.conftest import PLAN_BUDGET, SF_DIR, batch_keys, batch_plan_summaries
 
@@ -326,20 +328,34 @@ def test_kll_partials_run_after_resplit(spark):
     assert "RoundRobinPartitioning" in plan or "ROUND_ROBIN" in plan, plan
 
 
-def test_plan_budget_every_batch_key(spark):
-    """Registry-wide plan check, one plan build per batch key
-    (streaming and CDC keys are left out: their plans materialize
-    through a sink). Every key must:
+@pytest.fixture(scope="module")
+def batch_plans(spark):
+    """{key: explain_summary} for every batch key, each plan built
+    once for the registry-wide tests below (streaming and CDC keys are
+    left out: their plans materialize through a sink)."""
+    return dict(batch_plan_summaries(spark))
 
-    - plan no unbounded cartesian product (broadcast nested loops over
-      literal/1-row sides are fine);
-    - plan no window over an empty PARTITION BY (the silent
-      serialize-everything-onto-one-task class with_seq exists to
-      avoid);
-    - stay at or below its tests/plan_budget.json ceiling on every
-      explain_summary counter (exchanges, scans, joins, nested-loop
-      joins, Python nodes, checkpoint scans), so a plan regression
-      fails here instead of in a human diff of plan dumps.
+
+def test_no_cartesian_products_anywhere(batch_plans):
+    """No batch key may plan an unbounded cartesian product
+    (broadcast nested loops over literal/1-row sides are fine)."""
+    offenders = [k for k, s in batch_plans.items() if s["has_cartesian"]]
+    assert offenders == [], offenders
+
+
+def test_no_single_partition_windows_anywhere(batch_plans):
+    """No batch key may plan a window over an empty PARTITION BY (the
+    silent serialize-everything-onto-one-task class with_seq exists to
+    avoid)."""
+    offenders = [k for k, s in batch_plans.items() if s["single_partition_windows"]]
+    assert offenders == [], offenders
+
+
+def test_plan_budget_every_batch_key(batch_plans):
+    """Every batch key must stay at or below its tests/plan_budget.json
+    ceiling on every explain_summary counter (exchanges, scans, joins,
+    nested-loop joins, Python nodes, checkpoint scans), so a plan
+    regression fails here instead of in a human diff of plan dumps.
 
     The budget must list exactly the registered batch keys. After a
     plan win, lower the ceilings with ``python scripts/measure.py
@@ -350,15 +366,10 @@ def test_plan_budget_every_batch_key(spark):
     keys = batch_keys()
     assert sorted(set(keys) - set(budget)) == [], "batch keys with no budget"
     assert sorted(set(budget) - set(keys)) == [], "budget keys not registered"
-    failures = []
-    for key, s in batch_plan_summaries(spark):
-        if s["has_cartesian"]:
-            failures.append(f"{key}: cartesian product")
-        if s["single_partition_windows"]:
-            failures.append(f"{key}: single-partition window")
-        failures += [
-            f"{key}: {c} {s[c]} > budget {budget[key][c]}"
-            for c in PLAN_COUNTERS
-            if s[c] > budget[key][c]
-        ]
+    failures = [
+        f"{key}: {c} {s[c]} > budget {budget[key][c]}"
+        for key, s in batch_plans.items()
+        for c in PLAN_COUNTERS
+        if s[c] > budget[key][c]
+    ]
     assert failures == [], "\n".join(failures)
