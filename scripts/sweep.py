@@ -1,101 +1,66 @@
-"""Hostile-fixture parity sweep: re-run the full Spark-vs-DuckDB
-oracle gate on a MUTATED copy of sf0.001 that exercises the edge
-classes the shipped fixtures never contain:
+"""Oracle sweep: the Spark-vs-DuckDB gate (``oracle.check_query``: row
+count, schema and order-insensitive value multiset) run over every
+registered key, or the named ones, on one robustness AXIS.
 
-- ``events.value`` NULLs (SQL aggregates skip NULLs; HOF folds and
-  window frames must agree with the oracle on them),
-- ``events.props`` NULLs (JSON extraction on a NULL document),
-- (user_id, ts) TIES in events (every tie-break that was "free"
-  because the fixture had unique timestamps is now load-bearing),
-- empty / whitespace-only / NULL ``documents.text`` rows,
-- (v2) NEGATIVE, ZERO, magnitude-scaled (x1e3) and repeating-decimal
-  (/3) event values — sign assumptions, x/0, micro6-quantization and
-  decimal-rounding parity all become load-bearing. x1e3 and not more:
-  variance-class stats fold value^2 through the micro6 rule, whose
-  documented per-row bound is |x| < 9.2e12 (numeric.py) — (327.53e3)^2
-  ~ 1.1e11 stays inside the engine's contract, (x1e5)^2 would not
-  (verified: welch/ols/autocorr diverge there, by contract),
-- (v2) PRE-EPOCH timestamps (one user-class shifted -80 years) —
-  any div/floor epoch arithmetic that truncates toward zero instead
-  of flooring diverges (the class the r12 SAMPLE BY fix was in),
-- (v2) unicode documents (CJK + emoji + combining accent + CRLF/tab)
-  and 8x-repeated long documents — tokenizer/length/regex parity,
-- (v2) ZERO VECTORS and NULL rows in ``embeddings.embedding`` —
-  cosine 0/0, NULL-array HOFs, and pandas-UDF None handling,
-- (v3) the TPC-H half, passthrough until now: ORPHAN foreign keys
-  (customer→nation, supplier→nation, orders→customer) so inner
-  joins drop and outer joins emit NULLs; NULL GROUP KEYS
-  (l_returnflag, o_orderpriority, c_mktsegment) — both engines
-  group NULLs together but their default ORDER BY NULL placement
-  differs, so any unpinned sort over a group key is now
-  load-bearing; negative / zero / repeating-decimal monies and
-  quantities; unicode c_name/p_name (code-point substring/LIKE
-  parity); duplicated (o_custkey, o_orderdate) rows so window and
-  top-k tie-breaks over orders matter; pre-epoch
-  o_orderdate/l_shipdate (batch profile only),
-- (v4) the JSON surface of ``events.props`` (only ever NULL-mutated
-  before): MALFORMED documents ('{"broken'), empty objects, nested
-  arrays where a scalar is expected, STRING-TYPED numbers
-  ('{"k": "42"}' — schema-declared parsers yield NULL where
-  path-extract-then-cast coerces), and wrong-case keys. DuckDB's
-  json functions HARD-ERROR on invalid JSON where Spark's return
-  NULL, so every oracle json call needs a json_valid guard and
-  every Spark variant parse needs try_parse_json,
-- (v5) the last unmutated columns: NULL / empty / unicode
-  ``events.event_type`` (the symbol column of every funnel /
-  session / pattern key), NULL ``events.user_id`` (THE group,
-  window-partition, join and streaming-state key — a NULL key must
-  group/window/state consistently, and equi-joins must drop it
-  identically), NULL ``documents.lang``/``source`` (group keys of
-  the corpus-mix family), NULL ``embeddings.label``, and the dims:
-  NULL ``n_name``, orphan ``n_regionkey``,
-- (v6) WINDOW-BOUNDARY-ALIGNED timestamps: five constructed users
-  (ids 9000000+) whose events sit exactly ON the half-open edges
-  every window key reasons about — inter-event gaps of exactly
-  30:00.000000 (the session threshold: a new session under the
-  ``>=`` rule on BOTH engines) and 29:59.999999 (one session),
-  events at exact hour boundaries H:00:00.000000 (tumbling
-  inclusion is floor/half-open), the half-hour slide edge H:30:00,
-  and duplicate timestamps AT a boundary next to a boundary-1us
-  row. The edge rules were reasoned in docstrings; these rows make
-  them load-bearing.
+Usage:
+  python scripts/sweep.py AXIS [KEY...]
+  python scripts/sweep.py -h          # the axes and why each exists
 
-- (v7) VERBATIM full-row duplicates in events (%73) and documents
-  (%127) — deliberate PK violations whose copies are byte-identical,
-  so every tie-break/top-k/window choice between them is value-
-  neutral and the gate stays parity-safe; what they CATCH is any
-  implementation-side distinct/dropDuplicates the oracle doesn't
-  mirror (spurious dedup silently loses multiset rows). Plus
-  FAR-FUTURE timestamps (+80 years, user_id%11==5, batch profile
-  only like the pre-epoch class): the positive-direction epoch
-  range. +80 and not more: the trend/OLS family's dyadic pre-scales
-  are sized for ~decades-wide spans (documented bound above
-  _TREND_EPOCH) — a +970y probe overflowed sum(x^2)'s lossless
-  decimal->double window by contract, the same reason v2 scales
-  values by 1e3 and not 1e5.
+An axis is one row of ``AXES``: the fixture batch keys run on, the
+fixture live keys run on (None excludes live keys) and the session
+conf. Live keys are the streaming and CDC keys (``registry.is_live``);
+every other key is a batch key, the same set tests/plan_budget.json
+covers. The source fixture is $SPARK_GRAFT_SF_DIR, else the test scale
+factor (tests/conftest.SF_DIR). Every derived fixture is a DuckDB
+rewrite of it with no RNG, so reruns are identical; it lives in a temp
+dir that is removed when the sweep ends.
 
-The round-11 advisor found exactly one bug of this class (per-symbol
-SUM lowered to a left fold that a single NULL poisons — latent only
-because events has no NULLs). This sweep makes the whole class
-mechanically discoverable instead of advisor-luck. NaN is EXCLUDED
-by design: the exact-decimal sum discipline casts doubles to
-decimal(38,6) on both engines, and both hard-error casting NaN — a
-NaN fixture would measure error-message parity, not semantics.
-
-Usage: python scripts/hostile_sweep.py [--include-streaming] [keys...]
-Exit code 0 iff every swept key passes its gate on the hostile data.
+Exit code 0 iff every swept key passes (rows-only keys pass if they
+run); 2 for an unknown axis or key, before any fixture or session is
+built.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import shutil
 import sys
 import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import partial
 from pathlib import Path
 
 import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from streamz_postgres_spark.oracle import check_query, duckdb_connection  # noqa: E402
+from streamz_postgres_spark.registry import REGISTRY, _load_all, is_live  # noqa: E402
+from streamz_postgres_spark.session import get_spark  # noqa: E402
+from tests.conftest import SF_DIR  # noqa: E402
+
+#: the hostile session zone of the ``tz`` axis (and of
+#: tests/test_tz_independence.py): +05:45, off every hour and
+#: half-hour grid. Zones used so far: Chatham, St_Johns, Santiago,
+#: Lord_Howe, Marquesas, Tehran, Caracas, Kathmandu, Kabul, Eucla.
+TZ = "Asia/Kathmandu"
+
+#: table -> natural id: the md5 row-scramble key of ``order`` and the
+#: pick of the deterministic ``single`` row
+_IDS = {
+    "region": "r_regionkey",
+    "nation": "n_nationkey",
+    "supplier": "s_suppkey",
+    "customer": "c_custkey",
+    "part": "p_partkey",
+    "orders": "o_orderkey",
+    "lineitem": "l_orderkey * 8 + l_linenumber",
+    "events": "event_id",
+    "documents": "doc_id",
+    "embeddings": "vec_id",
+}
 
 
 def build_hostile_dir(src: str, timeshift: bool = True) -> str:
@@ -426,40 +391,268 @@ def build_hostile_dir(src: str, timeshift: bool = True) -> str:
     return out
 
 
+def build_shuffled_dir(src: str) -> str:
+    """Copy all tables from ``src`` into a temp dir with rows written
+    in md5-scrambled order — identical content, hostile layout."""
+    out = tempfile.mkdtemp(prefix="shuffled_sf_")
+    con = duckdb.connect()
+    for t, key in _IDS.items():
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{src}/{t}.parquet') "
+            f"ORDER BY md5(CAST({key} AS VARCHAR))) "
+            f"TO '{out}/{t}.parquet' (FORMAT PARQUET)"
+        )
+    con.close()
+    return out
+
+
+def build_degenerate_dir(src: str, profile: str) -> str:
+    """Copy all tables from ``src`` into a temp dir at degenerate
+    cardinality: ``empty`` = 0 rows (schema kept), ``single`` = the
+    lowest-id row per table (deterministic, no RNG)."""
+    out = tempfile.mkdtemp(prefix=f"degenerate_{profile}_")
+    con = duckdb.connect()
+    for t, key in _IDS.items():
+        if profile == "empty":
+            sel = f"SELECT * FROM read_parquet('{src}/{t}.parquet') LIMIT 0"
+        else:
+            sel = (
+                f"SELECT * FROM read_parquet('{src}/{t}.parquet') "
+                f"ORDER BY {key} LIMIT 1"
+            )
+        con.execute(f"COPY ({sel}) TO '{out}/{t}.parquet' (FORMAT PARQUET)")
+    con.close()
+    return out
+
+
+def _source(src: str) -> str:
+    return src
+
+
+@dataclass(frozen=True)
+class Axis:
+    """One row of the axis table."""
+
+    batch: Callable[[str], str]  # source dir -> fixture for batch keys
+    live: Callable[[str], str] | None  # ... for live keys; None: excluded
+    conf: dict[str, str]  # session conf on top of session.get_spark's
+    doc: str
+
+
+_single = partial(build_degenerate_dir, profile="single")
+
+AXES: dict[str, Axis] = {
+    "gate": Axis(_source, _source, {}, """\
+The driver's correctness gate, replicated: every key on the source
+fixture in an engine-default session. Exact double equality is
+expected (the decimal-sum trick), so a VALUES mismatch is a real bug,
+not float noise."""),
+    "hostile": Axis(build_hostile_dir, partial(build_hostile_dir, timeshift=False), {}, """\
+The gate on a MUTATED copy of the source holding the edge classes the
+shipped fixtures never contain:
+
+- events.value NULLs (SQL aggregates skip NULLs; HOF folds and window
+  frames must agree with the oracle on them), events.props NULLs
+  (JSON extraction on a NULL document), (user_id, ts) TIES (every
+  tie-break that was "free" because the fixture had unique
+  timestamps is now load-bearing), and empty / whitespace-only /
+  NULL documents.text rows,
+- (v2) NEGATIVE, ZERO, magnitude-scaled (x1e3) and repeating-decimal
+  (/3) event values: sign assumptions, x/0, micro6 quantization and
+  decimal-rounding parity become load-bearing. x1e3 and not more:
+  variance-class stats fold value^2 through the micro6 rule, whose
+  documented per-row bound is |x| < 9.2e12 (numeric.py); (327.53e3)^2
+  ~ 1.1e11 stays inside the engine's contract, (x1e5)^2 would not
+  (welch/ols/autocorr diverge there, by contract),
+- (v2) PRE-EPOCH timestamps (one user class shifted -80 years): any
+  div/floor epoch arithmetic that truncates toward zero instead of
+  flooring diverges (the class the r12 SAMPLE BY fix was in),
+- (v2) unicode documents (CJK + emoji + combining accent + CRLF/tab)
+  and 8x-repeated long documents (tokenizer/length/regex parity), and
+  ZERO VECTORS and NULL rows in embeddings.embedding (cosine 0/0,
+  NULL-array HOFs, pandas-UDF None handling),
+- (v3) the TPC-H half: ORPHAN foreign keys (customer->nation,
+  supplier->nation, orders->customer) so inner joins drop and outer
+  joins emit NULLs; NULL GROUP KEYS (l_returnflag, o_orderpriority,
+  c_mktsegment): both engines group NULLs together but their default
+  ORDER BY NULL placement differs, so any unpinned sort over a group
+  key is load-bearing; negative / zero / repeating-decimal monies and
+  quantities; unicode c_name/p_name (code-point substring/LIKE
+  parity); duplicated (o_custkey, o_orderdate) rows so window and
+  top-k tie-breaks over orders matter; pre-epoch
+  o_orderdate/l_shipdate,
+- (v4) the JSON surface of events.props: MALFORMED documents
+  ('{"broken'), empty objects, nested arrays where a scalar is
+  expected, STRING-TYPED numbers ('{"k": "42"}': schema-declared
+  parsers yield NULL where path-extract-then-cast coerces) and
+  wrong-case keys. DuckDB's json functions HARD-ERROR on invalid JSON
+  where Spark's return NULL, so every oracle json call needs a
+  json_valid guard and every Spark variant parse try_parse_json,
+- (v5) NULL / empty / unicode events.event_type (the symbol column of
+  every funnel / session / pattern key), NULL events.user_id (THE
+  group, window-partition, join and streaming-state key: a NULL key
+  must group/window/state consistently, and equi-joins must drop it
+  identically), NULL documents.lang/source, NULL embeddings.label,
+  NULL n_name and orphan n_regionkey,
+- (v6) WINDOW-BOUNDARY-ALIGNED timestamps: five constructed users
+  (ids 9000000+) whose events sit exactly ON the half-open edges
+  every window key reasons about: gaps of exactly 30:00.000000 (the
+  session threshold) and 29:59.999999, events at exact hour
+  boundaries (tumbling inclusion is floor/half-open), the half-hour
+  slide edge, and duplicate timestamps AT a boundary next to a
+  boundary-1us row,
+- (v7) VERBATIM full-row duplicates in events (%73) and documents
+  (%127): byte-identical copies keep every tie-break value-neutral,
+  so what they catch is an implementation-side distinct the oracle
+  does not mirror. Plus FAR-FUTURE timestamps (+80 years): +80 and
+  not more, because the trend/OLS family's dyadic pre-scales are
+  sized for decades-wide spans (a +970y probe overflowed sum(x^2)'s
+  lossless decimal->double window by contract, the same reason v2
+  scales values by 1e3 and not 1e5).
+
+The round-11 advisor found exactly one bug of this class (per-symbol
+SUM lowered to a left fold that a single NULL poisons, latent only
+because events had no NULLs); this axis makes the class mechanically
+discoverable. NaN is EXCLUDED by design: the exact-decimal sum
+discipline casts doubles to decimal(38,6) on both engines, and both
+hard-error casting NaN, so a NaN fixture would measure error-message
+parity, not semantics. Live keys run on the fixture without the
+pre-epoch and far-future shifts: Spark's event-time watermark starts
+at the 1970 epoch, so every watermarked aggregation structurally
+drops pre-epoch rows (see build_hostile_dir)."""),
+    "empty": Axis(partial(build_degenerate_dir, profile="empty"), None, {}, """\
+The gate on EMPTY copies of every table (0 rows, exact parquet schema
+kept, so a plan that derives its schema from data fails here first).
+At 100 TB an empty input is not an edge case: a filter that matches
+nothing, a pruned scan, a day with no events. Every key must return
+its degenerate answer (zero rows, or one all-NULL/zero aggregate row)
+rather than crash. Classes it exposes: Spark's Expand emits NO grand-total
+row from empty input (SQL:2016 says one; fixed by finest-set
+re-aggregation in the rollup/cube keys), ANSI element_at on an empty
+array, fold seeds read from a first row that does not exist,
+max()/arg_max over nothing feeding arithmetic, 0/0 ratios,
+percentile/histogram bins over an empty domain, k > n centroid
+iteration, driver-side .first()/broadcast of an empty aggregate, and
+empty partitioned writes that defeat read-side schema inference (pass
+the writer's schema). The other axes keep the fixture cardinality;
+this one removes it. Live keys are excluded: an empty feed has no
+batches to replay."""),
+    "single": Axis(_single, _single, {}, """\
+The gate on SINGLETON copies: the lowest-id row of every table,
+deterministic. Referential integrity is not patched: at one row per
+table most joins go empty, which is the point, since join-dependent
+aggregates must survive empty join output too. Classes: ANSI x/0
+raises where DuckDB's is NULL (F.try_divide at any denominator that
+can be exactly zero, such as n-1 at n=1); DuckDB hard-errors on
+sqrt(negative) where quantization dips a variance term below 0
+(GREATEST(term, 0.0) on both sides). Live keys run on it too: a
+one-row feed replays and exercises every stateful fold's
+first-row/seed path, where a ZeroDivisionError inside a pandas state
+fold is a crash, not a NULL."""),
+    "order": Axis(build_shuffled_dir, None, {}, """\
+The gate on a VALUE-IDENTICAL copy whose physical row order is
+scrambled (ORDER BY md5 of the natural id). The determinism contract
+says a 1000-executor run returns the values local[32] returned, which
+requires every batch key to be independent of the order rows come off
+the scan. The plain gate cannot see an order dependence: DuckDB is
+order-independent by SQL semantics, and the fixtures are WRITTEN in
+id order, so positional sampling, a first()/head() without a sort,
+arrival-order tie-breaks or pandas index alignment in a fold pass
+until a real cluster reorders the scan (the v5 find: fold Series
+realigned to the pre-sort order). Live keys are excluded: the replay
+harness's contract is an in-order feed (a CDC log, a compacted
+topic), so a scrambled file breaks the input contract rather than
+exposing a bug; the folds document their cross-batch ordering."""),
+    "layout": Axis(_source, None, {
+        "spark.sql.shuffle.partitions": "5",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.files.maxPartitionBytes": "65536",
+        "spark.sql.files.openCostInBytes": "0",
+    }, """\
+The gate under a HOSTILE EXECUTION LAYOUT, same fixture:
+
+- 5 shuffle partitions (the engine default is $SPARK_GRAFT_CPUS):
+  every hash-partitioned group/join/window co-locates a different key
+  mix per task, so a fold or pandas group function that leaks state
+  across the keys sharing its task changes answers,
+- AQE off: runtime coalescing collapses the tiny local shuffles back
+  to one partition and HIDES layout dependence,
+- 64k maxPartitionBytes and zero open cost: the one-file fixtures
+  split into many scan tasks whose rows are concatenated in
+  nondeterministic task order after an exchange, the local stand-in
+  for a 1000-executor scan.
+
+The gate and the order axis each execute one layout, so they cannot
+check the determinism contract across layouts. The v5 pandas
+index-alignment find and the transformWithStateInPandas NULL-key
+grouping divergence were this class: right at one partition count,
+wrong at another. Live keys are excluded: the replay harness pins its
+own micro-batch boundaries and state-store partitioning, and its
+results are checked against batch oracles that do run here."""),
+    "tz": Axis(_source, _source, {"spark.sql.session.timeZone": TZ}, """\
+The gate in a session whose zone is TZ. The external driver's
+session zone is unknown, and Spark's date_trunc/dayofweek family
+silently routes TimestampNTZ values through it (this caught a real
+cohort-week bug), so every key must value-match under a zone that is
+off every hour and half-hour boundary. Live keys run here too: the
+replay runner works in the same session."""),
+}
+
+
+def check_conf(spark, conf: dict[str, str]) -> None:
+    """Raise unless ``spark`` runs with every key of ``conf``: a session
+    reused by getOrCreate keeps its own conf."""
+    wrong = {k: spark.conf.get(k, None) for k, v in conf.items()
+             if spark.conf.get(k, None) != v}
+    if wrong:
+        raise RuntimeError(
+            f"axis conf not applied (session has {wrong}); "
+            "run the sweep in a fresh process"
+        )
+
+
+def swept_keys(axis: Axis, keys: list[str]) -> list[str]:
+    """The keys of ``keys`` that ``axis`` runs."""
+    return [k for k in keys if axis.live or not is_live(k)]
+
+
 def main() -> int:
-    from streamz_postgres_spark.oracle import check_query, duckdb_connection
-    from streamz_postgres_spark.registry import REGISTRY, _load_all
-    from streamz_postgres_spark.session import get_spark
-
+    ap = argparse.ArgumentParser(
+        description=__doc__.split("\n\n")[0],
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+        epilog="\n\n".join(f"{n}:\n{a.doc}" for n, a in AXES.items()),
+    )
+    ap.add_argument("axis", choices=AXES)
+    ap.add_argument("keys", nargs="*", metavar="KEY")
+    args = ap.parse_args()
     _load_all()
-    include_streaming = "--include-streaming" in sys.argv
-    only = [a for a in sys.argv[1:] if not a.startswith("--")]
-
-    src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    # streaming runs on the unshifted profile — see build_hostile_dir
-    # (the Spark watermark floor is the 1970 epoch)
-    hostile = build_hostile_dir(src, timeshift=not include_streaming)
-    print(f"hostile fixture at {hostile} (from {src})", flush=True)
-
-    spark = get_spark()
-    con = duckdb_connection(hostile)
-    fails = []
-    keys = only or sorted(REGISTRY)
-    for key in keys:
-        q = REGISTRY[key]
-        if not include_streaming and (
-            "streaming" in q.tags or "cdc" in q.tags
-        ):
-            continue
-        try:
-            ok, msg = check_query(spark, con, q, hostile)
-        except Exception as e:  # noqa: BLE001 — triage tool, keep going
-            ok, msg = False, f"ERR {type(e).__name__}: {e}"
-        status = "ok" if ok else "FAIL"
-        print(f"{status:4s} {key}: {msg[:300]}", flush=True)
-        if not ok:
-            fails.append((key, msg))
-    print(f"\n{len(fails)} failures / {len(keys)} keys swept")
+    unknown = [k for k in args.keys if k not in REGISTRY]
+    if unknown:
+        print(f"unknown keys: {unknown}", file=sys.stderr)
+        return 2
+    axis = AXES[args.axis]
+    keys = swept_keys(axis, args.keys or sorted(REGISTRY))
+    src = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    fixtures = {fn: fn(src) for fn in {axis.batch, axis.live} - {None}}
+    try:
+        spark = get_spark("sweep", extra_conf=axis.conf)
+        check_conf(spark, axis.conf)
+        print(f"[{args.axis}] {len(keys)} keys, fixtures from {src}", flush=True)
+        cons = {d: duckdb_connection(d) for d in set(fixtures.values())}
+        fails = []
+        for key in keys:
+            d = fixtures[axis.live if is_live(key) else axis.batch]
+            try:
+                ok, msg = check_query(spark, cons[d], REGISTRY[key], d)
+            except Exception as e:  # noqa: BLE001 — triage tool, keep going
+                ok, msg = False, f"ERR {type(e).__name__}: {e}"
+            print(f"{'ok' if ok else 'FAIL':4s} {key}: {msg[:300]}", flush=True)
+            if not ok:
+                fails.append((key, msg))
+    finally:
+        for d in set(fixtures.values()) - {src}:
+            shutil.rmtree(d, ignore_errors=True)
+    print(f"\n[{args.axis}] {len(fails)} failures / {len(keys)} keys swept")
     for k, m in fails:
         print(f"  {k}: {m[:200]}")
     return 1 if fails else 0

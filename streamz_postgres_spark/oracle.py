@@ -1,7 +1,7 @@
 """Oracle comparison machinery — the local replica of the driver's
 correctness gate (row count + schema + order-insensitive value
-multiset against DuckDB), shared by scripts/verify_local.py and the
-pytest suite.
+multiset against DuckDB), shared by scripts/sweep.py (whose ``gate``
+axis replicates the driver's run) and the pytest suite.
 """
 
 from __future__ import annotations

@@ -67,6 +67,16 @@ def _load_all() -> None:
     import streamz_postgres_spark.operators  # noqa: F401
 
 
+def is_live(key: str) -> bool:
+    """True for a streaming or CDC key: building its DataFrame runs the
+    bounded stream, and its plan materializes through a sink, so plan
+    audits and batch-only sweep axes leave it out. The rule is the key
+    prefix, not the tags: q_dedup, q_latest_per_key and
+    q_scd2_pointintime carry a ``cdc`` tag as batch forms of CDC
+    operators, but their DataFrames are plain batch plans."""
+    return key.startswith(("q_stream", "q_cdc"))
+
+
 # The external verifier checks the first 50 keys of ``queries()`` per
 # round, so exposure order IS verification coverage. This tuple is a
 # COMPLETE ordering of the registry: every registered key appears
@@ -83,8 +93,8 @@ def _load_all() -> None:
 # r11 window (boundary comment below) takes the 14-key r4 remainder
 # and restores the 3-round cap. The mitigation for every
 # temporarily-over-cap key is the END-OF-ROUND FULL LOCAL SWEEP
-# (every round since r5 the complete registry runs through
-# scripts/verify_local.py -- the driver-replica gate -- at sf0.01;
+# (every round since r5 the complete registry runs through the
+# driver-replica gate -- `scripts/sweep.py gate` -- at sf0.01;
 # round 9 added the first full sweep at a second scale factor), so
 # between driver windows every key still carries current-round gate
 # evidence.

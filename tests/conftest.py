@@ -25,13 +25,12 @@ def spark_session():
 
 
 def batch_keys() -> list[str]:
-    """Every registered key whose DataFrame is a plan to audit.
-    Streaming and CDC keys are left out: building their DataFrame runs
-    the bounded stream, and their plans materialize through a sink."""
-    from streamz_postgres_spark.registry import REGISTRY, _load_all
+    """Every registered key whose DataFrame is a plan to audit: the
+    keys that are not live (``registry.is_live``)."""
+    from streamz_postgres_spark.registry import REGISTRY, _load_all, is_live
 
     _load_all()
-    return [k for k in sorted(REGISTRY) if not k.startswith(("q_stream", "q_cdc"))]
+    return [k for k in sorted(REGISTRY) if not is_live(k)]
 
 
 def batch_plan_summaries(spark):

@@ -5,7 +5,7 @@ empty/whitespace/NULL document texts, and (v2) negative/zero/x1e3/
 repeating-decimal values, pre-epoch timestamps, unicode and
 8x-repeated documents, zero-vector and NULL embeddings.
 
-The full-registry sweep lives in scripts/hostile_sweep.py (round
+The full-registry sweep is ``python scripts/sweep.py hostile`` (round
 gate); this module pins every key that FAILED a sweep so each fix
 stays fixed.
 
@@ -140,7 +140,7 @@ from __future__ import annotations
 import pytest
 
 from streamz_postgres_spark.oracle import check_query, duckdb_connection
-from streamz_postgres_spark.registry import REGISTRY, _load_all
+from streamz_postgres_spark.registry import REGISTRY, _load_all, is_live
 from tests.conftest import SF_DIR
 
 _load_all()
@@ -205,6 +205,7 @@ PINNED = [
     "q_cooccurrence_lift",
     "q_funnel",
     "q_kll_quantile",
+    "q_latest_per_key",
     "q_pattern_skip_to",
     "q_text_langid",
     "q_user_features",
@@ -242,7 +243,6 @@ PINNED_STREAMING = [
     "q_cdc_diff",
     "q_cdc_materialize",
     # -- v5 sweep streaming pins ----------------------------------------
-    "q_latest_per_key",
     "q_stream_combine_latest",
     "q_stream_enrich_asof",
     "q_stream_ewma",
@@ -274,10 +274,13 @@ PINNED_STREAMING = [
     "q_stream_vocab_novelty",
 ]
 
+# a pin's fixture follows the registry's live-key rule, as in the sweep
+assert not any(map(is_live, PINNED)) and all(map(is_live, PINNED_STREAMING))
+
 
 @pytest.fixture(scope="module")
 def hostile_dir():
-    from scripts.hostile_sweep import build_hostile_dir
+    from scripts.sweep import build_hostile_dir
 
     return build_hostile_dir(SF_DIR)
 
@@ -289,7 +292,7 @@ def hostile_duck(hostile_dir):
 
 @pytest.fixture(scope="module")
 def hostile_stream_dir():
-    from scripts.hostile_sweep import build_hostile_dir
+    from scripts.sweep import build_hostile_dir
 
     return build_hostile_dir(SF_DIR, timeshift=False)
 

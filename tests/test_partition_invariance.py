@@ -42,7 +42,7 @@ def _values(spark, key):
 
 @pytest.fixture(scope="module")
 def shuffled_dir():
-    from scripts.order_sweep import build_shuffled_dir
+    from scripts.sweep import build_shuffled_dir
 
     return build_shuffled_dir(SF_DIR)
 
@@ -52,8 +52,8 @@ def test_values_invariant_under_row_order(spark, shuffled_dir, key):
     """Physical ROW ORDER independence (the second axis of the same
     determinism contract): the md5-scrambled fixture is value-
     identical to SF_DIR, so every batch key must return the same
-    multiset. The full-registry sweep lives in
-    scripts/order_sweep.py (0/265 at r12); this pins the
+    multiset. The full-registry sweep is ``python scripts/sweep.py
+    order`` (0/265 at r12); this pins the
     numerically-delicate representatives. Streaming keys are
     excluded by the replay harness's documented in-order contract."""
     df = REGISTRY[key].spark_fn(spark, shuffled_dir)

@@ -4,14 +4,15 @@ under a non-UTC session. Spark's date_trunc / dayofweek family
 silently routes NTZ values through the session zone (this caught a
 real cohort-week bug), so the probe flips the runtime tz conf to a
 +05:45 zone — misaligned with every hour AND half-hour boundary —
-and re-runs the oracle gate on the calendar-heavy keys. The full
-registry passed this probe at sf0.01 (180/180); this keeps the
-fast core of it in CI."""
+and re-runs the oracle gate on the calendar-heavy keys. The
+full-registry sweep is ``python scripts/sweep.py tz``, in the same
+zone (``sweep.TZ``); this keeps the fast core of it in CI."""
 
 from __future__ import annotations
 
 import pytest
 
+from scripts.sweep import TZ
 from streamz_postgres_spark.oracle import check_query
 from streamz_postgres_spark.registry import REGISTRY, _load_all
 from tests.conftest import SF_DIR
@@ -121,18 +122,16 @@ R8_KEYS = (
     "q_tpch_q17",
 )
 
-_TZ = "Asia/Kathmandu"  # +05:45: off every hour and half-hour grid
-
 
 def _check_under_tz(spark, duck, key):
     tz_key = "spark.sql.session.timeZone"
     before = spark.conf.get(tz_key)
-    spark.conf.set(tz_key, _TZ)
+    spark.conf.set(tz_key, TZ)
     try:
         ok, msg = check_query(spark, duck, REGISTRY[key], SF_DIR)
     finally:
         spark.conf.set(tz_key, before)
-    assert ok, f"{key} under {_TZ}: {msg}"
+    assert ok, f"{key} under {TZ}: {msg}"
 
 
 @pytest.mark.parametrize("key", KEYS)
