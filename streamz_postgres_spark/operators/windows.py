@@ -631,7 +631,7 @@ SELECT s1 || ' > ' || s2 || ' > ' || s3 AS path,
 FROM hops
 WHERE s2 IS NOT NULL AND s3 IS NOT NULL
 GROUP BY path
-ORDER BY n DESC, path
+ORDER BY n DESC, path NULLS LAST
 LIMIT {_PATH_TOPK}
 """,
     tags=("window", "sequence"),
@@ -655,10 +655,14 @@ def q_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         hops.filter(F.col("s2").isNotNull() & F.col("s3").isNotNull())
-        .select(F.concat_ws(" > ", "s1", "s2", "s3").alias("path"))
+        # concat, not concat_ws: a NULL s1 makes the path NULL, as the
+        # oracle's || does (concat_ws would skip it)
+        .select(
+            F.concat("s1", F.lit(" > "), "s2", F.lit(" > "), "s3").alias("path")
+        )
         .groupBy("path")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "path")
+        .orderBy(F.col("n").desc(), F.col("path").asc_nulls_last())
         .limit(_PATH_TOPK)
     )
 

@@ -53,7 +53,13 @@ xmin-polling traps):
 
 from __future__ import annotations
 
+import os
 import re
+import secrets
+import selectors
+import subprocess
+import tempfile
+import weakref
 from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Callable, Protocol
@@ -95,6 +101,95 @@ def quote_qualified_ident(name: str) -> str:
             raise ValueError(f"invalid table identifier part: {p!r}")
         quoted.append(f'"{p}"')
     return ".".join(quoted)
+
+
+def _psql_arg(path: str) -> str:
+    """``path`` single-quoted for a psql meta-command (``\\o``,
+    ``\\copy``). The two commands unquote differently, so a path
+    holding a quote, a backslash or a line break is refused."""
+    if re.search(r"['\\\r\n]", path):
+        raise ValueError(f"cannot pass {path!r} to psql")
+    return f"'{path}'"
+
+
+#: a CSV line that is exactly ``\.``: psql's ``\copy ... FROM`` takes it
+#: for end-of-data even inside a quoted value
+_COPY_EOF_LINE = re.compile(rb"\n\\\.(?=\r?\n)")
+
+
+def _end_psql(proc: subprocess.Popen) -> None:
+    """Finalizer of a :class:`_PsqlSession`: EOF on stdin ends psql
+    and its server session; the process is reaped (killed after 5 s)."""
+    try:
+        proc.stdin.close()
+    except OSError:
+        pass
+    try:
+        proc.wait(timeout=5)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    proc.stdout.close()
+    proc.stderr.close()
+
+
+class _PsqlSession:
+    """One long-lived ``psql`` process: the control channel of a
+    :class:`PsqlPollingLoader` or a :class:`PsqlTableSink`.
+
+    ``run`` writes a command batch to psql's stdin, followed by
+    ``\\echo`` of a per-process random nonce, and returns what psql
+    printed before the nonce. Only commands and scalar results cross
+    the pipes; row data goes through scratch files. psql runs with
+    ``ON_ERROR_STOP``, so any failing command ends the process (the
+    server rolls back its open transaction) and ``run`` raises
+    ``CalledProcessError`` with psql's message, as bytes, in
+    ``stderr``; the next ``run`` starts a new process. The process is
+    started on first use and ended when the session is collected.
+    """
+
+    def __init__(self, argv: list[str]) -> None:
+        self.argv = [*argv, "-X", "-q", "-A", "-t", "-v", "ON_ERROR_STOP=1"]
+        self.proc: subprocess.Popen | None = None
+        # psql's stderr since the last batch that succeeded
+        self.err = bytearray()
+
+    def run(self, script: str) -> str:
+        if self.proc is None:
+            self.proc = subprocess.Popen(
+                self.argv,
+                stdin=subprocess.PIPE,
+                stdout=subprocess.PIPE,
+                stderr=subprocess.PIPE,
+            )
+            self._nonce = f"__psql_{secrets.token_hex(16)}"
+            self._end = weakref.finalize(self, _end_psql, self.proc)
+            # CREATE TABLE IF NOT EXISTS would NOTICE on every write
+            script = f"SET client_min_messages = warning;\n{script}"
+        proc, done = self.proc, f"{self._nonce}\n".encode()
+        try:
+            proc.stdin.write(f"{script}\n\\echo {self._nonce}\n".encode())
+            proc.stdin.flush()
+        except BrokenPipeError:
+            pass  # psql has exited; its stderr says why
+        out = bytearray()
+        with selectors.DefaultSelector() as sel:
+            sel.register(proc.stdout, selectors.EVENT_READ, out)
+            sel.register(proc.stderr, selectors.EVENT_READ, self.err)
+            while sel.get_map() and not out.endswith(done):
+                for key, _ in sel.select():
+                    chunk = os.read(key.fd, 1 << 16)
+                    if not chunk:
+                        sel.unregister(key.fileobj)
+                    key.data.extend(chunk)
+        if out.endswith(done):
+            self.err.clear()
+            return out[: -len(done)].decode()
+        self._end()
+        self.proc = None
+        err = bytes(self.err)
+        self.err.clear()
+        raise subprocess.CalledProcessError(proc.returncode, self.argv, bytes(out), err)
 
 
 class Loader(Protocol):
@@ -240,14 +335,25 @@ class PsqlPollingLoader:
     for a 100 TB backfill. ``schema`` is the table's Spark DDL
     WITHOUT the cursor column (appended automatically).
 
-    Transport and stats contract: each returned frame is a lazy
-    Spark read of one scratch CSV that psql wrote in full before the
-    method returned, and that nothing rewrites before ``close()``
-    deletes it. Every re-read of the frame therefore sees the same
-    rows, so :meth:`batch_stats` can count them and take the max
-    ``__cursor`` from the file itself — pyarrow parses the cursor
-    column only, with the same RFC-4180 rules as the Spark read — and
-    the poll loop needs neither a persist nor a stats job.
+    Transport: one psql process per loader, started on first use and
+    kept across polls. ``safe_cursor`` and ``max_cursor`` are one
+    round trip on it, and ``\\o`` sends ``COPY ... TO STDOUT`` into a
+    scratch CSV, so no row crosses the control pipe. The returned
+    frame reads that CSV as ONE partition (``coalesce(1)``): the
+    multiLine scan is one task anyway, and declaring it lets a
+    key-partitioned consumer such as ``apply_changes`` run without an
+    exchange. The trade is that every operator downstream of a psql
+    batch runs in one task, which fits the poll-loop volumes this
+    loader is for.
+
+    Stats contract: each returned frame is a lazy Spark read of one
+    scratch CSV that psql wrote in full before the method returned,
+    and that nothing rewrites before ``close()`` deletes it. Every
+    re-read of the frame therefore sees the same rows, so
+    :meth:`batch_stats` can count them and take the max ``__cursor``
+    from the file itself — pyarrow parses the cursor column only, with
+    the same RFC-4180 rules as the Spark read — and the poll loop
+    needs neither a persist nor a stats job.
     """
 
     spark: SparkSession
@@ -268,14 +374,14 @@ class PsqlPollingLoader:
         self._scratch: list[str] = []
         # (frame, its scratch CSV) for batch_stats; dropped by close()
         self._files: list[tuple[DataFrame, str]] = []
+        self._psql = _PsqlSession([self.psql_path, *self.dsn])
 
     def close(self) -> None:
         """Remove every scratch CSV handed out so far and forget
         their stats. Frames returned before this call must not be
         re-read afterwards (same consume-within-the-batch contract
-        PollingCdcSource already imposes on envelope frames)."""
-        import os
-
+        PollingCdcSource already imposes on envelope frames). The
+        psql session stays open for the next batch."""
         self._files.clear()
         while self._scratch:
             try:
@@ -284,39 +390,23 @@ class PsqlPollingLoader:
                 pass
 
     def _scalar(self, sql: str) -> str:
-        import subprocess
-
-        out = subprocess.run(
-            [self.psql_path, *self.dsn, "-X", "-A", "-t", "-c", sql],
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        return out.stdout.strip()
+        return self._psql.run(f"{sql};").strip()
 
     def _frame(self, query: str) -> DataFrame:
-        import subprocess
-        import tempfile
-
         # FORCE_QUOTE * so every non-NULL value is quoted: an unquoted
         # empty field is then unambiguously NULL and a quoted ""
         # unambiguously the empty string (round-7 review find — COPY's
         # default leaves empty strings unquoted, identical to the NULL
         # sentinel)
-        copy = f"COPY ({query}) TO STDOUT (FORMAT CSV, HEADER, FORCE_QUOTE *)"
-        # psql streams COPY's output straight into the scratch file
+        copy = f"COPY ({query}) TO STDOUT (FORMAT CSV, HEADER, FORCE_QUOTE *);"
+        # \o sends COPY's output straight into the scratch file
         # (registered first, so close() removes it even when COPY
-        # fails); only stderr is buffered, for the error
+        # fails); \o alone closes the file before run() returns
         with tempfile.NamedTemporaryFile(
             suffix=".csv", delete=False, prefix="psql_poll_"
         ) as f:
             self._scratch.append(f.name)
-            subprocess.run(
-                [self.psql_path, *self.dsn, "-X", "-c", copy],
-                stdout=f,
-                stderr=subprocess.PIPE,
-                check=True,
-            )
+        self._psql.run(f"\\o {_psql_arg(f.name)}\n{copy}\n\\o")
         frame = (
             self.spark.read.option("header", True)
             # RFC-4180 options (round-7 review find): PG COPY doubles
@@ -333,6 +423,10 @@ class PsqlPollingLoader:
             .option("nullValue", "\\N__NULL__")
             .schema(f"{self.schema}, __cursor bigint")
             .csv(f.name)
+            # one file is one unsplittable multiLine partition anyway;
+            # saying so lets a key-partitioned consumer (apply_changes'
+            # window) skip its exchange
+            .coalesce(1)
         )
         self._files.append((frame, f.name))
         return frame
@@ -341,8 +435,6 @@ class PsqlPollingLoader:
         """Row count and max ``__cursor`` of a frame returned since
         the last ``close()``, read from its scratch CSV without a
         Spark job; None for any other frame."""
-        import os
-
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.csv as pacsv
@@ -681,13 +773,17 @@ class PsqlTableSink:
     without a JDBC driver on the classpath.
 
     ``write`` collects the frame to the driver as Arrow
-    (``toArrow``), encodes it as CSV with pyarrow, and pipes it into
-    ONE psql process that runs, in one transaction, the
+    (``toArrow``), encodes it as CSV with pyarrow into a scratch
+    file, and loads it over the sink's psql session (one process,
+    started on first use and kept across writes) as ``BEGIN``, the
     ``CREATE TABLE IF NOT EXISTS`` (Spark -> PG types via
-    :func:`pg_types.pg_type_for`), the ``TRUNCATE`` of an overwrite
-    and the ``COPY FROM STDIN``: a failing write leaves the table as
-    it was. Scalar columns only; ``binary`` lands in ``bytea`` via
-    its hex form. The driver funnel is right for a poll loop's batch
+    :func:`pg_types.pg_type_for`), the ``TRUNCATE`` of an overwrite,
+    ``\\copy ... FROM`` the file, ``COMMIT``. On any error psql
+    exits and the server rolls the transaction back, so a failing
+    write leaves the table as it was; the write raises
+    ``CalledProcessError`` with psql's message as bytes in
+    ``stderr``, and the next write starts a new session. Scalar
+    columns only; ``binary`` lands in ``bytea`` via its hex form. The driver funnel is right for a poll loop's batch
     sizes and for tests against a live server; a 100 TB backfill
     uses the JDBC writer (``df.write.jdbc``) or per-partition COPY
     workers instead, and the docstring is the contract that says so.
@@ -700,6 +796,7 @@ class PsqlTableSink:
 
     def __post_init__(self) -> None:
         self.table = quote_qualified_ident(self.table)
+        self._psql = _PsqlSession([self.psql_path, *self.dsn])
 
     def _ddl(self, df: DataFrame) -> str:
         from streamz_postgres_spark.sources.pg_types import pg_type_for
@@ -717,8 +814,6 @@ class PsqlTableSink:
         anything reaches Postgres, and CalledProcessError (psql's
         message in ``stderr``) when the transaction rolls back.
         """
-        import subprocess
-
         import pyarrow as pa
         import pyarrow.csv as pacsv
 
@@ -746,17 +841,25 @@ class PsqlTableSink:
             csv,
             pacsv.WriteOptions(include_header=False, quoting_style="all_valid"),
         )
+        # a line that is exactly \. would end \copy's read early; every
+        # value is quoted, so such a line is inside a value: close the
+        # quote before its \. and reopen it after (the server joins the
+        # quoted and unquoted pieces of one field)
+        data = _COPY_EOF_LINE.sub(lambda m: b'\n"\\."', csv.getvalue().to_pybytes())
         collist = ", ".join(f'"{c}"' for c in df.columns)
-        sql = [
-            self._ddl(df),
-            *([f"TRUNCATE {self.table}"] if mode == "overwrite" else []),
-            f"COPY {self.table} ({collist}) FROM STDIN (FORMAT CSV, NULL '')",
-        ]
-        subprocess.run(
-            [self.psql_path, *self.dsn, "-X", "-v", "ON_ERROR_STOP=1", "-1",
-             *(arg for cmd in sql for arg in ("-c", cmd))],
-            input=csv.getvalue(),
-            capture_output=True,
-            check=True,
-        )
+        with tempfile.NamedTemporaryFile(suffix=".csv", prefix="psql_poll_sink_") as f:
+            f.write(data)
+            f.flush()
+            self._psql.run(
+                "\n".join(
+                    [
+                        "BEGIN;",
+                        f"{self._ddl(df)};",
+                        *([f"TRUNCATE {self.table};"] if mode == "overwrite" else []),
+                        f"\\copy {self.table} ({collist}) FROM {_psql_arg(f.name)}"
+                        " (FORMAT CSV, NULL '')",
+                        "COMMIT;",
+                    ]
+                )
+            )
         return rows.num_rows

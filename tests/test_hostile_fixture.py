@@ -106,7 +106,11 @@ keys in six root causes:
   dropped (totals now computed before the explode),
 - a USING(user_id) read-back join dropped the NULL
   MATCH_RECOGNIZE partition (q_pattern_skip_to's oracle) — now
-  IS NOT DISTINCT FROM.
+  IS NOT DISTINCT FROM,
+- concat_ws skipped a NULL event_type in q_event_paths' trigram
+  where the oracle's || yields a NULL path (found by the first full
+  run of the merged sweep) — now F.concat, with the path tie-break
+  NULLS LAST on both sides.
 
 v5 sweep, streaming half (16 keys, six root causes): a NULL
 bigint grouping key arrives in the Python state folds as float NaN
@@ -203,6 +207,7 @@ PINNED = [
     "q_bitmap_overlap",
     "q_click_attribution",
     "q_cooccurrence_lift",
+    "q_event_paths",
     "q_funnel",
     "q_kll_quantile",
     "q_latest_per_key",

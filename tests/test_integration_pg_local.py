@@ -15,6 +15,7 @@ cleanly when the binaries are absent.
 
 from __future__ import annotations
 
+import hashlib
 import shutil
 import subprocess
 import tempfile
@@ -341,10 +342,17 @@ def test_hostile_values_round_trip_live(spark, fresh_table):
         (3, 2.5, ""),           # empty string, NOT null
         (4, 3.5, None),         # null, NOT empty string
         (5, None, 'comma, "quoted, too", end'),
+        # the psql transport: COPY's end-of-data line, a nonce-like
+        # prefix, meta-command lookalikes, CRLF
+        (6, 6.5, "before\n\\.\nafter"),
+        (7, 7.5, "\\.\r\n\\.\r\n\\.\n\\."),
+        (8, 8.5, "__psql_0123456789abcdef\n__psql_"),
+        (9, 9.5, "\\o /tmp/x\n\\echo __psql_x\n\\copy t FROM stdin\n\\q"),
+        (10, None, 'crlf\r\n"q"\r\n'),
     ]
     df = spark.createDataFrame(hostile, "id long, v double, note string")
     sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_hostile")
-    assert sink.write(df, mode="overwrite") == 5
+    assert sink.write(df, mode="overwrite") == len(hostile)
 
     # server-side truth checks (no CSV on this path)
     assert _sql(dsn, "SELECT note FROM t_hostile WHERE id = 1") == (
@@ -353,6 +361,14 @@ def test_hostile_values_round_trip_live(spark, fresh_table):
     assert _sql(dsn, "SELECT v IS NULL FROM t_hostile WHERE id = 2") == "t"
     assert _sql(dsn, "SELECT note = '' FROM t_hostile WHERE id = 3") == "t"
     assert _sql(dsn, "SELECT note IS NULL FROM t_hostile WHERE id = 4") == "t"
+    assert _sql(
+        dsn,
+        "SELECT string_agg(coalesce(md5(note), 'NULL'), ',' ORDER BY id)"
+        " FROM t_hostile",
+    ) == ",".join(
+        "NULL" if n is None else hashlib.md5(n.encode()).hexdigest()
+        for _, _, n in hostile
+    )
 
     ld = PsqlPollingLoader(
         spark=spark, dsn=dsn, table="t_hostile",
@@ -593,3 +609,125 @@ def test_batch_stats_match_spark_read_live(spark, fresh_table):
     assert ld.batch_stats(snap.filter("id > 1")) is None
     ld.close()
     assert ld.batch_stats(snap) is None and ld.batch_stats(empty) is None
+
+
+def test_one_psql_per_loader_and_sink_live(spark, fresh_table, monkeypatch):
+    """A snapshot and 10 non-empty polls through PollingCdcSource ->
+    apply_changes -> PsqlTableSink start exactly one psql for the
+    loader and one for the sink, and every batch lands."""
+    import sys
+
+    from streamz_postgres_spark.sources import cdc
+
+    spawned = []
+    popen = subprocess.Popen
+
+    def counting(*args, **kwargs):
+        if sys._getframe(1).f_globals.get("__name__") == cdc.__name__:
+            spawned.append(args[0])
+        return popen(*args, **kwargs)
+
+    monkeypatch.setattr(cdc.subprocess, "Popen", counting)
+    dsn = fresh_table
+    _sql(dsn, "INSERT INTO t_cdc SELECT i, i, 'seed' FROM generate_series(1, 4) i")
+    src = cdc.PollingCdcSource(_loader(spark, dsn), key_cols=["id"])
+    sink = cdc.PsqlTableSink(spark=spark, dsn=dsn, table="t_spawn")
+
+    def apply_fn(env, idx):
+        sink.write(cdc.apply_changes(env).select("seq", "key", "after"))
+
+    _sql(dsn, "DROP TABLE IF EXISTS t_spawn")
+    src.start(apply_fn)
+    for i in range(1, 11):
+        _sql(dsn, f"INSERT INTO t_cdc VALUES ({100 + i}, {i}, 'new')")
+        assert src.poll_once(apply_fn, i) == 1
+    assert len(spawned) == 2
+    assert _sql(dsn, "SELECT count(*) FROM t_spawn") == "14"
+
+
+def test_psql_poll_with_apply_and_write_runs_one_job_live(spark, fresh_table):
+    """A psql frame is one partition, so apply_changes' window needs
+    no exchange: a non-empty poll whose apply_fn runs apply_changes
+    and a sink write is exactly one Spark job."""
+    from streamz_postgres_spark.plans.scale import explain_summary
+    from streamz_postgres_spark.sources.cdc import (
+        PollingCdcSource,
+        PsqlTableSink,
+        apply_changes,
+        to_envelope,
+    )
+
+    dsn = fresh_table
+    _sql(dsn, "INSERT INTO t_cdc SELECT i, i, 'seed' FROM generate_series(1, 4) i")
+    ld = _loader(spark, dsn)
+    plan = explain_summary(apply_changes(to_envelope(ld.snapshot(), ["id"], "r")))
+    assert plan["exchanges"] == 0
+    ld.close()
+
+    _sql(dsn, "DROP TABLE IF EXISTS t_onejob")
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_onejob")
+    src = PollingCdcSource(ld, key_cols=["id"])
+
+    def apply_fn(env, idx):
+        sink.write(apply_changes(env).select("seq", "key", "after"))
+
+    src.start(apply_fn)
+    _sql(dsn, "INSERT INTO t_cdc SELECT i, i, 'new' FROM generate_series(5, 7) i")
+    _sql(dsn, "UPDATE t_cdc SET note = 'upd' WHERE id = 1")
+    assert _jobs_run(spark, "one-job", lambda: src.poll_once(apply_fn, 1)) == (4, 1)
+    assert _sql(dsn, "SELECT count(*) FROM t_onejob") == "8"
+
+
+def test_sink_respawns_after_a_failed_write_live(spark, fresh_table):
+    """A failing write raises CalledProcessError with psql's message
+    as bytes; the same sink's next write runs in a new psql and
+    succeeds, and the table holds exactly the rows of the writes
+    that succeeded."""
+    from streamz_postgres_spark.sources.cdc import PsqlTableSink
+
+    dsn = fresh_table
+    _sql(dsn, "DROP TABLE IF EXISTS t_respawn")
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_respawn")
+    schema = "id bigint, note string"
+    assert sink.write(spark.createDataFrame([(1, "a")], schema)) == 1
+    _sql(dsn, "ALTER TABLE t_respawn ALTER COLUMN id TYPE integer")
+    first = sink._psql.proc.pid
+    # the good row shares the failing COPY's transaction
+    bad = spark.createDataFrame([(2, "b"), (2**40, "c")], schema)
+    with pytest.raises(subprocess.CalledProcessError) as err:
+        sink.write(bad)
+    assert isinstance(err.value.stderr, bytes)
+    assert b"out of range" in err.value.stderr
+    assert sink.write(spark.createDataFrame([(3, "d")], schema)) == 1
+    assert sink._psql.proc.pid != first
+    assert _sql(
+        dsn, "SELECT string_agg(id || note, ',' ORDER BY id) FROM t_respawn"
+    ) == "1a,3d"
+
+
+def test_sink_session_stderr_bounded_and_reaped_live(spark, fresh_table):
+    """Over 200 writes, each of which would NOTICE that the table
+    exists, the session's stderr buffer stays small; once the sink is
+    collected its psql has exited and been reaped."""
+    import gc
+    import os
+
+    from streamz_postgres_spark.sources.cdc import PsqlTableSink
+
+    dsn = fresh_table
+    _sql(dsn, "DROP TABLE IF EXISTS t_hygiene")
+    sink = PsqlTableSink(spark=spark, dsn=dsn, table="t_hygiene")
+    # a local relation: no Python worker per toArrow
+    df = spark.sql("SELECT 1L AS id, 'a' AS note")
+    for _ in range(200):
+        sink.write(df)
+    assert len(sink._psql.err) < 1024
+    assert _sql(dsn, "SELECT count(*) FROM t_hygiene") == "200"
+
+    proc = sink._psql.proc
+    assert proc.poll() is None
+    del sink
+    gc.collect()
+    assert proc.returncode is not None
+    with pytest.raises(ChildProcessError):
+        os.waitpid(proc.pid, os.WNOHANG)
