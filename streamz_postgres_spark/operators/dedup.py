@@ -829,7 +829,7 @@ def connected_components(
     the common case is one action and an unconditional checkpoint
     would re-materialize the full O(nodes) table every invocation —
     the exact cost the incident-only fixpoint removed."""
-    from streamz_postgres_spark.lifecycle import persist_scoped, track_scoped
+    from streamz_postgres_spark.lifecycle import free, persist_scoped, track_scoped
 
     # undirected doubling via a row-local explode instead of
     # union(pairs, pairs.swapped) (r13, guide §2.4): the union form
@@ -913,15 +913,15 @@ def connected_components(
         labels = new_labels
         # new_labels is eagerly materialized from its own checkpoint
         # blocks, so the previous round's blocks are dead weight —
-        # release them now instead of accumulating one checkpointed
+        # free them now instead of accumulating one checkpointed
         # copy of the label table per round in executor storage
         # (verify/bench loops invoke this query repeatedly).
-        prev_labels.unpersist()
+        free(prev_labels)
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
     # the final labels frame is returned lazily: its blocks must
-    # outlive this call, so park it (unpersisted-on-next-invocation)
+    # outlive this call, so park it (freed at the next invocation)
     # in the same thread-scoped slot as edges
     track_scoped("connected_components", labels, fresh=False)
     # singleton re-attach: nodes outside the edge set keep their own

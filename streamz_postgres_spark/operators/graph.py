@@ -187,9 +187,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entry of tests/plan_budget.json caps the current plan. `en`
     # is O(nations^2) <= 625 rows: one eager localCheckpoint
     # materializes the edge build exactly once and every iteration
-    # joins the tiny checkpointed blocks. track_scoped's unpersist on
-    # the next invocation only drops the reference; ContextCleaner
-    # frees the blocks later, once that RDD is garbage-collected.
+    # joins the tiny checkpointed blocks; track_scoped frees them at
+    # this thread's next invocation.
     from streamz_postgres_spark.lifecycle import track_scoped
 
     en = en.localCheckpoint(eager=True)

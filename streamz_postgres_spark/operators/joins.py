@@ -929,14 +929,6 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- bucketed co-located join -----------------------------------------------
 
-#: (table names, layout dir) of the most recent q_join_bucketed
-#: invocation — released at the start of the next one (the returned
-#: DataFrame reads the bucketed files lazily, so the call can't clean
-#: its own). Table names carry a per-invocation uuid suffix so the
-#: query never clobbers a user's same-named catalog table and two
-#: concurrent invocations never race on one table name.
-_BUCKET_LAYOUTS: list = []
-
 _N_BUCKETS = 8
 
 
@@ -962,22 +954,21 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips both exchanges forever (plus bucket pruning on point
     predicates). The merge hint pins SMJ so the demo can't silently
     degrade to a broadcast at toy scale; the post-join rollup is an
-    ordinary partial agg. Tables and layout dirs from the previous
-    invocation are released here, mirroring q_partition_prune."""
-    import shutil
-    import tempfile
+    ordinary partial agg. The returned DataFrame reads the bucketed
+    files lazily, so the layout dir and the two catalog tables over
+    it share one lifecycle slot (released at this thread's next
+    call). Table names carry a per-invocation uuid suffix so the
+    query never clobbers a user's same-named catalog table and two
+    concurrent invocations never race on one table name."""
     import uuid
 
-    while _BUCKET_LAYOUTS:
-        tables, d = _BUCKET_LAYOUTS.pop()
-        for t in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(d, ignore_errors=True)
+    from streamz_postgres_spark.lifecycle import defer, scoped_dir
 
     tag = uuid.uuid4().hex[:12]
     t_orders, t_lineitem = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    base = tempfile.mkdtemp(prefix="bucketed_join_")
-    _BUCKET_LAYOUTS.append(((t_orders, t_lineitem), base))
+    base = scoped_dir("q_join_bucketed", "bucketed_join_")
+    for t in (t_orders, t_lineitem):
+        defer("q_join_bucketed", lambda t=t: spark.sql(f"DROP TABLE IF EXISTS {t}"))
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )

@@ -275,12 +275,6 @@ def q_lateral_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
 
 
-#: staged partitioned layouts of the most recent q_partition_prune
-#: invocation — released at the start of the next one (the returned
-#: DataFrame reads the staged files lazily, so the call can't clean
-#: its own; same lifetime pattern as streaming._MATERIALIZE_DIRS)
-_PRUNE_DIRS: list = []
-
 _PRUNE_DAY = "2024-01-15"
 
 
@@ -307,15 +301,12 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning time (see test_scale_guards: the plan must carry the
     day PartitionFilter, not a post-scan filter). The day column is
     derived with tz-free date_format on the NTZ timestamp, so the
-    layout and the answer are session-timezone-independent."""
-    import shutil
-    import tempfile
+    layout and the answer are session-timezone-independent. The
+    returned DataFrame reads the staged files lazily, so they live in
+    a lifecycle-scoped dir (released at this thread's next call)."""
+    from streamz_postgres_spark.lifecycle import scoped_dir
 
-    while _PRUNE_DIRS:
-        shutil.rmtree(_PRUNE_DIRS.pop(), ignore_errors=True)
-
-    staging = tempfile.mkdtemp(prefix="prune_lake_")
-    _PRUNE_DIRS.append(staging)
+    staging = scoped_dir("q_partition_prune", "prune_lake_")
     e = load_table(spark, sf_dir, "events")
     staged = e.withColumn("day", F.date_format("ts", "yyyy-MM-dd")).select(
         "event_id", "event_type", "value", "day"
@@ -388,10 +379,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- schema evolution across file batches -----------------------------------
 
-#: staging dirs of the most recent q_schema_evolution invocation
-_EVOL_DIRS: list = []
-
-
 @register(
     "q_schema_evolution",
     oracle="""
@@ -421,15 +408,11 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged scan aggregates across both schema generations. Schema
     merging costs one footer read per file at planning — at scale,
     pin the merged schema in a table catalog instead of re-inferring.
-    Staging dirs from the previous invocation are released here
-    (q_partition_prune pattern)."""
-    import shutil
-    import tempfile
+    The staged batches live in a lifecycle-scoped dir, as in
+    q_partition_prune."""
+    from streamz_postgres_spark.lifecycle import scoped_dir
 
-    while _EVOL_DIRS:
-        shutil.rmtree(_EVOL_DIRS.pop(), ignore_errors=True)
-    staging = tempfile.mkdtemp(prefix="schema_evol_")
-    _EVOL_DIRS.append(staging)
+    staging = scoped_dir("q_schema_evolution", "schema_evol_")
 
     d = load_table(spark, sf_dir, "documents")
     (

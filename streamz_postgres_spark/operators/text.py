@@ -1073,9 +1073,8 @@ def q_retrieval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-checkpoint plan scanned documents EIGHT times (the
     # q_retrieval_prf entry of tests/plan_budget.json caps the current
     # plan). seeds is Q x 5 rows: one eager localCheckpoint
-    # runs BM25 once; the blocks are freed by ContextCleaner after
-    # the next invocation drops this reference (track_scoped's
-    # unpersist alone does not free localCheckpoint blocks).
+    # runs BM25 once; track_scoped frees the blocks at this thread's
+    # next invocation.
     from streamz_postgres_spark.lifecycle import track_scoped
 
     seeds = seeds.localCheckpoint(eager=True)

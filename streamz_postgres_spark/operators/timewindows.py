@@ -1335,8 +1335,7 @@ def q_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(types x bars) (hundreds of rows): one eager
     # localCheckpoint materializes the only input-sized stage once;
     # the residual joins all run over the tiny checkpointed blocks,
-    # freed by ContextCleaner after the next invocation drops this
-    # reference (track_scoped's unpersist does not free them).
+    # which track_scoped frees at this thread's next invocation.
     from streamz_postgres_spark.lifecycle import track_scoped
 
     bars = bars.localCheckpoint(eager=True)

@@ -133,6 +133,15 @@ def _end_psql(proc: subprocess.Popen) -> None:
     proc.stderr.close()
 
 
+def _unlink_all(paths: list[str]) -> None:
+    """Remove (and forget) every scratch file in ``paths``."""
+    while paths:
+        try:
+            os.unlink(paths.pop())
+        except OSError:
+            pass
+
+
 class _PsqlSession:
     """One long-lived ``psql`` process: the control channel of a
     :class:`PsqlPollingLoader` or a :class:`PsqlTableSink`.
@@ -370,8 +379,10 @@ class PsqlPollingLoader:
         # union a snapshot with a later delta before collecting), so
         # files are only released by close() — which PollingCdcSource
         # calls after each envelope batch is consumed, keeping the
-        # poll loop leak-free without invalidating live frames.
+        # poll loop leak-free without invalidating live frames — or
+        # when the loader is collected unclosed.
         self._scratch: list[str] = []
+        weakref.finalize(self, _unlink_all, self._scratch)
         # (frame, its scratch CSV) for batch_stats; dropped by close()
         self._files: list[tuple[DataFrame, str]] = []
         self._psql = _PsqlSession([self.psql_path, *self.dsn])
@@ -383,11 +394,7 @@ class PsqlPollingLoader:
         PollingCdcSource already imposes on envelope frames). The
         psql session stays open for the next batch."""
         self._files.clear()
-        while self._scratch:
-            try:
-                os.unlink(self._scratch.pop())
-            except OSError:
-                pass
+        _unlink_all(self._scratch)
 
     def _scalar(self, sql: str) -> str:
         return self._psql.run(f"{sql};").strip()

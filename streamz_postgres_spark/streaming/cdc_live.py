@@ -25,12 +25,6 @@ from streamz_postgres_spark.sources.cdc import (
 )
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
-#: target dirs of the most recent q_cdc_materialize invocation —
-#: released at the start of the next one (the returned DataFrame
-#: reads its final snapshot lazily, so the call can't clean its own)
-_MATERIALIZE_DIRS: list = []
-
-
 # ---------------------------------------------------------------------------
 # CDC queries (driving sources/cdc.py)
 # ---------------------------------------------------------------------------
@@ -107,30 +101,24 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _materialized_sink(spark: SparkSession, sf_dir: str):
+def _materialized_sink(spark: SparkSession, sf_dir: str, key: str):
     """Shared CDC-materialization run: stage the events as 4 files,
     stream them through foreachBatch (maxFilesPerTrigger=1, so four
     real incremental merges run), upsert each micro-batch through
     the pluggable MERGE seam, and return the sink — the caller
     decides the read-out (final state for q_cdc_materialize, an
     earlier epoch for q_cdc_time_travel) and whether to compact the
-    version chain."""
+    version chain. The caller's frame reads the target's snapshots
+    lazily, so the target is a lifecycle-scoped dir under ``key``,
+    released at this thread's next invocation of ``key``."""
     import os
-    import shutil
     import tempfile
 
     from streamz_postgres_spark.catalog import load_table
+    from streamz_postgres_spark.lifecycle import scoped_dir
     from streamz_postgres_spark.streaming.merge import pick_merge_sink
 
-    # previous invocation's target snapshots are released here (the
-    # returned DataFrame reads its snapshot lazily, so this call
-    # cannot delete its own)
-    while _MATERIALIZE_DIRS:
-        shutil.rmtree(_MATERIALIZE_DIRS.pop(), ignore_errors=True)
-
-    staging = tempfile.mkdtemp(prefix="cdc_src_")
-    target = tempfile.mkdtemp(prefix="cdc_target_")
-    _MATERIALIZE_DIRS.append(target)
+    target = scoped_dir(key, "cdc_target_")
     sink = pick_merge_sink(
         spark, target, key_cols=["user_id"], seq_col="last_seq", op_col="op"
     )
@@ -142,61 +130,64 @@ def _materialized_sink(spark: SparkSession, sf_dir: str):
     # materialize a stale table
     max_id = e.agg(F.max("event_id")).collect()[0][0] or 0
     step = max_id // 4 + 1
-    base_mtime = None
-    for i in range(4):
-        part_dir = os.path.join(staging, f"part{i}")
-        # chunk 0 is UNBOUNDED BELOW (r13, found by the v8 hostile
-        # rows with negative event_ids): the time-travel oracle cuts
-        # with `event_id < (epoch+1)*step`, so any id below 0 belongs
-        # to the first epoch — a `>= 0` lower bound left such rows
-        # permanently unstaged and the materialized table stale, the
-        # same silent-loss class the MAX-vs-COUNT note above records
-        # for high-id gaps
-        lo = (
-            F.lit(True)
-            if i == 0
-            else (F.col("event_id") >= i * step)
-        )
-        (
-            e.filter(lo & (F.col("event_id") < (i + 1) * step))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(part_dir)
-        )
-        # pin the ingestion order: FileStreamSource orders batches by
-        # modification time with an unspecified tie-break, and
-        # q_cdc_time_travel's oracle depends on epoch i consuming
-        # chunk i — four quick sequential writes can land in the same
-        # mtime granule, so stamp strictly increasing mtimes
-        # explicitly instead of trusting the filesystem clock
-        for name in os.listdir(part_dir):
-            p = os.path.join(part_dir, name)
-            if base_mtime is None:
-                base_mtime = os.stat(p).st_mtime
-            os.utime(p, (base_mtime + i, base_mtime + i))
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_src_", ignore_cleanup_errors=True
+    ) as staging, tempfile.TemporaryDirectory(
+        prefix="cdc_ckpt_", ignore_cleanup_errors=True
+    ) as ckpt:
+        base_mtime = None
+        for i in range(4):
+            part_dir = os.path.join(staging, f"part{i}")
+            # chunk 0 is UNBOUNDED BELOW (r13, found by the v8 hostile
+            # rows with negative event_ids): the time-travel oracle cuts
+            # with `event_id < (epoch+1)*step`, so any id below 0 belongs
+            # to the first epoch — a `>= 0` lower bound left such rows
+            # permanently unstaged and the materialized table stale, the
+            # same silent-loss class the MAX-vs-COUNT note above records
+            # for high-id gaps
+            lo = (
+                F.lit(True)
+                if i == 0
+                else (F.col("event_id") >= i * step)
+            )
+            (
+                e.filter(lo & (F.col("event_id") < (i + 1) * step))
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(part_dir)
+            )
+            # pin the ingestion order: FileStreamSource orders batches by
+            # modification time with an unspecified tie-break, and
+            # q_cdc_time_travel's oracle depends on epoch i consuming
+            # chunk i — four quick sequential writes can land in the same
+            # mtime granule, so stamp strictly increasing mtimes
+            # explicitly instead of trusting the filesystem clock
+            for name in os.listdir(part_dir):
+                p = os.path.join(part_dir, name)
+                if base_mtime is None:
+                    base_mtime = os.stat(p).st_mtime
+                os.utime(p, (base_mtime + i, base_mtime + i))
 
-    # staged parts are dirs of part-*.parquet; the batch-written ts
-    # is already TimestampNTZ so the plain schema read works
-    s = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(staging, "part*"))
-    )
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        # envelope shaping is the pipeline's job; the upsert
-        # mechanics (snapshot chaining / MERGE INTO, idempotent
-        # epochs, tombstones) live behind the sink seam
-        changes = batch.select(
-            F.col("user_id"),
-            F.col("event_id").alias("last_seq"),
-            F.col("value").alias("current_value"),
-            F.when(F.col("event_id") % 10 == 0, "d").otherwise("u").alias("op"),
+        # staged parts are dirs of part-*.parquet; the batch-written ts
+        # is already TimestampNTZ so the plain schema read works
+        s = (
+            spark.readStream.schema(e.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(staging, "part*"))
         )
-        sink.merge_batch(changes, epoch_id)
 
-    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
-    try:
+        def merge_batch(batch: DataFrame, epoch_id: int) -> None:
+            # envelope shaping is the pipeline's job; the upsert
+            # mechanics (snapshot chaining / MERGE INTO, idempotent
+            # epochs, tombstones) live behind the sink seam
+            changes = batch.select(
+                F.col("user_id"),
+                F.col("event_id").alias("last_seq"),
+                F.col("value").alias("current_value"),
+                F.when(F.col("event_id") % 10 == 0, "d").otherwise("u").alias("op"),
+            )
+            sink.merge_batch(changes, epoch_id)
+
         q = (
             s.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", ckpt)
@@ -204,9 +195,6 @@ def _materialized_sink(spark: SparkSession, sf_dir: str):
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
     return sink
 
 
@@ -236,7 +224,7 @@ def q_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     seam in tests/test_merge_sink.py. Four real incremental merges
     run (shared harness: _materialized_sink); the final table must
     equal the oracle's latest-row-wins state with deletes applied."""
-    sink = _materialized_sink(spark, sf_dir)
+    sink = _materialized_sink(spark, sf_dir, "q_cdc_materialize")
     sink.compact()
     final = sink.current(spark)
     if final is None:  # empty stream: no snapshot was written
@@ -279,7 +267,7 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     present: audits, reproducible training snapshots, and
     what-did-the-dashboard-say-yesterday debugging all hang off this
     read path."""
-    sink = _materialized_sink(spark, sf_dir)
+    sink = _materialized_sink(spark, sf_dir, "q_cdc_time_travel")
     return sink.as_of(spark, _TT_EPOCH).select(
         "user_id", "last_seq", "current_value"
     )

@@ -172,53 +172,48 @@ def q_stream_percentile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     containing max(ts) on a bounded input, so the replay stages a
     far-future flush row exactly as q_stream_tumbling_watermarked
     does (the flush window itself is filtered out)."""
-    import shutil
-
     from streamz_postgres_spark.streaming.runner import (
         run_to_table,
         staged_replay_with_flush,
     )
 
-    s, staging = staged_replay_with_flush(spark, sf_dir)
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    out = (
-        s.withColumn("ts_evt", F.timestamp_micros(micros))
-        .withWatermark("ts_evt", "0 seconds")
-        .groupBy(F.window("ts_evt", "1 hour").alias("w"), "event_type")
-        .agg(
-            # COUNT(value), matching the NULL-dropping collect_list
-            # (the q_kll_quantile convention; v2 hostile find)
-            F.count("value").alias("n_events"),
-            F.sort_array(F.collect_list("value")).alias("vals"),
+    with staged_replay_with_flush(spark, sf_dir) as s:
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
         )
-        .select(
-            F.expr(
-                "timestampadd(MICROSECOND, unix_micros(w.start), "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ).alias("window_start"),
-            "event_type",
-            "n_events",
-            # try_element_at: an all-NULL window has an empty vals
-            # array, where ANSI element_at throws and DuckDB's
-            # vals[1] is NULL
-            F.expr(
-                "try_element_at(vals, CAST((n_events - 1) DIV 2 AS INT) + 1)"
-            ).alias("p50"),
-            F.expr(
-                "try_element_at(vals, "
-                "CAST(((n_events - 1) * 9) DIV 10 AS INT) + 1)"
-            ).alias("p90"),
+        out = (
+            s.withColumn("ts_evt", F.timestamp_micros(micros))
+            .withWatermark("ts_evt", "0 seconds")
+            .groupBy(F.window("ts_evt", "1 hour").alias("w"), "event_type")
+            .agg(
+                # COUNT(value), matching the NULL-dropping collect_list
+                # (the q_kll_quantile convention; v2 hostile find)
+                F.count("value").alias("n_events"),
+                F.sort_array(F.collect_list("value")).alias("vals"),
+            )
+            .select(
+                F.expr(
+                    "timestampadd(MICROSECOND, unix_micros(w.start), "
+                    "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                ).alias("window_start"),
+                "event_type",
+                "n_events",
+                # try_element_at: an all-NULL window has an empty vals
+                # array, where ANSI element_at throws and DuckDB's
+                # vals[1] is NULL
+                F.expr(
+                    "try_element_at(vals, CAST((n_events - 1) DIV 2 AS INT) + 1)"
+                ).alias("p50"),
+                F.expr(
+                    "try_element_at(vals, "
+                    "CAST(((n_events - 1) * 9) DIV 10 AS INT) + 1)"
+                ).alias("p90"),
+            )
+            .filter(
+                F.col("window_start") < F.lit("2024-06-01").cast("timestamp_ntz")
+            )
         )
-        .filter(
-            F.col("window_start") < F.lit("2024-06-01").cast("timestamp_ntz")
-        )
-    )
-    try:
         return run_to_table(out, "append", spark)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 # -- streaming rollup cascade (continuous aggregate) ------------------------

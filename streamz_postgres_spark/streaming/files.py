@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamz_postgres_spark.catalog import load_table
+from streamz_postgres_spark.lifecycle import scoped_dir
 from streamz_postgres_spark.registry import register
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
@@ -57,30 +58,23 @@ def q_stream_textfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_textfile contract, not a shortcut: every line-oriented log
     shipper imposes the same normalization."""
     d = load_table(spark, sf_dir, "documents")
-    outdir = tempfile.mkdtemp(prefix="textsrc_")
-    (
-        d.filter(F.col("text").isNotNull())
-        .select(F.regexp_replace("text", r"[\r\n]", " ").alias("text"))
-        .write.mode("overwrite")
-        .text(outdir)
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="textsrc_", ignore_cleanup_errors=True
+    ) as outdir:
+        (
+            d.filter(F.col("text").isNotNull())
+            .select(F.regexp_replace("text", r"[\r\n]", " ").alias("text"))
+            .write.mode("overwrite")
+            .text(outdir)
+        )
 
-    lines = spark.readStream.format("text").load(outdir)
-    agg = lines.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.length("value")).alias("total_chars"),
-        F.sum(F.size(F.split("value", " "))).alias("total_tokens"),
-    )
-    result = run_to_table(agg, "complete", spark)
-    shutil.rmtree(outdir, ignore_errors=True)
-    return result
-
-
-#: sink dirs from the previous invocation — the returned DataFrame
-#: reads them lazily, so each dir must survive until the NEXT call
-#: (the _MATERIALIZE_DIRS pattern from streaming/queries.py); without
-#: this, repeated verify/bench cycles accumulate parquet in /tmp
-_SINK_DIRS: list = []
+        lines = spark.readStream.format("text").load(outdir)
+        agg = lines.agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum(F.length("value")).alias("total_chars"),
+            F.sum(F.size(F.split("value", " "))).alias("total_tokens"),
+        )
+        return run_to_table(agg, "complete", spark)
 
 
 @register(
@@ -99,12 +93,11 @@ def q_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the committed files. The re-read sees exactly the committed set,
     which must equal the batch filter — the exactly-once ledger the
     reference's Kafka-batched source approximates with manual
-    checkpoints."""
-    while _SINK_DIRS:
-        shutil.rmtree(_SINK_DIRS.pop(), ignore_errors=True)
+    checkpoints. The returned DataFrame reads the sink's files
+    lazily, so they live in a lifecycle-scoped dir (released at this
+    thread's next invocation)."""
     s = replay_events(spark, sf_dir)
-    outdir = tempfile.mkdtemp(prefix="filesink_")
-    _SINK_DIRS.append(outdir)
+    outdir = scoped_dir("q_stream_file_sink", "filesink_")
     ckpt = os.path.join(outdir, "_ckpt")
     q = (
         s.filter(F.col("event_type") == "purchase")
@@ -158,8 +151,9 @@ def q_stream_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    outdir = tempfile.mkdtemp(prefix="jsonsrc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonsrc_", ignore_cleanup_errors=True
+    ) as outdir:
         # the staging "producer" is a distributed text write of
         # to_json lines, not a driver loop
         e.select(
@@ -210,5 +204,3 @@ def q_stream_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return run_to_table(agg, "complete", spark)
-    finally:
-        shutil.rmtree(outdir, ignore_errors=True)

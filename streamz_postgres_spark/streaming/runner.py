@@ -21,10 +21,15 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from streamz_postgres_spark.lifecycle import scoped_dir
+
 
 def _events_schema(ts_field: T.DataType) -> T.StructType:
     return T.StructType(
@@ -104,13 +109,14 @@ def replay_events(
     )
 
 
+@contextmanager
 def staged_replay_with_flush(
     spark: SparkSession,
     sf_dir: str,
     event_type: str = "__flush__",
     flush_ts: str = "2024-06-01",
     user_id: int = -1,
-) -> tuple[DataFrame, str]:
+) -> Iterator[DataFrame]:
     """Events stream staged with one far-future flush row appended —
     the end-of-stream-flush idiom append-mode verification needs: the
     flush row drags the watermark past every real row (so all real
@@ -118,33 +124,35 @@ def staged_replay_with_flush(
     stays watermark-withheld forever. ``event_type`` controls which
     branch filters the flush row survives (watermark nodes observe
     the FILTERED stream after Catalyst pushdown — see
-    q_stream_join_full). Returns (stream, staging_dir); the caller
-    removes the dir after the query terminates."""
+    q_stream_join_full). A context manager: run the query inside the
+    ``with`` block; the staging dir is removed when it exits."""
     import pandas as _pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from streamz_postgres_spark.catalog import table_path
 
-    staging = tempfile.mkdtemp(prefix="flush_replay_")
-    shutil.copy(table_path(sf_dir, "events"), f"{staging}/events.parquet")
-    unit = events_ts_unit(sf_dir)
-    flush_ns = int(_pd.Timestamp(flush_ts).value)
-    flush_val = flush_ns if unit == "ns" else flush_ns // 1000
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array([-1], pa.int64()),
-                "ts": pa.array([flush_val], pa.timestamp(unit)),
-                "user_id": pa.array([user_id], pa.int64()),
-                "event_type": pa.array([event_type], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            }
-        ),
-        f"{staging}/flush.parquet",
-    )
-    return replay_events(spark, sf_dir, directory=staging, glob="*.parquet"), staging
+    with tempfile.TemporaryDirectory(
+        prefix="flush_replay_", ignore_cleanup_errors=True
+    ) as staging:
+        shutil.copy(table_path(sf_dir, "events"), f"{staging}/events.parquet")
+        unit = events_ts_unit(sf_dir)
+        flush_ns = int(_pd.Timestamp(flush_ts).value)
+        flush_val = flush_ns if unit == "ns" else flush_ns // 1000
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([-1], pa.int64()),
+                    "ts": pa.array([flush_val], pa.timestamp(unit)),
+                    "user_id": pa.array([user_id], pa.int64()),
+                    "event_type": pa.array([event_type], pa.string()),
+                    "value": pa.array([0.0], pa.float64()),
+                    "props": pa.array(["{}"], pa.string()),
+                }
+            ),
+            f"{staging}/flush.parquet",
+        )
+        yield replay_events(spark, sf_dir, directory=staging, glob="*.parquet")
 
 
 def run_to_parquet_resumed(
@@ -163,37 +171,22 @@ def run_to_parquet_resumed(
     still-pending expired timers, and state checkpointing makes the
     union of the appends exactly-once. The parquet sink (not memory)
     is what makes the resume safe: a restarted memory sink drops the
-    first run's rows."""
-    name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    base = tempfile.mkdtemp(prefix="spark_resume_")
+    first run's rows. The returned frame reads the sink's files
+    lazily, so they live in a lifecycle-scoped dir, released at this
+    thread's next call."""
+    base = scoped_dir("run_to_parquet_resumed", "spark_resume_")
     data, ckpt = f"{base}/data", f"{base}/ckpt"
-    try:
-        for _ in range(passes):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", data)
-                .option("checkpointLocation", ckpt)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        df = spark.read.parquet(data)
-        df.createOrReplaceTempView(name)
-        # materialize through a stable temp view so the caller's
-        # DataFrame survives the staging dir's eventual cleanup by
-        # the next invocation (mirrors the memory-sink contract)
-        return spark.table(name)
-    finally:
-        _RESUME_DIRS.append(base)
-        while len(_RESUME_DIRS) > 4:
-            shutil.rmtree(_RESUME_DIRS.pop(0), ignore_errors=True)
-
-
-#: staging dirs of recent run_to_parquet_resumed invocations — the
-#: returned DataFrame reads the parquet lazily, so each call cleans
-#: only older invocations' dirs, never its own
-_RESUME_DIRS: list = []
+    for _ in range(passes):
+        q = (
+            out.writeStream.format("parquet")
+            .option("path", data)
+            .option("checkpointLocation", ckpt)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return spark.read.parquet(data)
 
 
 def run_to_table(
@@ -203,22 +196,25 @@ def run_to_table(
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow)
     into a memory sink; return the materialized result table. The
-    one-shot checkpoint dir is deleted after termination (repeated
-    verify/bench cycles must not accumulate RocksDB state)."""
+    one-shot checkpoint dir is deleted after termination, and the
+    sink's temp view is dropped before returning (the returned frame
+    keeps the sink's rows; a view would pin them for the whole
+    session) — also on failure, so repeated verify/bench cycles
+    accumulate neither RocksDB state nor views."""
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    ckpt = tempfile.mkdtemp(prefix="spark_ckpt_")
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # also on failure — repeated verify/bench cycles must not
-        # accumulate RocksDB state
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    with tempfile.TemporaryDirectory(
+        prefix="spark_ckpt_", ignore_cleanup_errors=True
+    ) as ckpt:
+        try:
+            q = (
+                out.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            return spark.table(name)
+        finally:
+            spark.catalog.dropTempView(name)

@@ -789,24 +789,22 @@ def q_stream_transform_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the stateful operator (filtering it before would also
     remove it from the watermark node, the documented pushdown
     trap). Environment pinning via _tws_environment."""
-    import shutil
-
-    from streamz_postgres_spark.streaming.runner import staged_replay_with_flush
+    from streamz_postgres_spark.streaming.runner import (
+        run_to_parquet_resumed,
+        staged_replay_with_flush,
+    )
 
     cls = _tws_class("InactivityFlushProcessor", _InactivityFlushProcessor)
-    s, staging = staged_replay_with_flush(spark, sf_dir)
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    src = (
-        # NULL tws grouping keys excluded, see the _TWS_ORACLE note
-        s.filter(F.col("user_id").isNotNull())
-        .withColumn("ts_evt", F.timestamp_micros(micros))
-        .withWatermark("ts_evt", "0 seconds")
-    )
-    from streamz_postgres_spark.streaming.runner import run_to_parquet_resumed
-
-    try:
+    with staged_replay_with_flush(spark, sf_dir) as s:
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
+        )
+        src = (
+            # NULL tws grouping keys excluded, see the _TWS_ORACLE note
+            s.filter(F.col("user_id").isNotNull())
+            .withColumn("ts_evt", F.timestamp_micros(micros))
+            .withWatermark("ts_evt", "0 seconds")
+        )
         with _tws_environment(spark):
             out = src.groupBy("user_id").transformWithStateInPandas(
                 statefulProcessor=cls(),
@@ -848,8 +846,6 @@ def q_stream_transform_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.lit(1e6)
                 ).alias("sum_value"),
             )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 if _protobuf_available():  # pragma: no cover - depends on environment

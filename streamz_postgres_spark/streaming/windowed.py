@@ -189,44 +189,38 @@ def q_stream_tumbling_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     real window (all emit) while the flush row's own window stays
     withheld — the standard end-of-stream flush for append-mode
     verification. The flush row never reaches the output."""
-    import shutil
-
     from streamz_postgres_spark.functions.numeric import dsum
     from streamz_postgres_spark.streaming.runner import staged_replay_with_flush
 
-    s, staging = staged_replay_with_flush(spark, sf_dir)
-    # watermarks require TimestampType; build the instant from epoch
-    # micros (tz-free both ways: NTZ -> micros -> instant, and the
-    # output instant -> micros -> NTZ) so the UTC-aligned hour grid
-    # and emitted wall clocks are session-timezone-independent
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    out = (
-        s.withColumn("ts_evt", F.timestamp_micros(micros))
-        .withWatermark("ts_evt", "0 seconds")
-        .groupBy(F.window("ts_evt", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
+    with staged_replay_with_flush(spark, sf_dir) as s:
+        # watermarks require TimestampType; build the instant from epoch
+        # micros (tz-free both ways: NTZ -> micros -> instant, and the
+        # output instant -> micros -> NTZ) so the UTC-aligned hour grid
+        # and emitted wall clocks are session-timezone-independent
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
         )
-        .select(
-            F.expr(
-                "timestampadd(MICROSECOND, unix_micros(w.start), "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ).alias("window_start"),
-            "n_events",
-            "sum_value",
+        out = (
+            s.withColumn("ts_evt", F.timestamp_micros(micros))
+            .withWatermark("ts_evt", "0 seconds")
+            .groupBy(F.window("ts_evt", "1 hour").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                dsum("value").alias("sum_value"),
+            )
+            .select(
+                F.expr(
+                    "timestampadd(MICROSECOND, unix_micros(w.start), "
+                    "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                ).alias("window_start"),
+                "n_events",
+                "sum_value",
+            )
+            # defensive: the flush window is withheld by the watermark,
+            # but make the contract explicit
+            .filter(F.col("window_start") < F.lit("2024-06-01").cast("timestamp_ntz"))
         )
-        # defensive: the flush window is withheld by the watermark,
-        # but make the contract explicit
-        .filter(F.col("window_start") < F.lit("2024-06-01").cast("timestamp_ntz"))
-    )
-    try:
-        result = run_to_table(out, "append", spark)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return result
+        return run_to_table(out, "append", spark)
 
 
 @register(
@@ -547,54 +541,49 @@ def q_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a defensive output filter). Production equivalents: idle-
     source watermark advance or heartbeat events. Per-side state is
     bounded by watermark + the 30-min condition."""
-    import shutil
-
     from streamz_postgres_spark.streaming.runner import staged_replay_with_flush
 
-    s, staging = staged_replay_with_flush(spark, sf_dir, event_type="click")
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    s = s.withColumn("ts_evt", F.timestamp_micros(micros)).withWatermark(
-        "ts_evt", "1 minute"
-    )
-    cutoff = F.col("ts") < F.lit("2024-01-29 00:00:00").cast("timestamp_ntz")
-    clicks = s.filter(
-        (F.col("event_type") == "click") & (cutoff | (F.col("user_id") == -1))
-    ).select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("click_user"),
-        F.col("ts_evt").alias("c_ts"),
-    )
-    purchases = s.filter((F.col("event_type") == "purchase") & cutoff).select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("purchase_user"),
-        F.col("ts_evt").alias("p_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = (
-        clicks.join(
-            purchases,
-            (F.col("click_user") == F.col("purchase_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTE")),
-            "full_outer",
+    with staged_replay_with_flush(spark, sf_dir, event_type="click") as s:
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
         )
-        # defensive: the flush click's null row is withheld by the
-        # watermark; make the contract explicit
-        .filter(F.col("click_user").isNull() | (F.col("click_user") != -1))
-        .select(
-            "click_id",
-            "click_user",
-            "purchase_id",
-            "purchase_user",
-            "purchase_value",
+        s = s.withColumn("ts_evt", F.timestamp_micros(micros)).withWatermark(
+            "ts_evt", "1 minute"
         )
-    )
-    try:
+        cutoff = F.col("ts") < F.lit("2024-01-29 00:00:00").cast("timestamp_ntz")
+        clicks = s.filter(
+            (F.col("event_type") == "click") & (cutoff | (F.col("user_id") == -1))
+        ).select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("click_user"),
+            F.col("ts_evt").alias("c_ts"),
+        )
+        purchases = s.filter((F.col("event_type") == "purchase") & cutoff).select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("purchase_user"),
+            F.col("ts_evt").alias("p_ts"),
+            F.col("value").alias("purchase_value"),
+        )
+        out = (
+            clicks.join(
+                purchases,
+                (F.col("click_user") == F.col("purchase_user"))
+                & (F.col("p_ts") >= F.col("c_ts"))
+                & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 30 MINUTE")),
+                "full_outer",
+            )
+            # defensive: the flush click's null row is withheld by the
+            # watermark; make the contract explicit
+            .filter(F.col("click_user").isNull() | (F.col("click_user") != -1))
+            .select(
+                "click_id",
+                "click_user",
+                "purchase_id",
+                "purchase_user",
+                "purchase_value",
+            )
+        )
         return run_to_table(out, "append", spark)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def _running_totals(
@@ -792,42 +781,37 @@ def q_stream_chained_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     withheld. This is the streaming form of a rollup cascade — at
     100 TB it replaces the 'hourly job feeding a daily job' pattern
     with one query and exactly-once state."""
-    import shutil
-
     from streamz_postgres_spark.streaming.runner import staged_replay_with_flush
 
-    s, staging = staged_replay_with_flush(spark, sf_dir)
-    micros = F.expr(
-        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-    )
-    hourly = (
-        s.withColumn("ts_evt", F.timestamp_micros(micros))
-        .withWatermark("ts_evt", "0 seconds")
-        .groupBy(F.window("ts_evt", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    daily = (
-        hourly.groupBy(F.window(F.col("w"), "1 day").alias("d"))
-        .agg(
-            F.max("n").alias("peak_hourly"),
-            F.sum("n").alias("n_events"),
-            F.count(F.lit(1)).cast("long").alias("n_hours"),
+    with staged_replay_with_flush(spark, sf_dir) as s:
+        micros = F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
         )
-        .select(
-            F.expr(
-                "timestampadd(MICROSECOND, unix_micros(d.start), "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ).alias("day_start"),
-            "peak_hourly",
-            "n_events",
-            "n_hours",
+        hourly = (
+            s.withColumn("ts_evt", F.timestamp_micros(micros))
+            .withWatermark("ts_evt", "0 seconds")
+            .groupBy(F.window("ts_evt", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        .filter(F.col("day_start") < F.lit("2024-06-01").cast("timestamp_ntz"))
-    )
-    try:
+        daily = (
+            hourly.groupBy(F.window(F.col("w"), "1 day").alias("d"))
+            .agg(
+                F.max("n").alias("peak_hourly"),
+                F.sum("n").alias("n_events"),
+                F.count(F.lit(1)).cast("long").alias("n_hours"),
+            )
+            .select(
+                F.expr(
+                    "timestampadd(MICROSECOND, unix_micros(d.start), "
+                    "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                ).alias("day_start"),
+                "peak_hourly",
+                "n_events",
+                "n_hours",
+            )
+            .filter(F.col("day_start") < F.lit("2024-06-01").cast("timestamp_ntz"))
+        )
         return run_to_table(daily, "append", spark)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 

@@ -111,12 +111,12 @@ def test_qround_matches_arithmetic(spark):
 
 @pytest.mark.slow
 def test_cached_queries_are_reinvocable(spark):
-    """Queries that persist/checkpoint intermediates across their own
-    lazy lifetime (the thread-scoped lifecycle slots of
-    q_dedup_minhash / with_seq / connected_components — see
-    streamz_postgres_spark.lifecycle — plus _SINK_DIRS) must return
-    identical results when invoked twice in one session — the second
-    call releases the first's frames, so this catches any
+    """Queries that hold scratch across their own lazy lifetime (the
+    thread-scoped slots of streamz_postgres_spark.lifecycle: persisted
+    frames of q_dedup_minhash / with_seq / connected_components, and
+    the scoped dirs and catalog tables of the staged-file keys) must
+    return identical results when invoked twice in one session — the
+    second call releases the first's scratch, so this catches any
     release-too-early regression."""
     from streamz_postgres_spark.registry import REGISTRY, _load_all
     from tests.conftest import SF_DIR
@@ -125,7 +125,10 @@ def test_cached_queries_are_reinvocable(spark):
     for key in ("q_zip_seq", "q_dedup_minhash", "q_dedup_clusters",
                 "q_stream_file_sink", "q_ngram_coverage",
                 "q_minhash_estimate", "q_dedup_incremental",
-                "q_cooccurrence_lift"):
+                "q_cooccurrence_lift", "q_partition_prune",
+                "q_schema_evolution", "q_join_bucketed",
+                "q_cdc_materialize", "q_cdc_time_travel",
+                "q_stream_transform_timers"):
         fn = REGISTRY[key].spark_fn
         first = fn(spark, SF_DIR)
         rows1 = sorted(map(tuple, first.collect()))

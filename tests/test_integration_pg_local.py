@@ -731,3 +731,19 @@ def test_sink_session_stderr_bounded_and_reaped_live(spark, fresh_table):
     assert proc.returncode is not None
     with pytest.raises(ChildProcessError):
         os.waitpid(proc.pid, os.WNOHANG)
+
+
+def test_loader_scratch_removed_when_collected_live(spark, fresh_table):
+    """A loader that is dropped without close() still removes its
+    scratch CSVs once it is collected."""
+    import gc
+    import os
+
+    _sql(fresh_table, "INSERT INTO t_cdc VALUES (1, 1.0, 'a'), (2, 2.0, 'b')")
+    ld = _loader(spark, fresh_table)
+    assert ld.snapshot().count() == 2
+    (path,) = ld._scratch
+    assert os.path.exists(path)
+    del ld
+    gc.collect()
+    assert not os.path.exists(path)
