@@ -342,26 +342,22 @@ class SparkStream:
             ''', select="user_id, match_no, n")
 
         ``clause`` is everything inside ``MATCH_RECOGNIZE (...)``;
-        ``select`` is the outer projection (default ``*``). The
-        frame is registered under a throwaway view name only long
-        enough for analysis — the returned plan holds the resolved
-        subtree, not the name."""
-        import uuid as _uuid
-
+        ``select`` is the outer projection (default ``*``). Both are
+        brace-escaped before the frame is bound, so a ``{2,4}``
+        quantifier or a ``{- -}`` exclusion reaches sqlext intact."""
         from streamz_postgres_spark import sqlext
 
-        view = f"__mr_{_uuid.uuid4().hex[:12]}"
-        spark = self.df.sparkSession
-        self.df.createOrReplaceTempView(view)
-        try:
-            out = sqlext.sql(
-                spark,
-                f"SELECT {select} FROM {view} "
-                f"MATCH_RECOGNIZE ({clause})",
+        def esc(text: str) -> str:
+            return text.replace("{", "{{").replace("}", "}}")
+
+        return self._wrap(
+            sqlext.sql(
+                self.df.sparkSession,
+                f"SELECT {esc(select)} FROM {{df}} "
+                f"MATCH_RECOGNIZE ({esc(clause)})",
+                df=self.df,
             )
-        finally:
-            spark.catalog.dropTempView(view)
-        return self._wrap(out)
+        )
 
     # -- sinks (streamz §2.1) ---------------------------------------------
 

@@ -1397,21 +1397,14 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys) — the clause is resolved at analysis time and leaves no
     runtime trace. MIN/MAX of doubles are exact (no accumulation
     order); COUNT casts pin the BIGINT type cross-engine."""
-    import uuid as _uuid
-
-    o = load_table(spark, sf_dir, "orders")
-    view = f"orders_{_uuid.uuid4().hex[:8]}"
-    o.createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""SELECT o_orderstatus,
-                       CAST(month(o_orderdate) AS INT) AS order_month,
-                       CAST(COUNT(*) AS BIGINT) AS n_orders,
-                       MIN(o_totalprice) AS min_price,
-                       MAX(o_totalprice) AS max_price
-                FROM {view}
-                GROUP BY ALL
-                ORDER BY ALL"""
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(
+        """SELECT o_orderstatus,
+                  CAST(month(o_orderdate) AS INT) AS order_month,
+                  CAST(COUNT(*) AS BIGINT) AS n_orders,
+                  MIN(o_totalprice) AS min_price,
+                  MAX(o_totalprice) AS max_price
+           FROM {orders}
+           GROUP BY ALL
+           ORDER BY ALL""",
+        orders=load_table(spark, sf_dir, "orders"),
+    )

@@ -773,9 +773,7 @@ def _doc_components(
     )
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Min-label propagation connected components.
 
     ``nodes``: one column ``vec_id``; ``pairs``: undirected edges as
@@ -886,7 +884,7 @@ def connected_components(
     # than the tiny shuffles they replaced — net ~1.7x slower). The
     # per-round floor here is job latency, which amortizes away at
     # real scale where each round moves real data.
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         prev_labels = labels
         nb = (
             edges.join(labels, edges["w"] == labels["vec_id"])

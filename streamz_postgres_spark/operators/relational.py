@@ -697,20 +697,14 @@ def q_columns_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload. The oracle is DuckDB's NATIVE COLUMNS (same
     native-cross-check pattern as q_qualify_sql); the anchored
     pattern keeps re/RE2 partial-match semantics identical."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"lineitem_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT COLUMNS('^l_.*(key|price|discount)$') FROM {view}
-                WHERE l_quantity < 5.0""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT COLUMNS('^l_.*(key|price|discount)$') FROM {lineitem}
+            WHERE l_quantity < 5.0""",
+        lineitem=load_table(spark, sf_dir, "lineitem"),
+    )
 
 
 @register(
@@ -733,19 +727,13 @@ def q_exclude_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata and scanning the whole corpus. The oracle is DuckDB's
     NATIVE ``* EXCLUDE`` (same native-cross-check pattern as
     q_qualify_sql/q_columns_sql)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"documents_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"SELECT * EXCLUDE (text) FROM {view} WHERE n_chars >= 400",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        "SELECT * EXCLUDE (text) FROM {documents} WHERE n_chars >= 400",
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 @register(
@@ -768,20 +756,14 @@ def q_replace_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     builders) stable while one column is normalized. The oracle is
     DuckDB's NATIVE ``* REPLACE`` (the native-cross-check pattern of
     the other star grammars)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"documents_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"SELECT * REPLACE (upper(lang) AS lang) FROM {view} "
-            "WHERE n_chars >= 400",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        "SELECT * REPLACE (upper(lang) AS lang) FROM {documents} "
+        "WHERE n_chars >= 400",
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # -- column entropy profile ---------------------------------------------------

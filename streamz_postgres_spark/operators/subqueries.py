@@ -120,29 +120,23 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     ecosystem's daily org-chart/bill-of-materials idiom
     (streamz_postgres users run it against live PG), so the engine
     owning it matters for drop-in parity."""
-    import uuid as _uuid
-
-    view = f"customer_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"""WITH RECURSIVE edges AS (
-              SELECT CAST(c_custkey AS INTEGER) AS node, c_name AS name,
-                     CASE WHEN c_custkey = 0 THEN NULL
-                          ELSE CAST(floor((c_custkey - 1) / 2.0)
-                               AS INTEGER)
-                     END AS parent
-              FROM {view}
-            ),
-            walk AS (
-              SELECT node, CAST(0 AS INTEGER) AS depth, name AS path
-              FROM edges WHERE parent IS NULL
-              UNION ALL
-              SELECT e.node, CAST(w.depth + 1 AS INTEGER) AS depth,
-                     w.path || '>' || e.name AS path
-              FROM edges e JOIN walk w ON e.parent = w.node
-            )
-            SELECT node, depth, path FROM walk ORDER BY node"""
+    return spark.sql(
+        """WITH RECURSIVE edges AS (
+          SELECT CAST(c_custkey AS INTEGER) AS node, c_name AS name,
+                 CASE WHEN c_custkey = 0 THEN NULL
+                      ELSE CAST(floor((c_custkey - 1) / 2.0)
+                           AS INTEGER)
+                 END AS parent
+          FROM {customer}
+        ),
+        walk AS (
+          SELECT node, CAST(0 AS INTEGER) AS depth, name AS path
+          FROM edges WHERE parent IS NULL
+          UNION ALL
+          SELECT e.node, CAST(w.depth + 1 AS INTEGER) AS depth,
+                 w.path || '>' || e.name AS path
+          FROM edges e JOIN walk w ON e.parent = w.node
         )
-    finally:
-        spark.catalog.dropTempView(view)
+        SELECT node, depth, path FROM walk ORDER BY node""",
+        customer=load_table(spark, sf_dir, "customer"),
+    )

@@ -1001,22 +1001,16 @@ def q_sample_by_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     and bare-column projections joining the grouping key. Semantics
     are exactly q_tumbling's; the native-SQL oracle checks the
     lowering end-to-end."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT event_type, count(*) AS n_events,
-                CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5)
-                     AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0 AS sum_value
-                FROM {view} SAMPLE BY 1h""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT event_type, count(*) AS n_events,
+            CAST(SUM(CAST(FLOOR(value * 1000000.0 + 0.5)
+                 AS DECIMAL(38,0))) AS DOUBLE) / 1000000.0 AS sum_value
+            FROM {events} SAMPLE BY 1h""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 # -- time-weighted average (TWAP) ---------------------------------------------

@@ -916,22 +916,16 @@ def q_distinct_on_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_latest_per_key; the oracle is DuckDB's NATIVE DISTINCT ON —
     checking the lowering against a real implementation of the
     idiom, exactly like q_asof_sql does for ASOF JOIN."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT DISTINCT ON (user_id)
-                user_id, event_id AS last_event, event_type AS last_type,
-                value AS last_value
-                FROM {view} ORDER BY user_id, event_id DESC""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT DISTINCT ON (user_id)
+            user_id, event_id AS last_event, event_type AS last_type,
+            value AS last_value
+            FROM {events} ORDER BY user_id, event_id DESC""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -958,22 +952,16 @@ def q_qualify_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     same native-cross-check pattern as q_asof_sql and
     q_distinct_on_sql. Deterministic top-3 via the event_id
     tiebreak."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT event_type, event_id, value
-                FROM {view}
-                QUALIFY row_number() OVER (PARTITION BY event_type
-                ORDER BY value DESC, event_id) <= 3""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT event_type, event_id, value
+            FROM {events}
+            QUALIFY row_number() OVER (PARTITION BY event_type
+            ORDER BY value DESC, event_id) <= 3""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1532,28 +1520,22 @@ def q_pattern_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counted pattern: a contiguous view -> clicks -> purchase run
     (V C* P), non-overlapping left-to-right on both regex engines.
     One keyed shuffle; 1 byte of string per event."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, seq_len, n_matches, matched
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  PATTERN (V C* P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, seq_len, n_matches, matched
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              PATTERN (V C* P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1595,29 +1577,23 @@ def q_pattern_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation would need a 4-way self-join. One keyed shuffle;
     the oracle is the same public encoding written independently in
     DuckDB (string_agg + RE2 bounds)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, seq_len, n_matches, matched
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN ((V | C){{2,4}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, seq_len, n_matches, matched
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN ((V | C){{2,4}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1676,34 +1652,28 @@ def q_pattern_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-derives the identical decomposition in DuckDB
     (regexp_split_to_array + list arithmetic), making per-match
     positions value-checked cross-engine, not just counts."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_rows, start_ts, end_ts
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS n_rows,
-                           FIRST(ts) AS start_ts,
-                           LAST(ts) AS end_ts
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_rows, start_ts, end_ts
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS n_rows,
+                       FIRST(ts) AS start_ts,
+                       LAST(ts) AS end_ts
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1763,34 +1733,28 @@ def q_pattern_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sorted struct array as q_pattern_measures, so
     MEASURES/MATCH_NUMBER read out unchanged. The oracle re-derives
     the identical per-position scan in DuckDB list arithmetic."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_rows, start_ts, end_ts
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS n_rows,
-                           FIRST(ts) AS start_ts,
-                           LAST(ts) AS end_ts
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP TO NEXT ROW
-                  PATTERN ((V | C){{1,3}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_rows, start_ts, end_ts
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS n_rows,
+                       FIRST(ts) AS start_ts,
+                       LAST(ts) AS end_ts
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP TO NEXT ROW
+              PATTERN ((V | C){{1,3}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1850,34 +1814,28 @@ def q_pattern_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition plus the per-row fan-out in DuckDB list
     arithmetic, value-checking per-row positions, classifiers, and
     timestamps cross-engine."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, rn, sym, row_ts
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS rn,
-                           CLASSIFIER() AS sym,
-                           LAST(ts) AS row_ts
-                  ALL ROWS PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no, rn""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, rn, sym, row_ts
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS rn,
+                       CLASSIFIER() AS sym,
+                       LAST(ts) AS row_ts
+              ALL ROWS PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no, rn""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -1924,29 +1882,23 @@ def q_pattern_permute(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-overlapping counting makes preference invisible anyway).
     Cites q_pattern_bounds (the aggregate form) and sqlext
     _parse_pattern (the expansion)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, seq_len, n_matches, matched
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (PERMUTE(V, C, P))
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, seq_len, n_matches, matched
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (PERMUTE(V, C, P))
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2023,35 +1975,29 @@ def q_pattern_symbol_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle re-derives positions AND the per-symbol filters in
     DuckDB list arithmetic (list_filter + generate_series + negative
     indexing), value-checking NULL placement cross-engine."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_clicks, first_view_ts,
-                       last_click_id
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(C.*) AS n_clicks,
-                           FIRST(V.ts) AS first_view_ts,
-                           LAST(C.event_id) AS last_click_id
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_clicks, first_view_ts,
+                   last_click_id
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(C.*) AS n_clicks,
+                       FIRST(V.ts) AS first_view_ts,
+                       LAST(C.event_id) AS last_click_id
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2138,33 +2084,27 @@ def q_pattern_prev(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle re-derives the identical nav column + decomposition
     in DuckDB; trough doubles are raw values read back (no
     arithmetic), so equality is exact."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_rows, n_down, trough
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS n_rows,
-                           COUNT(D.*) AS n_down,
-                           LAST(D.value) AS trough
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (D{{2,}} U{{2,}})
-                  DEFINE D AS value < PREV(value),
-                         U AS value > PREV(value)
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_rows, n_down, trough
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS n_rows,
+                       COUNT(D.*) AS n_down,
+                       LAST(D.value) AS trough
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (D{{2,}} U{{2,}})
+              DEFINE D AS value < PREV(value),
+                     U AS value > PREV(value)
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2246,36 +2186,30 @@ def q_pattern_agg_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed shuffle; arrays are O(match length)). The oracle
     re-derives the per-symbol value lists in DuckDB
     (list_filter -> list_transform -> list_sum/list_aggregate)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, sum_c_eid, avg_c_eid,
-                       min_c_val, max_c_val
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           SUM(C.event_id) AS sum_c_eid,
-                           AVG(C.event_id) AS avg_c_eid,
-                           MIN(C.value) AS min_c_val,
-                           MAX(C.value) AS max_c_val
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, sum_c_eid, avg_c_eid,
+                   min_c_val, max_c_val
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       SUM(C.event_id) AS sum_c_eid,
+                       AVG(C.event_id) AS avg_c_eid,
+                       MIN(C.value) AS min_c_val,
+                       MAX(C.value) AS max_c_val
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2348,36 +2282,30 @@ def q_pattern_skip_to(spark: SparkSession, sf_dir: str) -> DataFrame:
     comprehension, the same last-V resume arithmetic. Per-symbol
     ``COUNT(C.*)`` composes with the fold (same position-array
     read-out as the other measures keys)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_rows, n_clicks,
-                       start_ts, end_ts
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS n_rows,
-                           COUNT(C.*) AS n_clicks,
-                           FIRST(ts) AS start_ts,
-                           LAST(ts) AS end_ts
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP TO LAST V
-                  PATTERN (V C* V)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_rows, n_clicks,
+                   start_ts, end_ts
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS n_rows,
+                       COUNT(C.*) AS n_clicks,
+                       FIRST(ts) AS start_ts,
+                       LAST(ts) AS end_ts
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP TO LAST V
+              PATTERN (V C* V)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2452,39 +2380,33 @@ def q_pattern_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling measures keys (one keyed shuffle, O(match) arrays). The
     oracle re-derives the union as the same membership filter in
     DuckDB list arithmetic."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_eng, first_eng, last_eng,
-                       sum_eng_eid, min_eng_val, max_eng_val
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(E.*) AS n_eng,
-                           FIRST(E.event_id) AS first_eng,
-                           LAST(E.event_id) AS last_eng,
-                           SUM(E.event_id) AS sum_eng_eid,
-                           MIN(E.value) AS min_eng_val,
-                           MAX(E.value) AS max_eng_val
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P)
-                  SUBSET E = (V, C)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_eng, first_eng, last_eng,
+                   sum_eng_eid, min_eng_val, max_eng_val
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(E.*) AS n_eng,
+                       FIRST(E.event_id) AS first_eng,
+                       LAST(E.event_id) AS last_eng,
+                       SUM(E.event_id) AS sum_eng_eid,
+                       MIN(E.value) AS min_eng_val,
+                       MAX(E.value) AS max_eng_val
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P)
+              SUBSET E = (V, C)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2559,38 +2481,32 @@ def q_pattern_running_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; the per-row fan-out is the ALL ROWS contract, arrays
     are O(match). The oracle re-derives both scopes per emitted row
     in DuckDB list arithmetic."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, rn, fn, r_last_eid,
-                       f_last_eid, f_cls, r_sum_c, f_sum_c
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           RUNNING COUNT(*) AS rn,
-                           FINAL COUNT(*) AS fn,
-                           LAST(event_id) AS r_last_eid,
-                           FINAL LAST(event_id) AS f_last_eid,
-                           FINAL CLASSIFIER() AS f_cls,
-                           RUNNING SUM(C.event_id) AS r_sum_c,
-                           FINAL SUM(C.event_id) AS f_sum_c
-                  ALL ROWS PER MATCH
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no, rn""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, rn, fn, r_last_eid,
+                   f_last_eid, f_cls, r_sum_c, f_sum_c
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       RUNNING COUNT(*) AS rn,
+                       FINAL COUNT(*) AS fn,
+                       LAST(event_id) AS r_last_eid,
+                       FINAL LAST(event_id) AS f_last_eid,
+                       FINAL CLASSIFIER() AS f_cls,
+                       RUNNING SUM(C.event_id) AS r_sum_c,
+                       FINAL SUM(C.event_id) AS f_sum_c
+              ALL ROWS PER MATCH
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no, rn""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2650,34 +2566,28 @@ def q_pattern_anchors(spark: SparkSession, sf_dir: str) -> DataFrame:
     every aggregate-form pattern key (one keyed shuffle of 1-byte
     symbols). The oracle runs the identical anchored regex through
     the same DuckDB decomposition."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, n_rows, start_ts, end_ts
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS n_rows,
-                           FIRST(ts) AS start_ts,
-                           LAST(ts) AS end_ts
-                  ONE ROW PER MATCH
-                  AFTER MATCH SKIP PAST LAST ROW
-                  PATTERN (V C{{0,2}} P $)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, n_rows, start_ts, end_ts
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS n_rows,
+                       FIRST(ts) AS start_ts,
+                       LAST(ts) AS end_ts
+              ONE ROW PER MATCH
+              AFTER MATCH SKIP PAST LAST ROW
+              PATTERN (V C{{0,2}} P $)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2759,40 +2669,34 @@ def q_pattern_universal_measures(
     measures keys. The oracle re-derives both via DuckDB list
     slicing (out-of-range list indexes are NULL there, matching the
     CASE guards)."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, s_all, a_all, n_val,
-                       mn_val, mx_val, second_ts, penult_eid,
-                       second_click
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           SUM(event_id) AS s_all,
-                           AVG(event_id) AS a_all,
-                           COUNT(value) AS n_val,
-                           MIN(value) AS mn_val,
-                           MAX(value) AS mx_val,
-                           FIRST(ts, 1) AS second_ts,
-                           LAST(event_id, 1) AS penult_eid,
-                           FIRST(C.event_id, 1) AS second_click
-                  ONE ROW PER MATCH
-                  PATTERN (V C{{0,2}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, s_all, a_all, n_val,
+                   mn_val, mx_val, second_ts, penult_eid,
+                   second_click
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       SUM(event_id) AS s_all,
+                       AVG(event_id) AS a_all,
+                       COUNT(value) AS n_val,
+                       MIN(value) AS mn_val,
+                       MAX(value) AS mx_val,
+                       FIRST(ts, 1) AS second_ts,
+                       LAST(event_id, 1) AS penult_eid,
+                       FIRST(C.event_id, 1) AS second_click
+              ONE ROW PER MATCH
+              PATTERN (V C{{0,2}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no""",
+        events=load_table(spark, sf_dir, "events"),
+    )
 
 
 @register(
@@ -2855,30 +2759,24 @@ def q_pattern_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local on the already-fanned array — same single-keyed-
     shuffle plan as every pattern key. The oracle applies the same
     membership filter to the DuckDB per-row fan-out."""
-    import uuid as _uuid
-
     from streamz_postgres_spark import sqlext
 
-    view = f"events_{_uuid.uuid4().hex[:8]}"
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
-    try:
-        return sqlext.sql(
-            spark,
-            f"""SELECT user_id, match_no, rn, cls, eid
-                FROM {view}
-                MATCH_RECOGNIZE (
-                  PARTITION BY user_id
-                  ORDER BY ts, event_id
-                  MEASURES MATCH_NUMBER() AS match_no,
-                           COUNT(*) AS rn,
-                           CLASSIFIER() AS cls,
-                           LAST(event_id) AS eid
-                  ALL ROWS PER MATCH
-                  PATTERN (V {{- C{{1,2}} -}} P)
-                  DEFINE V AS event_type = 'view',
-                         C AS event_type = 'click',
-                         P AS event_type = 'purchase'
-                ) ORDER BY user_id, match_no, rn""",
-        )
-    finally:
-        spark.catalog.dropTempView(view)
+    return sqlext.sql(
+        spark,
+        """SELECT user_id, match_no, rn, cls, eid
+            FROM {events}
+            MATCH_RECOGNIZE (
+              PARTITION BY user_id
+              ORDER BY ts, event_id
+              MEASURES MATCH_NUMBER() AS match_no,
+                       COUNT(*) AS rn,
+                       CLASSIFIER() AS cls,
+                       LAST(event_id) AS eid
+              ALL ROWS PER MATCH
+              PATTERN (V {{- C{{1,2}} -}} P)
+              DEFINE V AS event_type = 'view',
+                     C AS event_type = 'click',
+                     P AS event_type = 'purchase'
+            ) ORDER BY user_id, match_no, rn""",
+        events=load_table(spark, sf_dir, "events"),
+    )

@@ -212,7 +212,8 @@ the reason):
   members must appear in PATTERN, and both duplicate members and
   duplicate union names are refused (as in the standard).
   One MATCH_RECOGNIZE per query, single named table, no JOIN/WHERE
-  (register a filtered view first); optional trailing ORDER BY.
+  (pass the filtered frame: ``sql(spark, "... FROM {t} ...",
+  t=df)``); optional trailing ORDER BY.
   Patterns that can match an EMPTY sequence (every term ``*``/``?``
   or ``{0,m}`` quantified) are refused: zero-width regex matches
   are counted engine-divergently (Java find loop vs RE2 global
@@ -227,8 +228,9 @@ Supported grammar (one ASOF join per query)::
     [<trailing clauses>]
 
 - ``left_table`` / ``right_table`` must be resolvable via
-  ``spark.table`` (tables or registered temp views; CTEs are NOT
-  supported — register a view instead, the error says so).
+  ``spark.table`` (tables, views, or frames bound as ``{name}``
+  placeholders; CTEs are NOT supported — bind the CTE body as a
+  frame instead, the error says so).
 - Both aliases are required, the equality must come first, and the
   time bound must lead with the left alias; its DIRECTION is the
   as-of direction (DuckDB convention): ``left >= right`` attaches
@@ -239,8 +241,8 @@ Supported grammar (one ASOF join per query)::
 
 Lowering: the two sides are joined with :func:`asof_join` (all
 non-key/non-ts right columns become right_values; the right
-timestamp surfaces as ``asof_ts``), the result is registered under a
-unique temp view, the ASOF clause is replaced by that view, and the
+timestamp surfaces as ``asof_ts``), the result is bound through the
+call's SQL formatter, the ASOF clause is replaced by its view, and the
 alias qualifiers are rewritten (``la.x`` -> ``x``; ``ra.rts`` ->
 ``asof_ts``) so the surrounding SELECT works unchanged. Output
 column names therefore match the library function exactly, which is
@@ -256,6 +258,7 @@ from itertools import permutations as _permutations
 from math import factorial as _factorial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.sql_formatter import SQLStringFormatter
 
 from streamz_postgres_spark.operators.joins import asof_join
 
@@ -1099,8 +1102,9 @@ def _lower_pattern(spark: SparkSession, query: str) -> DataFrame:
             "[SUBSET <U> = (<syms>), ...] "
             "DEFINE <S> AS "
             "<pred>[, ...]) [ORDER BY <cols>] (one table, "
-            "single-letter symbols, no WHERE/JOIN — register a "
-            "filtered view first)"
+            "single-letter symbols, no WHERE/JOIN — pass the "
+            "filtered frame instead: sql(spark, '... FROM {t} "
+            "MATCH_RECOGNIZE (...)', t=df))"
         )
     all_rows = (
         m.group("rpm") is not None
@@ -2015,7 +2019,8 @@ def _lower_qualify(spark: SparkSession, query: str) -> DataFrame:
             "grammar: SELECT <projections> FROM <table> [WHERE <pred>] "
             "QUALIFY row_number()|rank()|dense_rank() OVER (PARTITION BY "
             "<keys> ORDER BY <order>) =|<|<= <N> (one table, QUALIFY "
-            "last; register subqueries as temp views first)"
+            "last; pass a subquery's result as a frame: sql(spark, "
+            "'... FROM {t} ...', t=df))"
         )
     # collision-proof plumbing alias: the grammar places no
     # restriction on source column names, so a fixed "__q" would
@@ -2098,14 +2103,15 @@ def _resolve_single_table(
     if re.search(r"\bJOIN\b", query, re.IGNORECASE):
         raise ValueError(
             f"{feature} supports a single named table — no JOINs "
-            "(register the join as a temp view first)"
+            "(pass the joined frame instead: sql(spark, "
+            "'... FROM {t}', t=df))"
         )
     tmatch = re.search(r"\bFROM\s+(\w+)", query, re.IGNORECASE)
     if tmatch is None:
         raise ValueError(
-            f"{feature} needs FROM <table> (a named table or "
-            "registered temp view — CTEs/subqueries are not "
-            "supported)"
+            f"{feature} needs FROM <table> (a named table, or a "
+            "frame bound with sql(spark, '... FROM {t}', t=df) — "
+            "CTEs/subqueries are not supported)"
         )
     try:
         cols = spark.table(tmatch.group(1)).columns
@@ -2161,7 +2167,8 @@ def _lower_sample_by(spark: SparkSession, query: str) -> DataFrame:
             "SAMPLE BY present but the query does not match the supported "
             "grammar: SELECT <projections> FROM <table> [WHERE <pred>] "
             "SAMPLE BY <N><s|m|h|d> [ON <ts_col>] (one table, SAMPLE BY "
-            "last; register subqueries as temp views first)"
+            "last; pass a subquery's result as a frame: sql(spark, "
+            "'... FROM {t} ...', t=df))"
         )
     width = int(m.group("n")) * _UNIT_SEC[m.group("u").lower()]
     col = m.group("col") or "ts"
@@ -2200,7 +2207,7 @@ def _lower_sample_by(spark: SparkSession, query: str) -> DataFrame:
     return spark.sql(rewritten)
 
 
-def sql(spark: SparkSession, query: str) -> DataFrame:
+def sql(spark: SparkSession, query: str, **frames: DataFrame) -> DataFrame:
     """Run ``query``, lowering one supported extension clause —
     ASOF [LEFT] JOIN onto the library as-of join, SAMPLE BY onto an
     epoch-aligned bucket GROUP BY, DISTINCT ON / QUALIFY onto rank
@@ -2208,7 +2215,27 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
     list, * EXCLUDE onto a schema-validated * EXCEPT, * REPLACE
     onto a schema-resolved explicit projection, MATCH_RECOGNIZE onto
     the initials-string sequence matcher (module docstring has all
-    eight grammars)."""
+    eight grammars).
+
+    ``frames`` binds DataFrames to ``{name}`` placeholders exactly as
+    ``spark.sql(query, **frames)`` does: ``sql(spark, "SELECT ...
+    FROM {events} QUALIFY ...", events=df)``. With frames, literal
+    braces are written ``{{``/``}}`` (a ``{{2,4}}`` quantifier) and a
+    ``str`` value becomes a quoted SQL literal. Every view bound here
+    is dropped once the plan is analyzed — the plan holds the
+    resolved subtree, not the name."""
+    fmt = SQLStringFormatter(spark)
+    try:
+        if frames:
+            query = fmt.format(query, **frames)
+        return _lower(spark, query, fmt)
+    finally:
+        fmt.clear()
+
+
+def _lower(
+    spark: SparkSession, query: str, fmt: SQLStringFormatter
+) -> DataFrame:
     if re.search(r"\bMATCH_RECOGNIZE\b", query, re.IGNORECASE):
         return _lower_pattern(spark, query)
     if re.search(r"\bCOLUMNS\s*\(", query, re.IGNORECASE):
@@ -2230,8 +2257,9 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
                 "ASOF present but the clause does not match the supported "
                 "grammar: FROM <t> <a> ASOF [LEFT] JOIN <t> <a> ON "
                 "<a>.<k> = <a>.<k> AND <a>.<ts> {>=|<=} <a>.<ts> "
-                "(tables must be named views — register CTE bodies as "
-                "temp views first)"
+                "(tables must be named — pass CTE bodies as frames: "
+                "sql(spark, '... FROM {c} c ASOF JOIN {p} p ...', "
+                "c=df1, p=df2))"
             )
         return spark.sql(query)
     if len(matches) > 1:
@@ -2286,38 +2314,23 @@ def sql(spark: SparkSession, query: str) -> DataFrame:
         direction=direction,
     )
 
-    view = f"__asof_{uuid.uuid4().hex[:12]}"
-    joined.createOrReplaceTempView(view)
-    try:
-        rewritten = (
-            query[: m.start()] + f"FROM {view}" + query[m.end() :]
-        )
-        # right-alias refs: the right ts surfaces as asof_ts, the
-        # right KEY was renamed to the left key's name (different-
-        # name joins — r12 reviewer: the old rewrite stripped 'r.'
-        # and left a dangling/mis-bound bare right-key name), and
-        # everything else keeps its name. Left-alias refs keep
-        # their names. All substitutions skip single-quoted
-        # literals (same reviewer pass: a blanket sub corrupted
-        # literals containing '<alias>.').
+    # the joined frame is bound through the caller's formatter, so
+    # sql()'s fmt.clear() drops its view with the caller's own
+    view = fmt.format("{j}", j=joined)
+    rewritten = query[: m.start()] + f"FROM {view}" + query[m.end() :]
+    # right-alias refs: the right ts surfaces as asof_ts, the right
+    # KEY was renamed to the left key's name (different-name joins;
+    # stripping 'r.' alone would leave a dangling right-key name),
+    # and everything else keeps its name. Left-alias refs keep their
+    # names. All substitutions skip single-quoted literals, which
+    # may contain '<alias>.'.
+    rewritten = _sub_outside_literals(
+        rf"\b{ra}\.{rts}\b", "asof_ts", rewritten
+    )
+    if rk != lk:
         rewritten = _sub_outside_literals(
-            rf"\b{ra}\.{rts}\b", "asof_ts", rewritten
+            rf"\b{ra}\.{rk}\b", lk, rewritten
         )
-        if rk != lk:
-            rewritten = _sub_outside_literals(
-                rf"\b{ra}\.{rk}\b", lk, rewritten
-            )
-        rewritten = _sub_outside_literals(
-            rf"\b{ra}\.", "", rewritten
-        )
-        rewritten = _sub_outside_literals(
-            rf"\b{la}\.", "", rewritten
-        )
-        return spark.sql(rewritten)
-    finally:
-        # the analyzed plan holds the resolved subtree, not the view
-        # name (the MATCH_RECOGNIZE keys rely on the same property),
-        # so the throwaway view drops IMMEDIATELY — the old
-        # thread-slot lifecycle leaked one view per finished thread
-        # for the life of the session (r12 reviewer)
-        spark.catalog.dropTempView(view)
+    rewritten = _sub_outside_literals(rf"\b{ra}\.", "", rewritten)
+    rewritten = _sub_outside_literals(rf"\b{la}\.", "", rewritten)
+    return spark.sql(rewritten)

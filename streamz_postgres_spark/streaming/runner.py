@@ -109,23 +109,26 @@ def replay_events(
     )
 
 
+#: the flush row's event time, past the end of the events fixture
+_FLUSH_TS = "2024-06-01"
+
+
 @contextmanager
 def staged_replay_with_flush(
     spark: SparkSession,
     sf_dir: str,
     event_type: str = "__flush__",
-    flush_ts: str = "2024-06-01",
-    user_id: int = -1,
 ) -> Iterator[DataFrame]:
     """Events stream staged with one far-future flush row appended —
     the end-of-stream-flush idiom append-mode verification needs: the
-    flush row drags the watermark past every real row (so all real
-    windows / state rows emit), while its own window or null row
-    stays watermark-withheld forever. ``event_type`` controls which
-    branch filters the flush row survives (watermark nodes observe
-    the FILTERED stream after Catalyst pushdown — see
-    q_stream_join_full). A context manager: run the query inside the
-    ``with`` block; the staging dir is removed when it exits."""
+    flush row (user -1 at ``_FLUSH_TS``) drags the watermark past
+    every real row (so all real windows / state rows emit), while
+    its own window or null row stays watermark-withheld forever.
+    ``event_type`` controls which branch filters the flush row
+    survives (watermark nodes observe the FILTERED stream after
+    Catalyst pushdown — see q_stream_join_full). A context manager:
+    run the query inside the ``with`` block; the staging dir is
+    removed when it exits."""
     import pandas as _pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -137,14 +140,14 @@ def staged_replay_with_flush(
     ) as staging:
         shutil.copy(table_path(sf_dir, "events"), f"{staging}/events.parquet")
         unit = events_ts_unit(sf_dir)
-        flush_ns = int(_pd.Timestamp(flush_ts).value)
+        flush_ns = int(_pd.Timestamp(_FLUSH_TS).value)
         flush_val = flush_ns if unit == "ns" else flush_ns // 1000
         pq.write_table(
             pa.table(
                 {
                     "event_id": pa.array([-1], pa.int64()),
                     "ts": pa.array([flush_val], pa.timestamp(unit)),
-                    "user_id": pa.array([user_id], pa.int64()),
+                    "user_id": pa.array([-1], pa.int64()),
                     "event_type": pa.array([event_type], pa.string()),
                     "value": pa.array([0.0], pa.float64()),
                     "props": pa.array(["{}"], pa.string()),
@@ -159,9 +162,8 @@ def run_to_parquet_resumed(
     out: DataFrame,
     output_mode: str,
     spark: SparkSession,
-    passes: int = 2,
 ) -> DataFrame:
-    """Execute a streaming DataFrame through MULTIPLE availableNow
+    """Execute a streaming DataFrame through TWO availableNow
     runs over ONE checkpoint into a parquet sink, returning the
     accumulated result. Event-time TIMERS need this: availableNow
     fires timers expired by the final watermark in an extra
@@ -176,7 +178,7 @@ def run_to_parquet_resumed(
     thread's next call."""
     base = scoped_dir("run_to_parquet_resumed", "spark_resume_")
     data, ckpt = f"{base}/data", f"{base}/ckpt"
-    for _ in range(passes):
+    for _ in range(2):
         q = (
             out.writeStream.format("parquet")
             .option("path", data)

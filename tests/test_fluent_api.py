@@ -4,6 +4,7 @@ operator implementations."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from streamz_postgres_spark.api import SparkStream
@@ -256,8 +257,6 @@ def test_match_recognize_in_the_chain(spark):
     assert {t.name for t in spark.catalog.listTables()} == before
     # out-of-grammar input surfaces sqlext's refusal, not a Spark
     # parse error
-    import pytest
-
     with pytest.raises(ValueError, match="not supported"):
         SparkStream.from_dataframe(df).match_recognize(
             """PARTITION BY user_id ORDER BY event_id
@@ -266,3 +265,53 @@ def test_match_recognize_in_the_chain(spark):
                DEFINE V AS event_type = 'view',
                       P AS event_type = 'purchase'"""
         )
+
+
+@pytest.mark.parametrize(
+    "key, select, clause",
+    [
+        (
+            "q_pattern_bounds",
+            "user_id, seq_len, n_matches, matched",
+            """PARTITION BY user_id
+               ORDER BY ts, event_id
+               AFTER MATCH SKIP PAST LAST ROW
+               PATTERN ((V | C){2,4} P)
+               DEFINE V AS event_type = 'view',
+                      C AS event_type = 'click',
+                      P AS event_type = 'purchase'""",
+        ),
+        (
+            "q_pattern_exclusion",
+            "user_id, match_no, rn, cls, eid",
+            """PARTITION BY user_id
+               ORDER BY ts, event_id
+               MEASURES MATCH_NUMBER() AS match_no,
+                        COUNT(*) AS rn,
+                        CLASSIFIER() AS cls,
+                        LAST(event_id) AS eid
+               ALL ROWS PER MATCH
+               PATTERN (V {- C{1,2} -} P)
+               DEFINE V AS event_type = 'view',
+                      C AS event_type = 'click',
+                      P AS event_type = 'purchase'""",
+        ),
+    ],
+    ids=["q_pattern_bounds", "q_pattern_exclusion"],
+)
+def test_match_recognize_keeps_user_braces(spark, key, select, clause):
+    """A user's ``{n,m}`` quantifier and ``{- -}`` exclusion reach
+    sqlext intact through the fluent passthrough (the frame is bound
+    by brace formatting, so unescaped braces would be read as
+    placeholders): the rows equal the registry key's."""
+    from streamz_postgres_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    got = (
+        SparkStream.from_events(spark, SF_DIR)
+        .match_recognize(clause, select=select)
+        .sink_to_list()
+    )
+    want = REGISTRY[key].spark_fn(spark, SF_DIR).collect()
+    assert got
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))

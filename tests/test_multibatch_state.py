@@ -8,7 +8,6 @@ must still match the batch oracle exactly.
 
 from __future__ import annotations
 
-import tempfile
 from decimal import ROUND_HALF_EVEN, Decimal
 from typing import Iterator
 
@@ -27,8 +26,8 @@ from tests.conftest import SF_DIR
 pytestmark = pytest.mark.slow
 
 @pytest.fixture(scope="module")
-def split_dir(spark):
-    d = tempfile.mkdtemp(prefix="events_split_")
+def split_dir(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("events_split")
     # stable 4-way split by event_id range so batch order is defined
     e = load_table(spark, SF_DIR, "events")
     total = e.count()
@@ -443,20 +442,18 @@ def test_stream_scd2_versions_straddle_batches(spark, split_dir):
     assert got == exp
 
 
-def test_stream_lsh_pairs_straddle_batches(spark):
+def test_stream_lsh_pairs_straddle_batches(spark, tmp_path):
     """q_stream_dedup_ingest's bucket rosters must persist across
     micro-batches: a pair whose two documents arrive in DIFFERENT
     batches is emitted when the second lands. Split documents into 4
     files replayed one per trigger and require the collapsed pair
     set to equal the single-batch (whole-fixture) run."""
-    import tempfile
-
     from streamz_postgres_spark.streaming.queries import (
         _lsh_bucket_fold,
         _stream_minhash_sig,
     )
 
-    d = tempfile.mkdtemp(prefix="docs_split_")
+    d = tmp_path
     docs = load_table(spark, SF_DIR, "documents")
     total = docs.count()
     step = total // 4 + 1

@@ -40,11 +40,22 @@ def _engine_entries(tmp: str) -> list[str]:
     return sorted(e for e in os.listdir(tmp) if e.startswith(_engine_prefixes()))
 
 
+#: the only engine modules allowed each temp-view call: the public
+#: ``catalog.register_views`` (its views must outlive the call) and
+#: the memory sink of ``run_to_table``. Call-scoped views are bound
+#: as ``{name}`` frames through ``spark.sql`` / ``sqlext.sql``.
+_VIEW_OWNERS = {
+    "createOrReplaceTempView": "catalog.py",
+    "dropTempView": "runner.py",
+}
+
+
 def test_scratch_lifetime_has_one_owner():
     """Only lifecycle.py creates invocation-scoped dirs: no other
     engine module calls ``tempfile.mkdtemp`` (call-scoped scratch is a
     ``TemporaryDirectory``) or keeps a module-level ``_*_DIRS`` /
-    ``_*_LAYOUTS`` list of dirs to clean up later."""
+    ``_*_LAYOUTS`` list of dirs to clean up later. No engine module
+    pairs a temp view by hand outside ``_VIEW_OWNERS``."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "lifecycle.py":
@@ -57,6 +68,8 @@ def test_scratch_lifetime_has_one_owner():
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
                 if name == "mkdtemp":
                     offenders.append(f"{rel}:{node.lineno} calls mkdtemp")
+                if _VIEW_OWNERS.get(name, path.name) != path.name:
+                    offenders.append(f"{rel}:{node.lineno} calls {name}")
         for node in tree.body:
             targets = (
                 node.targets
@@ -84,6 +97,32 @@ def test_track_scoped_frees_checkpoint_blocks(spark):
     assert jsc.getPersistentRDDs().size() == before + 1
     lifecycle.release_scoped("test_ckpt")
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_sqlext_frames_dropped_when_analysis_fails(spark):
+    """A frame bound through ``sqlext.sql`` is dropped even when the
+    query fails analysis — on the plain path and on the ASOF path,
+    which binds its joined frame through the same formatter."""
+    from pyspark.errors import AnalysisException
+
+    from streamz_postgres_spark import sqlext
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    df = spark.createDataFrame([(1, 1)], "k int, ts int")
+    with pytest.raises(AnalysisException):
+        sqlext.sql(spark, "SELECT no_such_col FROM {t}", t=df)
+    with pytest.raises(AnalysisException):
+        sqlext.sql(
+            spark,
+            "SELECT l.no_such_col FROM {l} l ASOF JOIN {r} r "
+            "ON l.k = r.k AND l.ts >= r.ts",
+            l=df,
+            r=df.select("k", "ts"),
+        )
+    assert temp_views() == before
 
 
 @pytest.mark.parametrize("key", ["q_partition_prune", "q_stream_file_sink"])
@@ -129,6 +168,8 @@ _LEAK_KEYS = (
     "q_join_bucketed",
     "q_pagerank",
     "q_dedup_clusters",
+    "q_asof_sql",
+    "q_pattern_measures",
 )
 _ROUNDS = 5
 

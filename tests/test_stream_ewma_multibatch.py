@@ -7,8 +7,6 @@ bit-equality proves both state continuity and ordering."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -24,8 +22,8 @@ from tests.conftest import SF_DIR
 pytestmark = pytest.mark.slow
 
 @pytest.fixture(scope="module")
-def ewma_split_dir(spark):
-    d = tempfile.mkdtemp(prefix="events_ewma_split_")
+def ewma_split_dir(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("events_ewma_split")
     e = load_table(spark, SF_DIR, "events")
     total = e.count()
     step = total // 4 + 1
