@@ -45,24 +45,73 @@ def table_path(sf_dir: str, name: str) -> str:
 
 _SHIPPED: set[str] = set()
 
+#: SQL confs every engine call runs under, set by ``ship_package``
+#: and nowhere else:
+#: - the events fixture stores TIMESTAMP(NANOS), which Spark's reader
+#:   rejects; the engine reads nanos as LONG and rebuilds
+#:   TimestampNTZ (``load_table``, ``runner.replay_events``), so any
+#:   nanos-timestamp parquet read in the session yields LONG;
+#: - streaming state lives in RocksDB: transformWithState state uses
+#:   several column families, which only RocksDB supports, and every
+#:   stream key is tested and benchmarked on it.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
+
+#: state-store count of a new streaming query. Spark copies
+#: ``spark.sql.shuffle.partitions`` into this key when a query starts
+#: without it, and a resumed query reads the count from its
+#: checkpoint, whatever the key says. ``ship_package`` sets it to the
+#: session's shuffle partitions capped at the cores the application
+#: runs on: each state store costs a load and a commit per
+#: micro-batch, and a plain session's default of 200 shuffle
+#: partitions would make every stateful stream key pay it 200 times.
+STATE_PARTITIONS = "spark.sql.streaming.internal.stateStore.partitions"
+
 
 def ship_package(spark: SparkSession) -> None:
-    """Ship this package to the Python workers (addPyFile).
+    """Set up the engine's session and worker environment. Every
+    engine key reaches this before it builds a plan (through
+    ``load_table``, ``runner.replay_events`` or the documents stream),
+    so a caller's plain session needs nothing else.
 
-    Functions sent to executors (mapInPandas, applyInPandasWithState,
-    pandas UDFs) are pickled BY REFERENCE to their module, so workers
-    must be able to import ``streamz_postgres_spark`` — which is not
-    on their path when the driving process runs from another
-    directory. Zipping the package once per session and registering
-    it with addPyFile is the standard way to ship application code
-    to a cluster; locally it makes the engine location-independent.
+    On every call, the ``ENGINE_CONF`` SQL confs and
+    ``STATE_PARTITIONS``: SQL conf belongs to one ``SparkSession``,
+    and ``newSession()`` shares the application.
+
+    Once per application:
+
+    - the package goes to the Python workers (addPyFile). Functions
+      sent to executors (mapInPandas, applyInPandasWithState, pandas
+      UDFs) are pickled BY REFERENCE to their module, so workers must
+      be able to import ``streamz_postgres_spark``, which is not on
+      their path when the driving process runs from another
+      directory;
+    - this process can import ``google.protobuf`` (``protobuf_shim``);
+    - ``sc.environment["PYTHONPATH"]`` gains this library and, where
+      ``install()`` aliased it, the vendored protobuf runtime
+      (``protobuf_shim.worker_pythonpath``).
+      Spark copies ``sc.environment`` into each Python function when
+      the function is built, and the transformWithState schema-check
+      worker imports ``StateMessage_pb2`` and unpickles the processor
+      before any addPyFile archive is on its path.
     """
     import atexit
     import tempfile
     import zipfile
     from pathlib import Path
 
-    app_id = spark.sparkContext.applicationId
+    from streamz_postgres_spark import protobuf_shim
+
+    sc = spark.sparkContext
+    for key, value in ENGINE_CONF.items():
+        spark.conf.set(key, value)
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set(STATE_PARTITIONS, str(min(shuffle, sc.defaultParallelism)))
+    app_id = sc.applicationId
     if app_id in _SHIPPED:
         return
     pkg_dir = Path(__file__).resolve().parent
@@ -71,7 +120,11 @@ def ship_package(spark: SparkSession) -> None:
     with zipfile.ZipFile(zpath, "w") as z:
         for p in pkg_dir.rglob("*.py"):
             z.write(p, arcname=str(Path(pkg_dir.name) / p.relative_to(pkg_dir)))
-    spark.sparkContext.addPyFile(zpath)
+    sc.addPyFile(zpath)
+    protobuf_shim.install()
+    sc.environment["PYTHONPATH"] = protobuf_shim.worker_pythonpath(
+        sc.environment.get("PYTHONPATH")
+    )
     _SHIPPED.add(app_id)
     # executors RE-FETCH the zip from this original path on demand
     # (verified: deleting it immediately fails task fetches with
@@ -95,7 +148,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ship_package(spark)
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(table_path(sf_dir, name))
         if dict(df.dtypes).get("ts") == "bigint":
             # NTZ epoch + integer micros: pure NTZ arithmetic that

@@ -43,5 +43,10 @@ from streamz_postgres_spark.operators import (  # noqa: F401
 )
 
 # streaming/CDC operators register themselves too
-from streamz_postgres_spark.streaming import files as _streaming_files  # noqa: E402,F401
-from streamz_postgres_spark.streaming import queries as _streaming_queries  # noqa: E402,F401
+from streamz_postgres_spark.streaming import (  # noqa: E402,F401
+    cdc_live,
+    corpus_live,
+    files,
+    stateful,
+    windowed,
+)

@@ -13,12 +13,15 @@ function's env vars at UDF-creation time and applied when Spark
 spawns worker processes — including the one-shot TWS schema-check
 worker, which imports ``StateMessage_pb2`` before any user code runs
 (so installing from inside the stateful processor would be too late).
-``worker_pythonpath`` is therefore set around building the TWS query
-(see streaming/queries.py). On a real cluster, ship the repo (or just
-``_vendor/``) to executors and add it to
-``spark.executorEnv.PYTHONPATH`` — or simply ``pip install protobuf``
-there; a real install always wins because ``install()`` no-ops when
-``google.protobuf`` is already importable.
+``catalog.ship_package`` therefore runs ``install()`` and then
+prepends ``worker_pythonpath`` to ``sc.environment["PYTHONPATH"]``
+once per application, before any engine query is built. On a real
+cluster, ship the repo (or just ``_vendor/``) to executors and add it
+to ``spark.executorEnv.PYTHONPATH`` — or simply ``pip install
+protobuf`` there. A real install wins on the driver and the workers:
+``install()`` no-ops when ``google.protobuf`` is already importable,
+and ``worker_pythonpath`` adds the vendor dir only where ``install()``
+put it on this process's ``sys.path``.
 """
 
 from __future__ import annotations
@@ -58,19 +61,24 @@ def install() -> bool:
     try:
         importlib.import_module("google.protobuf")
     except (ImportError, ModuleNotFoundError):
+        sys.path.remove(VENDOR_DIR)
         return False
     return True
 
 
 def worker_pythonpath(existing: str | None = None) -> str:
-    """PYTHONPATH value that makes workers resolve BOTH the vendor
-    package and this library (prepended so they win over partial
-    installs). The library dir matters for the TWS driver-side
-    schema-check runner: it unpickles the stateful processor (whose
-    methods pickle by reference to this module) BEFORE any
-    addPyFile-shipped archive lands on its sys.path, so only
-    PYTHONPATH can make the import resolve — cwd-dependence here
-    broke the query whenever the driver ran outside the repo root."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    head = VENDOR_DIR + os.pathsep + repo_root
+    """PYTHONPATH value that makes workers resolve this library and,
+    where ``install()`` aliased the vendored runtime in this process,
+    the vendor package too (prepended so they win over partial
+    installs). The vendor dir is left out where a real protobuf is
+    importable: a vendor copy ahead of it would hide it. The library
+    dir matters for the TWS driver-side schema-check runner: it
+    unpickles the stateful processor (whose methods pickle by
+    reference to this module) BEFORE any addPyFile-shipped archive
+    lands on its sys.path, so only PYTHONPATH can make the import
+    resolve — cwd-dependence here broke the query whenever the
+    driver ran outside the repo root."""
+    head = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if VENDOR_DIR in sys.path:
+        head = VENDOR_DIR + os.pathsep + head
     return head + (os.pathsep + existing if existing else "")

@@ -100,7 +100,7 @@ def is_live(key: str) -> bool:
 # evidence.
 #: Keys that register only when the environment supports them (the
 #: transformWithStateInPandas queries need a protobuf runtime — see
-#: streaming.queries._protobuf_available). They stay listed in
+#: protobuf_shim.available). They stay listed in
 #: DRIVER_PRIORITY so their exposure position is decided, but on a
 #: protobuf-less environment they are absent from the live registry
 #: and tests/test_registry.py exempts exactly this set.

@@ -38,25 +38,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # ENGINE-WIDE, by design: the events fixture stores
-        # TIMESTAMP(NANOS), which Spark's reader rejects; the engine
-        # reads nanos as LONG everywhere and rebuilds TimestampNTZ
-        # (catalog.load_table / streaming.runner.replay_events).
-        # Consequence: any nanos-timestamp parquet read in this
-        # session yields LONG, not an error. Declared here at build
-        # time so that's a documented engine property; the two read
-        # sites re-assert it only because the external driver supplies
-        # its own plain session.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Streaming: bounded-replay tests need a deterministic store.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
         .config("spark.ui.enabled", "false")
     )
+    # the engine's own SQL confs (catalog.ENGINE_CONF) are not set
+    # here: catalog.ship_package sets them on every engine call, in
+    # this session as in a caller's plain one
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,8 +1,7 @@
 """CDC consumer queries (driving sources/cdc.py) and live dimension
 maintenance: envelope round-trip, latest-wins apply with deletes,
 snapshot diffing, materialization, and the streaming SCD2 / as-of
-enrichment twins (split from streaming/queries.py in round 7 —
-registry keys unchanged).
+enrichment twins.
 """
 
 from __future__ import annotations

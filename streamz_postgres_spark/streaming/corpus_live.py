@@ -1,7 +1,6 @@
 """Live corpus / analytics streaming operators: ingestion-time dedup,
 contamination and mixture guards, mergeable sketches, continuous
-rollups and windowed percentiles (split from streaming/queries.py in
-round 7 — registry keys unchanged).
+rollups and windowed percentiles.
 """
 
 from __future__ import annotations
@@ -447,9 +446,8 @@ def _lsh_bucket_fold(
 def _streaming_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as an unbounded stream (schema pinned from
     the batch catalog read)."""
-    from streamz_postgres_spark.catalog import load_table, ship_package
+    from streamz_postgres_spark.catalog import load_table
 
-    ship_package(spark)
     schema = load_table(spark, sf_dir, "documents").schema
     return (
         spark.readStream.schema(schema)

@@ -90,9 +90,7 @@ def replay_events(
             .option("pathGlobFilter", glob)
             .load(src)
         )
-    # legacy nanos fixture: engine-wide conf (see session.get_spark);
-    # re-asserted because the external driver supplies its own session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # legacy nanos fixture: read as long (catalog.ENGINE_CONF)
     raw = (
         spark.readStream.schema(_events_schema(T.LongType()))
         .format("parquet")

@@ -1,16 +1,15 @@
 """Custom stateful streaming operators: transformWithState processors
-and applyInPandasWithState folds (split from streaming/queries.py in
-round 7 — registry keys unchanged).
+and applyInPandasWithState folds.
 
-The transformWithStateInPandas queries register only when a protobuf
-runtime is importable (see _protobuf_available / GATED_KEYS in the
-registry); _tws_environment pins the worker environment all five TWS
-queries share.
+The six transformWithStateInPandas queries register only when a
+protobuf runtime is importable (``protobuf_shim.available``;
+GATED_KEYS in the registry). Their worker environment and RocksDB
+state store are set by ``catalog.ship_package``, which every query
+reaches through its source.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from decimal import ROUND_HALF_EVEN, Decimal
 from typing import Iterator
 
@@ -19,14 +18,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+from streamz_postgres_spark import protobuf_shim
 from streamz_postgres_spark.catalog import load_table
 from streamz_postgres_spark.functions.numeric import micro6, sql_dsum
 from streamz_postgres_spark.registry import register
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
 
-class _UserTotalsProcessor:
+class _UserTotalsProcessor(StatefulProcessor):
     """transformWithState processor: per-key (count, exact decimal
     sum) in a ValueState, emitting the updated totals per batch —
     the Spark 4 successor to applyInPandasWithState and the richest
@@ -40,11 +41,6 @@ class _UserTotalsProcessor:
             StructType,
         )
 
-        # first point our code runs inside the worker: make the pb2
-        # runtime importable before any state-server call needs it
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         self._state = handle.getValueState(
             "totals",
             StructType(
@@ -86,61 +82,6 @@ class _UserTotalsProcessor:
         pass
 
 
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas speaks protobuf to the JVM; the
-    query registers when a runtime is importable OR alias-able from
-    the system's vendored pure-Python copy (protobuf_shim.py);
-    applyInPandasWithState covers arbitrary streaming state
-    regardless, see q_stream_accumulate."""
-    from streamz_postgres_spark.protobuf_shim import available
-
-    return available()
-
-
-@contextmanager
-def _tws_environment(spark: SparkSession) -> Iterator[None]:
-    """Scope the transformWithStateInPandas execution environment to
-    one query, shared by all five TWS queries:
-
-    - vendored protobuf runtime + this library on the WORKER
-      PYTHONPATH (``sc.environment`` is captured at UDF creation
-      inside transformWithStateInPandas, and the TWS schema-check
-      worker touches pb2 before any user code runs);
-    - the RocksDB state-store provider (TWS state uses multiple
-      column families, which only RocksDB supports; the engine
-      session pins it globally but the external driver's plain
-      session does not).
-
-    Both are restored to the caller's values on exit — unset confs
-    read via ``conf.get(key, None)`` so nothing but genuinely-unset
-    is swallowed."""
-    from streamz_postgres_spark.protobuf_shim import install, worker_pythonpath
-
-    if not install():  # pragma: no cover - registration already gated
-        raise RuntimeError("no protobuf runtime available")
-    env = spark.sparkContext.environment
-    prev = env.get("PYTHONPATH")
-    env["PYTHONPATH"] = worker_pythonpath(prev)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider"
-    )
-    prev_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, rocksdb)
-    try:
-        yield
-    finally:
-        if prev is None:
-            env.pop("PYTHONPATH", None)
-        else:
-            env["PYTHONPATH"] = prev
-        if prev_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev_provider)
-
-
 def _latest_totals(tbl: DataFrame) -> DataFrame:
     """Collapse an update-mode memory-sink totals table to the LAST
     emission per user. The memory sink appends each micro-batch's
@@ -173,47 +114,26 @@ GROUP BY user_id
 """
 
 
-def _tws_class(name: str, impl: type):
-    """Build the StatefulProcessor subclass from a plain impl class
-    by copying its namespace WITHOUT the '__dict__'/'__weakref__'
-    getset descriptors (r12 reviewer, reproduced: copying them makes
-    any Python-level instance.__dict__ access raise TypeError — it
-    only worked because CPython 3.11's C-level pickling path bypasses
-    the descriptor)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-    )
-
-    ns = {
-        k: v
-        for k, v in impl.__dict__.items()
-        if k not in ("__dict__", "__weakref__")
-    }
-    return type(name, (StatefulProcessor,), ns)
-
-
 def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user totals via transformWithStateInPandas (Spark 4 typed
     arbitrary state): ValueState holds (count, exact decimal sum) so
     the emitted doubles match the oracle's decimal aggregation
     exactly. State is O(1) per key and survives across batches via
     the RocksDB store."""
-    cls = _tws_class("UserTotalsProcessor", _UserTotalsProcessor)
     # NULL grouping keys are excluded from every tws query — the
     # pyspark tws key grouping is partition-layout-dependent for a
     # NULL key (see the _TWS_ORACLE note); the oracle filters too
     s = replay_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-    with _tws_environment(spark):
-        out = s.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType="user_id long, n_events long, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        return _latest_totals(run_to_table(out, "update", spark))
+    out = s.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_UserTotalsProcessor(),
+        outputStructType="user_id long, n_events long, sum_value double",
+        outputMode="Update",
+        timeMode="None",
+    )
+    return _latest_totals(run_to_table(out, "update", spark))
 
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_transform_state",
         oracle=_TWS_ORACLE,
@@ -466,7 +386,7 @@ def q_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- transformWithState: typed ListState ------------------------------------
 
 
-class _RecentEventsProcessor:
+class _RecentEventsProcessor(StatefulProcessor):
     """transformWithState processor holding each user's LAST-3 events
     in a typed ListState — the bounded-buffer shape (recent-activity
     feeds, small replay caches) that ValueState can't express and
@@ -482,9 +402,6 @@ class _RecentEventsProcessor:
             StructType,
         )
 
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         self._recent = handle.getListState(
             "recent",
             StructType(
@@ -534,27 +451,24 @@ class _RecentEventsProcessor:
 
 def q_stream_transform_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-3 events per user via transformWithState ListState (see
-    _RecentEventsProcessor). Environment pinning via
-    _tws_environment. The sink is collapsed to the last emission per
+    _RecentEventsProcessor). The sink is collapsed to the last emission per
     user (largest trailing id in ``recent_ids`` — the max event_id
     seen so far, monotone across batches) so a multi-file fixture's
     per-batch cumulative re-emissions can't leave stale rows."""
-    cls = _tws_class("RecentEventsProcessor", _RecentEventsProcessor)
     # NULL grouping keys are excluded from every tws query — the
     # pyspark tws key grouping is partition-layout-dependent for a
     # NULL key (see the _TWS_ORACLE note); the oracle filters too
     s = replay_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-    with _tws_environment(spark):
-        out = s.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=(
-                "user_id long, ver long, n_recent long, "
-                "recent_ids string, recent_sum double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    out = s.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_RecentEventsProcessor(),
+        outputStructType=(
+            "user_id long, ver long, n_recent long, "
+            "recent_ids string, recent_sum double"
+        ),
+        outputMode="Update",
+        timeMode="None",
+    )
+    tbl = run_to_table(out, "update", spark)
     # collapse on the strictly-increasing emission counter (see the
     # processor): the latest emission per key, never an id tie
     latest = tbl.groupBy("user_id").agg(
@@ -588,7 +502,7 @@ FROM last3
 GROUP BY user_id
 """
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_transform_list",
         oracle=_TWS_LIST_ORACLE,
@@ -599,7 +513,7 @@ if _protobuf_available():  # pragma: no cover - depends on environment
 # -- transformWithState: typed MapState -------------------------------------
 
 
-class _TypeCountsProcessor:
+class _TypeCountsProcessor(StatefulProcessor):
     """transformWithState processor keeping per-user event-type
     counts in a typed MapState — the keyed-substate shape (counters
     per category, per-device cursors) that completes the typed-state
@@ -615,9 +529,6 @@ class _TypeCountsProcessor:
             StructType,
         )
 
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         self._counts = handle.getMapState(
             "type_counts",
             StructType([StructField("event_type", StringType())]),
@@ -660,24 +571,20 @@ def q_stream_transform_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(user, event-type) counts via transformWithState MapState
     (see _TypeCountsProcessor); emitted per batch from the map, so
     the sink holds the complete per-user breakdown after replay.
-    Environment pinning via _tws_environment; per-(user, type) counts
+    Per-(user, type) counts
     are monotone, so the max per key is the final state even when a
     multi-file fixture replays as several batches."""
-    cls = _tws_class("TypeCountsProcessor", _TypeCountsProcessor)
     # NULL grouping keys are excluded from every tws query — the
     # pyspark tws key grouping is partition-layout-dependent for a
     # NULL key (see the _TWS_ORACLE note); the oracle filters too
     s = replay_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-    with _tws_environment(spark):
-        out = s.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=(
-                "user_id long, event_type string, n_events long"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    out = s.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_TypeCountsProcessor(),
+        outputStructType="user_id long, event_type string, n_events long",
+        outputMode="Update",
+        timeMode="None",
+    )
+    tbl = run_to_table(out, "update", spark)
     return tbl.groupBy("user_id", "event_type").agg(
         F.max("n_events").alias("n_events")
     )
@@ -690,7 +597,7 @@ WHERE user_id IS NOT NULL
 GROUP BY user_id, event_type
 """
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_transform_map",
         oracle=_TWS_MAP_ORACLE,
@@ -701,7 +608,7 @@ if _protobuf_available():  # pragma: no cover - depends on environment
 # -- transformWithState: event-time timers ----------------------------------
 
 
-class _InactivityFlushProcessor:
+class _InactivityFlushProcessor(StatefulProcessor):
     """transformWithState processor that emits a user's totals ONLY
     when the user goes quiet: every batch folds rows into ValueState
     and (re)arms an event-time timer 30 minutes past the user's last
@@ -719,9 +626,6 @@ class _InactivityFlushProcessor:
             StructType,
         )
 
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         self._handle = handle
         self._state = handle.getValueState(
             "totals",
@@ -788,13 +692,12 @@ def q_stream_transform_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     user emits exactly once; the flush row's own key is dropped
     after the stateful operator (filtering it before would also
     remove it from the watermark node, the documented pushdown
-    trap). Environment pinning via _tws_environment."""
+    trap)."""
     from streamz_postgres_spark.streaming.runner import (
         run_to_parquet_resumed,
         staged_replay_with_flush,
     )
 
-    cls = _tws_class("InactivityFlushProcessor", _InactivityFlushProcessor)
     with staged_replay_with_flush(spark, sf_dir) as s:
         micros = F.expr(
             "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
@@ -805,50 +708,47 @@ def q_stream_transform_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts_evt", F.timestamp_micros(micros))
             .withWatermark("ts_evt", "0 seconds")
         )
-        with _tws_environment(spark):
-            out = src.groupBy("user_id").transformWithStateInPandas(
-                statefulProcessor=cls(),
-                outputStructType=(
-                    "user_id long, n_events long, sum_value double"
-                ),
-                outputMode="Update",
-                timeMode="EventTime",
-            ).filter(
-                # drop the staged flush sentinel (negative uid);
-                # NULL keys never reach here — excluded upstream per
-                # the tws NULL-key boundary (_TWS_ORACLE note)
-                F.col("user_id") >= 0
-            )
-            # two availableNow runs over one checkpoint: the second
-            # fires any timer whose end-of-stream expiry batch lost
-            # the termination race (observed ~1/10 under load);
-            # state checkpointing keeps the union exactly-once.
-            # Sink mode is append (parquet supports nothing else);
-            # the operator's Update mode is independent. The
-            # read-out SUMS per-user rows instead of assuming one:
-            # a replay split with a >30-minute intra-user event-time
-            # gap legitimately fires the inactivity flush mid-stream
-            # and the user re-accumulates — two disjoint SEGMENTS
-            # whose totals add to the full history (r12 reviewer;
-            # one row per user remains the in-order single-gap
-            # case). Segment sums re-quantize through the micro6
-            # rule so the double addition stays exact.
-            raw = run_to_parquet_resumed(out, "append", spark)
-            return raw.groupBy("user_id").agg(
-                F.sum("n_events").alias("n_events"),
-                (
-                    F.sum(
-                        F.floor(
-                            F.col("sum_value") * F.lit(1e6)
-                            + F.lit(0.5)
-                        ).cast("decimal(38,0)")
-                    ).cast("double")
-                    / F.lit(1e6)
-                ).alias("sum_value"),
-            )
+        out = src.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=_InactivityFlushProcessor(),
+            outputStructType="user_id long, n_events long, sum_value double",
+            outputMode="Update",
+            timeMode="EventTime",
+        ).filter(
+            # drop the staged flush sentinel (negative uid);
+            # NULL keys never reach here — excluded upstream per
+            # the tws NULL-key boundary (_TWS_ORACLE note)
+            F.col("user_id") >= 0
+        )
+        # two availableNow runs over one checkpoint: the second
+        # fires any timer whose end-of-stream expiry batch lost
+        # the termination race (observed ~1/10 under load);
+        # state checkpointing keeps the union exactly-once.
+        # Sink mode is append (parquet supports nothing else);
+        # the operator's Update mode is independent. The
+        # read-out SUMS per-user rows instead of assuming one:
+        # a replay split with a >30-minute intra-user event-time
+        # gap legitimately fires the inactivity flush mid-stream
+        # and the user re-accumulates — two disjoint SEGMENTS
+        # whose totals add to the full history (one row per
+        # user remains the in-order single-gap case). Segment
+        # sums re-quantize through the micro6
+        # rule so the double addition stays exact.
+        raw = run_to_parquet_resumed(out, "append", spark)
+        return raw.groupBy("user_id").agg(
+            F.sum("n_events").alias("n_events"),
+            (
+                F.sum(
+                    F.floor(
+                        F.col("sum_value") * F.lit(1e6)
+                        + F.lit(0.5)
+                    ).cast("decimal(38,0)")
+                ).cast("double")
+                / F.lit(1e6)
+            ).alias("sum_value"),
+        )
 
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_transform_timers",
         oracle=_TWS_ORACLE,
@@ -859,7 +759,7 @@ if _protobuf_available():  # pragma: no cover - depends on environment
 # -- transformWithState: initial state bootstrap -----------------------------
 
 
-class _WarmStartTotalsProcessor:
+class _WarmStartTotalsProcessor(StatefulProcessor):
     """transformWithState processor warm-started from a batch
     snapshot: handleInitialState seeds each key's ValueState with
     pre-aggregated (count, exact decimal sum) BEFORE the first
@@ -877,9 +777,6 @@ class _WarmStartTotalsProcessor:
             StructType,
         )
 
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         self._state = handle.getValueState(
             "totals",
             StructType(
@@ -950,9 +847,7 @@ def q_stream_transform_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the processor (which emits on input) never surfaces them; the
     read side unions their seeded totals back in via a left-anti join
     — the snapshot-∪-live serving pattern — so parity holds for ANY
-    fixture, not just ones where every user has a live row.
-    Environment pinning via _tws_environment."""
-    cls = _tws_class("WarmStartTotalsProcessor", _WarmStartTotalsProcessor)
+    fixture, not just ones where every user has a live row."""
     hist = (
         load_table(spark, sf_dir, "events")
         # seed side matches the stream's NULL-tws-key exclusion
@@ -976,17 +871,14 @@ def q_stream_transform_init(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NULL tws grouping keys excluded, see the _TWS_ORACLE note
         (F.col("event_id") % 10 >= 3) & F.col("user_id").isNotNull()
     )
-    with _tws_environment(spark):
-        out = s.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=(
-                "user_id long, n_events long, sum_value double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-            initialState=hist.groupBy("user_id"),
-        )
-        streamed = _latest_totals(run_to_table(out, "update", spark))
+    out = s.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_WarmStartTotalsProcessor(),
+        outputStructType="user_id long, n_events long, sum_value double",
+        outputMode="Update",
+        timeMode="None",
+        initialState=hist.groupBy("user_id"),
+    )
+    streamed = _latest_totals(run_to_table(out, "update", spark))
     # snapshot-only keys: serve the seed directly (same decimal->
     # double conversion the processor applies on emission)
     absent = hist.join(
@@ -1009,7 +901,7 @@ def q_stream_transform_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streamed.unionByName(absent)
 
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_transform_init",
         oracle=_TWS_ORACLE,
@@ -1021,7 +913,7 @@ if _protobuf_available():  # pragma: no cover - depends on environment
 # -- transformWithState: streaming exact percentiles via ListState ----------
 
 
-class _PercentileProcessor:
+class _PercentileProcessor(StatefulProcessor):
     """transformWithState processor maintaining each event-type's
     full value multiset in a typed ListState and emitting exact
     p50/p90 per micro-batch. Percentile indices are PURE INTEGER
@@ -1045,9 +937,6 @@ class _PercentileProcessor:
             StructType,
         )
 
-        from streamz_postgres_spark.protobuf_shim import install
-
-        install()
         # value-only state: each element is exactly the 8 bytes the
         # percentile needs — order comes from sorting, never arrival
         self._vals = handle.getListState(
@@ -1087,23 +976,20 @@ def q_stream_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — the latency-dashboard shape where approximate
     sketches need a correctness baseline. The sink is collapsed to
     the last emission per key (n_events is monotone across batches),
-    so multi-file fixtures can't leave stale rows. Environment
-    pinning via _tws_environment."""
-    cls = _tws_class("PercentileProcessor", _PercentileProcessor)
+    so multi-file fixtures can't leave stale rows."""
     # NULL tws grouping keys excluded, see the _TWS_ORACLE note
     s = replay_events(spark, sf_dir).filter(
         F.col("event_type").isNotNull()
     )
-    with _tws_environment(spark):
-        out = s.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=(
-                "event_type string, n_events long, p50 double, p90 double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    out = s.groupBy("event_type").transformWithStateInPandas(
+        statefulProcessor=_PercentileProcessor(),
+        outputStructType=(
+            "event_type string, n_events long, p50 double, p90 double"
+        ),
+        outputMode="Update",
+        timeMode="None",
+    )
+    tbl = run_to_table(out, "update", spark)
     latest = tbl.groupBy("event_type").agg(
         F.max_by(F.struct("n_events", "p50", "p90"), F.col("n_events")).alias(
             "s"
@@ -1131,7 +1017,7 @@ SELECT event_type, n_events,
 FROM s
 """
 
-if _protobuf_available():  # pragma: no cover - depends on environment
+if protobuf_shim.available():  # pragma: no cover - depends on environment
     register(
         "q_stream_percentile",
         oracle=_TWS_PCTL_ORACLE,

@@ -51,6 +51,26 @@ def batch_plan_summaries(spark):
         yield key, explain_summary(REGISTRY[key].spark_fn(spark, SF_DIR))
 
 
+class FakeGroupState:
+    """Duck-typed applyInPandasWithState GroupState for driving a fold
+    directly: ``exists`` and ``get`` are PROPERTIES, as on the real
+    one, and ``update`` stores the tuple."""
+
+    def __init__(self, value=None):
+        self._value = value
+
+    @property
+    def exists(self):
+        return self._value is not None
+
+    @property
+    def get(self):
+        return self._value
+
+    def update(self, value):
+        self._value = value
+
+
 @pytest.fixture(scope="session")
 def spark():
     yield spark_session()

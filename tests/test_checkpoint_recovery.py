@@ -167,18 +167,17 @@ def test_tws_restart_resumes_typed_state(spark, dirs):
     """transformWithState recovery: the typed ValueState family must
     survive a stop/restart boundary through the RocksDB checkpoint
     exactly like applyInPandasWithState's tuple state — same
-    delta-only + state-resumed asserts, exercised through the
-    protobuf/RocksDB environment pinning (_tws_environment)."""
-    from streamz_postgres_spark.streaming.queries import (
-        _protobuf_available,
-        _tws_environment,
-        _UserTotalsProcessor,
-    )
+    delta-only + state-resumed asserts. The source is a plain
+    readStream, so the test sets the engine environment itself
+    (``ship_package``: worker PYTHONPATH, RocksDB provider)."""
+    from streamz_postgres_spark.catalog import ship_package
+    from streamz_postgres_spark.protobuf_shim import available
+    from streamz_postgres_spark.streaming.stateful import _UserTotalsProcessor
 
-    if not _protobuf_available():
+    if not available():
         pytest.skip("protobuf not installed: transformWithState gated off")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+    ship_package(spark)
     src, sink = dirs
     data, ckpt = os.path.join(sink, "data"), os.path.join(sink, "ckpt")
     t = pq.read_table(
@@ -187,32 +186,23 @@ def test_tws_restart_resumes_typed_state(spark, dirs):
     )
     half = t.num_rows // 2
 
-    cls = type(
-        "UserTotalsProcessor",
-        (StatefulProcessor,),
-        dict(_UserTotalsProcessor.__dict__),
-    )
-
     def run_available_now():
         s = spark.readStream.schema(_SCHEMA).parquet(src)
-        with _tws_environment(spark):
-            out = s.groupBy("user_id").transformWithStateInPandas(
-                statefulProcessor=cls(),
-                outputStructType=(
-                    "user_id long, n_events long, sum_value double"
-                ),
-                outputMode="Update",
-                timeMode="None",
-            )
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", data)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        out = s.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=_UserTotalsProcessor(),
+            outputStructType="user_id long, n_events long, sum_value double",
+            outputMode="Update",
+            timeMode="None",
+        )
+        q = (
+            out.writeStream.format("parquet")
+            .option("path", data)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     pq.write_table(t.slice(0, half), f"{src}/a.parquet")
     run_available_now()
@@ -256,7 +246,7 @@ def test_kll_restart_resumes_sketch_state(spark, dirs):
     file-b counts) and its p50 estimate must sit within the ledger
     of the full-data exact rank — the sketch keeps its guarantee
     across the crash boundary, not just within one run."""
-    from streamz_postgres_spark.streaming.queries import _kll_fold
+    from streamz_postgres_spark.streaming.stateful import _kll_fold
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -326,3 +316,46 @@ def test_kll_restart_resumes_sketch_state(spark, dirs):
         le = sum(1 for v in sv if v <= r.p50_est)
         dist = max(0, lt + 1 - target, target - le)
         assert dist <= r.err_bound, (r.event_type, dist, r.err_bound)
+
+
+def test_resumed_query_keeps_state_partition_count(spark, dirs):
+    """``ship_package`` sizes a new query's state stores from the
+    session (its shuffle partitions, capped at the application's
+    cores). A query resumed from its checkpoint keeps the count it
+    started with, whatever the session says by then, so its state
+    stays readable."""
+    from streamz_postgres_spark.catalog import STATE_PARTITIONS, ship_package
+
+    src, sink = dirs
+    ckpt = os.path.join(sink, "ckpt")
+    t = pq.read_table(
+        table_path(SF_DIR, "events"), columns=["event_id", "user_id", "value"]
+    )
+    half = t.num_rows // 2
+    cores = spark.sparkContext.defaultParallelism
+
+    def run_available_now(shuffle):
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+        ship_package(spark)
+        s = spark.readStream.schema(_SCHEMA).parquet(src)
+        q = (
+            s.groupBy("user_id").count()
+            .writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        (op,) = q.lastProgress["stateOperators"]
+        return int(spark.conf.get(STATE_PARTITIONS)), op["numStateStoreInstances"]
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        pq.write_table(t.slice(0, half), f"{src}/a.parquet")
+        assert run_available_now(1000) == (cores, cores)
+        pq.write_table(t.slice(half), f"{src}/b.parquet")
+        assert run_available_now(1) == (1, cores)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        ship_package(spark)

@@ -18,12 +18,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from streamz_postgres_spark.catalog import load_table
+from streamz_postgres_spark.protobuf_shim import available
 from streamz_postgres_spark.streaming.runner import run_to_table
-from tests.conftest import SF_DIR
-
-
+from tests.conftest import SF_DIR, FakeGroupState
 
 pytestmark = pytest.mark.slow
+
+#: transformWithStateInPandas needs a protobuf runtime
+needs_tws = pytest.mark.skipif(
+    not available(), reason="no protobuf runtime: transformWithState gated off"
+)
+
 
 @pytest.fixture(scope="module")
 def split_dir(spark, tmp_path_factory):
@@ -102,17 +107,15 @@ def test_state_survives_batches(spark, split_dir):
 
 
 def test_transform_with_state_gate_visible(spark):
-    """transformWithStateInPandas needs protobuf (not installed in
-    this container). If protobuf ever appears, the query must be
-    registered and oracle-green; until then this skip keeps the gap
-    visible in CI output instead of silently absent."""
-    import pytest
-
+    """transformWithStateInPandas needs a protobuf runtime, real or
+    aliased from the vendored copy (``protobuf_shim.available``).
+    Where there is one, the query must be registered and oracle-green;
+    where there is none, it must be absent, and the skip keeps the gap
+    visible in the test output."""
     from streamz_postgres_spark.registry import REGISTRY, _load_all
-    from streamz_postgres_spark.streaming.queries import _protobuf_available
 
     _load_all()
-    if not _protobuf_available():
+    if not available():
         assert "q_stream_transform_state" not in REGISTRY
         pytest.skip("protobuf not installed: q_stream_transform_state gated off")
     assert "q_stream_transform_state" in REGISTRY
@@ -126,6 +129,7 @@ def test_transform_with_state_gate_visible(spark):
     assert ok, msg
 
 
+@needs_tws
 def test_tws_update_sink_dedup_across_batches(spark, split_dir):
     """ADVICE r4: the update-mode memory sink APPENDS each batch's
     cumulative emissions, so a multi-file fixture leaves stale rows
@@ -134,35 +138,23 @@ def test_tws_update_sink_dedup_across_batches(spark, split_dir):
     transformWithState totals processor, assert the raw sink indeed
     holds re-emissions, and that the collapsed table equals exact
     batch totals."""
-    from streamz_postgres_spark.streaming.queries import (
+    from streamz_postgres_spark.streaming.stateful import (
         _latest_totals,
-        _protobuf_available,
-        _tws_environment,
         _UserTotalsProcessor,
     )
 
-    if not _protobuf_available():
-        pytest.skip("protobuf not installed: transformWithState gated off")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "UserTotalsProcessor",
-        (StatefulProcessor,),
-        dict(_UserTotalsProcessor.__dict__),
-    )
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{split_dir}/part*")
     )
-    with _tws_environment(spark):
-        out = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType="user_id long, n_events long, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    out = src.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_UserTotalsProcessor(),
+        outputStructType="user_id long, n_events long, sum_value double",
+        outputMode="Update",
+        timeMode="None",
+    )
+    tbl = run_to_table(out, "update", spark)
     n_keys = tbl.select("user_id").distinct().count()
     assert tbl.count() > n_keys, "expected per-batch re-emissions in sink"
     want = (
@@ -180,6 +172,89 @@ def test_tws_update_sink_dedup_across_batches(spark, split_dir):
     assert got == exp
 
 
+@needs_tws
+def test_two_threads_run_tws_keys_in_one_session(spark):
+    """Two threads of one session each run a transformWithState key at
+    the same time, and both match the oracle: the worker environment
+    and the state-store provider are set once for the session, so no
+    call can take them away from another call still running."""
+    import threading
+
+    from streamz_postgres_spark.oracle import check_query, duckdb_connection
+    from streamz_postgres_spark.registry import REGISTRY, _load_all
+
+    _load_all()
+    keys = ("q_stream_transform_state", "q_stream_transform_map")
+    start = threading.Barrier(len(keys))
+    results = {}
+
+    def run(key):
+        con = duckdb_connection(SF_DIR)
+        start.wait()
+        try:
+            results[key] = check_query(spark, con, REGISTRY[key], SF_DIR)
+        except Exception as exc:  # reported below with the key
+            results[key] = (False, repr(exc))
+        finally:
+            con.close()
+
+    threads = [threading.Thread(target=run, args=(k,)) for k in keys]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert {k: ok for k, (ok, _) in results.items()} == dict.fromkeys(keys, True), results
+
+
+@needs_tws
+def test_tws_key_runs_in_a_plain_session(tmp_path):
+    """The external-driver case: a child process builds its own
+    SparkSession (no ``get_spark``, a non-UTC zone, no PYTHONPATH, run
+    from outside the repo) and runs a transformWithState key from
+    ``__spark_entry__.queries()``. The engine sets the worker path and
+    the state-store provider and count itself, and the key matches
+    the oracle."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    child = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {str(repo)!r})
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.sql.session.timeZone", "America/New_York")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        assert spark.sparkContext.environment.get("PYTHONPATH") is None
+        assert spark.conf.get(
+            "spark.sql.streaming.stateStore.providerClass", None) is None
+        import __spark_entry__
+        from streamz_postgres_spark.oracle import check_query, duckdb_connection
+        from streamz_postgres_spark.registry import REGISTRY
+        key = "q_stream_transform_state"
+        assert key in __spark_entry__.queries()
+        ok, msg = check_query(
+            spark, duckdb_connection({SF_DIR!r}), REGISTRY[key], {SF_DIR!r})
+        print("RESULT", ok, msg)
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "RESULT True" in r.stdout, r.stdout[-2000:]
+
+
 def test_anomaly_state_survives_batches(spark, split_dir):
     """q_stream_anomaly's running moments are ORDER-sensitive state
     (each event is tested against its key's PRIOR events): replay the
@@ -187,7 +262,7 @@ def test_anomaly_state_survives_batches(spark, split_dir):
     plain Python fold over the whole table in event_id order."""
     from decimal import ROUND_HALF_EVEN, Decimal
 
-    from streamz_postgres_spark.streaming.queries import _anomaly_fold
+    from streamz_postgres_spark.streaming.stateful import _anomaly_fold
 
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
@@ -235,22 +310,17 @@ def test_anomaly_state_survives_batches(spark, split_dir):
     assert got == exp
 
 
+@needs_tws
 def test_tws_list_and_map_dedup_across_batches(spark, split_dir):
     """The ListState (last-3) and MapState (type counts) queries also
     collapse update-sink re-emissions; force 4 micro-batches through
     both processors and check the collapsed tables against batch
     truth (ListState additionally proves cross-batch ORDER: the kept
     ids must be the globally-last 3 event_ids per user)."""
-    from streamz_postgres_spark.streaming.queries import (
-        _protobuf_available,
+    from streamz_postgres_spark.streaming.stateful import (
         _RecentEventsProcessor,
-        _tws_environment,
         _TypeCountsProcessor,
     )
-
-    if not _protobuf_available():
-        pytest.skip("protobuf not installed: transformWithState gated off")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
@@ -259,22 +329,16 @@ def test_tws_list_and_map_dedup_across_batches(spark, split_dir):
     )
 
     # --- ListState: last-3 per user, order must survive batches ---
-    cls_l = type(
-        "RecentEventsProcessor",
-        (StatefulProcessor,),
-        dict(_RecentEventsProcessor.__dict__),
+    out = src.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_RecentEventsProcessor(),
+        outputStructType=(
+            "user_id long, n_recent long, recent_ids string, "
+            "recent_sum double"
+        ),
+        outputMode="Update",
+        timeMode="None",
     )
-    with _tws_environment(spark):
-        out = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls_l(),
-            outputStructType=(
-                "user_id long, n_recent long, recent_ids string, "
-                "recent_sum double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    tbl = run_to_table(out, "update", spark)
     seq = F.element_at(F.split("recent_ids", ","), -1).cast("long")
     latest = (
         tbl.groupBy("user_id")
@@ -297,21 +361,13 @@ def test_tws_list_and_map_dedup_across_batches(spark, split_dir):
     assert got == exp
 
     # --- MapState: per-(user, type) counts are monotone ---
-    cls_m = type(
-        "TypeCountsProcessor",
-        (StatefulProcessor,),
-        dict(_TypeCountsProcessor.__dict__),
+    out = src.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_TypeCountsProcessor(),
+        outputStructType="user_id long, event_type string, n_events long",
+        outputMode="Update",
+        timeMode="None",
     )
-    with _tws_environment(spark):
-        out = src.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=cls_m(),
-            outputStructType=(
-                "user_id long, event_type string, n_events long"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    tbl = run_to_table(out, "update", spark)
     final = tbl.groupBy("user_id", "event_type").agg(
         F.max("n_events").alias("n_events")
     )
@@ -325,6 +381,7 @@ def test_tws_list_and_map_dedup_across_batches(spark, split_dir):
     assert got_m == exp_m
 
 
+@needs_tws
 def test_tws_percentile_multiset_survives_batches(spark, split_dir):
     """q_stream_percentile's ListState is the full per-type value
     multiset, APPENDED each batch (appendList, never rewritten):
@@ -332,36 +389,22 @@ def test_tws_percentile_multiset_survives_batches(spark, split_dir):
     collapsed exact p50/p90 to equal a plain Python sort over the
     whole table — proving both the cross-batch append and the
     integer-index read-out."""
-    from streamz_postgres_spark.streaming.queries import (
-        _PercentileProcessor,
-        _protobuf_available,
-        _tws_environment,
-    )
+    from streamz_postgres_spark.streaming.stateful import _PercentileProcessor
 
-    if not _protobuf_available():
-        pytest.skip("protobuf not installed: transformWithState gated off")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "PercentileProcessor",
-        (StatefulProcessor,),
-        dict(_PercentileProcessor.__dict__),
-    )
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{split_dir}/part*")
     )
-    with _tws_environment(spark):
-        out = src.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=(
-                "event_type string, n_events long, p50 double, p90 double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-        tbl = run_to_table(out, "update", spark)
+    out = src.groupBy("event_type").transformWithStateInPandas(
+        statefulProcessor=_PercentileProcessor(),
+        outputStructType=(
+            "event_type string, n_events long, p50 double, p90 double"
+        ),
+        outputMode="Update",
+        timeMode="None",
+    )
+    tbl = run_to_table(out, "update", spark)
     final = (
         tbl.groupBy("event_type")
         .agg(F.max_by(F.struct("n_events", "p50", "p90"), "n_events").alias("s"))
@@ -392,7 +435,7 @@ def test_stream_scd2_versions_straddle_batches(spark, split_dir):
     batch 3 gets its closure emitted in batch 3 with the original
     valid_from. Replay the 4-way split one file per trigger and
     require the collapsed history to equal the batch SCD2 truth."""
-    from streamz_postgres_spark.streaming.queries import _scd2_fold
+    from streamz_postgres_spark.streaming.cdc_live import _scd2_fold
 
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
@@ -448,7 +491,7 @@ def test_stream_lsh_pairs_straddle_batches(spark, tmp_path):
     batches is emitted when the second lands. Split documents into 4
     files replayed one per trigger and require the collapsed pair
     set to equal the single-batch (whole-fixture) run."""
-    from streamz_postgres_spark.streaming.queries import (
+    from streamz_postgres_spark.streaming.corpus_live import (
         _lsh_bucket_fold,
         _stream_minhash_sig,
     )
@@ -528,25 +571,10 @@ def test_lsh_roster_state_is_bounded_on_hot_bucket():
 
     import pandas as pd
 
-    from streamz_postgres_spark.streaming.queries import (
+    from streamz_postgres_spark.streaming.corpus_live import (
         _LSH_ROSTER_CAP,
         _lsh_bucket_fold,
     )
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
 
     cap = _LSH_ROSTER_CAP
     sig = {f"m{j}": 7 for j in range(16)}  # every doc fully collides
@@ -554,7 +582,7 @@ def test_lsh_roster_state_is_bounded_on_hot_bucket():
     def batch(ids):
         return pd.DataFrame([{"doc_id": i, **sig} for i in ids])
 
-    state = FakeState()
+    state = FakeGroupState()
     total = 3 * cap
     splits = [range(0, cap), range(cap, 2 * cap), range(2 * cap, total)]
     emitted = []
@@ -589,25 +617,10 @@ def test_lsh_roster_state_reads_pre_cap_format():
 
     import pandas as pd
 
-    from streamz_postgres_spark.streaming.queries import _lsh_bucket_fold
-
-    class FakeState:
-        def __init__(self, v):
-            self._v = v
-
-        @property
-        def exists(self):
-            return True
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
+    from streamz_postgres_spark.streaming.corpus_live import _lsh_bucket_fold
 
     old_sig = [3] * 16
-    state = FakeState((json.dumps([[1, old_sig]]),))
+    state = FakeGroupState((json.dumps([[1, old_sig]]),))
     new_row = pd.DataFrame([{"doc_id": 2, **{f"m{j}": 3 for j in range(16)}}])
     out = pd.concat(
         list(_lsh_bucket_fold(("k",), iter([new_row]), state)),
@@ -625,7 +638,7 @@ def test_enrich_asof_state_survives_batches(spark, split_dir):
     value). Replay the 4-way event_id-ordered split one file per
     trigger and require the enriched facts to equal a plain Python
     fold over the whole table in event_id order."""
-    from streamz_postgres_spark.streaming.queries import _enrich_asof_fold
+    from streamz_postgres_spark.streaming.cdc_live import _enrich_asof_fold
 
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
@@ -669,7 +682,7 @@ def test_zip_seq_state_survives_batches(spark, split_dir):
     counter continuing. Replay the 4-way event_id-ordered split one
     file per trigger and require the emitted pairs to equal the
     batch per-key row_number zip over the whole table."""
-    from streamz_postgres_spark.streaming.queries import _zip_seq_fold
+    from streamz_postgres_spark.streaming.windowed import _zip_seq_fold
 
     src = (
         spark.readStream.schema(load_table(spark, SF_DIR, "events").schema)
@@ -736,7 +749,7 @@ def test_combine_latest_state_survives_batches(spark, split_dir):
     purchase from batch 3 when nothing intervened. Replay the 4-way
     split one file per trigger; emissions must equal the plain
     Python fold over the whole table in event_id order."""
-    from streamz_postgres_spark.streaming.queries import (
+    from streamz_postgres_spark.streaming.windowed import (
         _combine_latest_fold,
     )
 

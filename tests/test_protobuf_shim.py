@@ -7,6 +7,7 @@ identity (no duplicate descriptor pools)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
@@ -65,3 +66,24 @@ def test_plain_pythonpath_import():
     )
     assert out.returncode == 0, out.stderr
     assert out.stdout.strip() == "ok"
+
+
+def test_worker_pythonpath_vendor_only_where_aliased(monkeypatch):
+    """Workers get the vendor dir only where ``install()`` aliased the
+    vendored runtime in this process. Where a real protobuf is
+    importable, ``install()`` leaves ``sys.path`` alone and the worker
+    path holds the library dir alone, so the vendor copy cannot hide
+    the real one."""
+    from streamz_postgres_spark import protobuf_shim
+    from streamz_postgres_spark.protobuf_shim import VENDOR_DIR, worker_pythonpath
+
+    assert install()
+    aliased = VENDOR_DIR in sys.path
+    assert (worker_pythonpath("x").split(os.pathsep)[0] == VENDOR_DIR) == aliased
+    monkeypatch.setattr(sys, "path", [p for p in sys.path if p != VENDOR_DIR])
+    monkeypatch.setattr(protobuf_shim, "_real_runtime_importable", lambda: True)
+    assert install()
+    assert VENDOR_DIR not in sys.path
+    parts = worker_pythonpath("x").split(os.pathsep)
+    assert VENDOR_DIR not in parts
+    assert parts[-1] == "x"

@@ -22,30 +22,11 @@ from streamz_postgres_spark.streaming.stateful import (
     _STREAM_MR_PATTERN,
     _pattern_measures_fold,
 )
-
-
-class _FakeState:
-    """Duck-typed applyInPandasWithState GroupState: `exists` and
-    `get` are PROPERTIES (the house gotcha), `update` stores a
-    tuple."""
-
-    def __init__(self):
-        self._t = None
-
-    @property
-    def exists(self):
-        return self._t is not None
-
-    @property
-    def get(self):
-        return self._t
-
-    def update(self, t):
-        self._t = t
+from tests.conftest import FakeGroupState
 
 
 def _run_fold(batches):
-    state = _FakeState()
+    state = FakeGroupState()
     last = None
     for b in batches:
         out = list(_pattern_measures_fold((1,), iter([b]), state))
@@ -131,7 +112,7 @@ def test_overlap_fold_enumerates_every_start():
         _pattern_overlap_fold,
     )
 
-    state = _FakeState()
+    state = FakeGroupState()
     out = list(_pattern_overlap_fold((1,), iter([_mk(rows)]), state))
     got = sorted(
         zip(out[0]["match_no"], out[0]["n_rows"],
@@ -209,7 +190,7 @@ def test_symbol_fold_order_independent_with_nulls(split):
         _pattern_symbol_fold,
     )
 
-    state = _FakeState()
+    state = FakeGroupState()
     last = None
     for b in [_mk(b) for b in split]:
         out = list(_pattern_symbol_fold((1,), iter([b]), state))

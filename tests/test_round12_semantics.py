@@ -17,22 +17,7 @@ from streamz_postgres_spark.streaming.stateful import (
     _mr_skip_to_matches,
     _pattern_skip_to_fold,
 )
-
-
-class _FakeState:
-    def __init__(self):
-        self._t = None
-
-    @property
-    def exists(self):
-        return self._t is not None
-
-    @property
-    def get(self):
-        return self._t
-
-    def update(self, t):
-        self._t = t
+from tests.conftest import FakeGroupState
 
 
 def _mk(rows):
@@ -76,7 +61,7 @@ _EXPECTED = [
 
 
 def _run_fold(batches):
-    state = _FakeState()
+    state = FakeGroupState()
     last = None
     for b in batches:
         out = list(_pattern_skip_to_fold((1,), iter([b]), state))
@@ -147,7 +132,7 @@ def test_late_arrival_destroying_all_matches_emits_marker():
     fold now emits a NULL-match_no marker at the NEW seq_len; the
     read-out keeps max-seq_len rows then drops NULLs, so the user
     correctly ends with no rows."""
-    state = _FakeState()
+    state = FakeGroupState()
     # batch 1: V C V -> one VC*V match at seq_len 3
     out1 = list(
         _pattern_skip_to_fold(
@@ -184,7 +169,7 @@ def test_measures_fold_emits_marker_too():
         _pattern_measures_fold,
     )
 
-    state = _FakeState()
+    state = FakeGroupState()
     out1 = list(
         _pattern_measures_fold(
             (1,), iter([_mk([(10, 1, "V"), (30, 2, "P")])]), state
@@ -319,7 +304,7 @@ def test_fold_snapshot_equals_batch_enumeration(data):
     import pandas as pd
 
     events, batches = data
-    state = _FakeState()
+    state = FakeGroupState()
     outs = []
     for b in batches:
         outs.extend(
@@ -363,33 +348,16 @@ def test_twap_fold_refuses_cross_batch_disorder():
             }
         )
 
-    state = _FakeState()
+    state = FakeGroupState()
     out1 = list(_twap_fold(("view",), iter([mk([(100, 1, 1.0), (200, 2, 2.0)])]), state))
     assert int(out1[0]["dur"].sum()) == 100
     with pytest.raises(ValueError, match="out-of-order"):
         list(_twap_fold(("view",), iter([mk([(150, 3, 9.0)])]), state))
     # in-order continuation (>= the open observation) still works
-    state2 = _FakeState()
+    state2 = FakeGroupState()
     list(_twap_fold(("view",), iter([mk([(100, 1, 1.0)])]), state2))
     out = list(_twap_fold(("view",), iter([mk([(300, 2, 2.0)])]), state2))
     assert int(out[0]["dur"].sum()) == 200
-
-
-def test_tws_class_keeps_instance_dict_usable():
-    """_tws_class must not copy the '__dict__'/'__weakref__' getset
-    descriptors from the impl class — copying them makes any
-    Python-level instance.__dict__ access raise TypeError."""
-    from streamz_postgres_spark.streaming import stateful as S
-
-    cls = S._tws_class("Probe", S._UserTotalsProcessor)
-    inst = cls()
-    inst.__dict__["probe"] = 1  # raises TypeError pre-fix
-    assert vars(inst)["probe"] == 1
-    assert "__dict__" not in {
-        k
-        for k in cls.__dict__
-        if k in ("__dict__", "__weakref__")
-    }
 
 
 def test_grand_total_row_survives_empty_input(spark, tmp_path):
@@ -428,3 +396,34 @@ def test_grand_total_row_survives_empty_input(spark, tmp_path):
     rows = REGISTRY["q_grouping_id"].spark_fn(spark, d).collect()
     assert len(rows) == 1
     assert rows[0]["level"] == "grand_total" and rows[0]["gid"] == 3
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "_UserTotalsProcessor",
+        "_RecentEventsProcessor",
+        "_TypeCountsProcessor",
+        "_InactivityFlushProcessor",
+        "_WarmStartTotalsProcessor",
+        "_PercentileProcessor",
+    ],
+)
+def test_processors_keep_instance_dict_usable(name):
+    """The module-level processors are plain StatefulProcessor
+    subclasses: an instance's ``__dict__`` works from Python, and a
+    cloudpickle round trip (how Spark ships the processor) gives an
+    instance of the same class with the same attributes."""
+    from pyspark import cloudpickle
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+    from streamz_postgres_spark.streaming import stateful
+
+    cls = getattr(stateful, name)
+    assert issubclass(cls, StatefulProcessor)
+    inst = cls()
+    inst.__dict__["probe"] = 1
+    assert vars(inst)["probe"] == 1
+    back = cloudpickle.loads(cloudpickle.dumps(inst))
+    assert type(back) is cls
+    assert vars(back) == {"probe": 1}

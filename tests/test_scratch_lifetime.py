@@ -50,12 +50,20 @@ _VIEW_OWNERS = {
 }
 
 
+#: the one engine module that sets session conf and the worker
+#: environment (``catalog.ship_package``)
+_ENV_OWNER = "catalog.py"
+
+
 def test_scratch_lifetime_has_one_owner():
     """Only lifecycle.py creates invocation-scoped dirs: no other
     engine module calls ``tempfile.mkdtemp`` (call-scoped scratch is a
     ``TemporaryDirectory``) or keeps a module-level ``_*_DIRS`` /
     ``_*_LAYOUTS`` list of dirs to clean up later. No engine module
-    pairs a temp view by hand outside ``_VIEW_OWNERS``."""
+    pairs a temp view by hand outside ``_VIEW_OWNERS``. Only
+    ``_ENV_OWNER`` touches ``sparkContext.environment`` or calls
+    ``conf.set`` / ``conf.unset``: process-wide settings saved and
+    restored around one call break the calls that overlap it."""
     offenders = []
     for path in sorted(PKG.rglob("*.py")):
         if path.name == "lifecycle.py":
@@ -70,6 +78,20 @@ def test_scratch_lifetime_has_one_owner():
                     offenders.append(f"{rel}:{node.lineno} calls mkdtemp")
                 if _VIEW_OWNERS.get(name, path.name) != path.name:
                     offenders.append(f"{rel}:{node.lineno} calls {name}")
+                if (
+                    name in ("set", "unset")
+                    and isinstance(f, ast.Attribute)
+                    and isinstance(f.value, ast.Attribute)
+                    and f.value.attr == "conf"
+                    and path.name != _ENV_OWNER
+                ):
+                    offenders.append(f"{rel}:{node.lineno} calls conf.{name}")
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "environment"
+                and path.name != _ENV_OWNER
+            ):
+                offenders.append(f"{rel}:{node.lineno} touches .environment")
         for node in tree.body:
             targets = (
                 node.targets

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from streamz_postgres_spark.catalog import load_table
-from streamz_postgres_spark.streaming.queries import _ewma_fold
+from streamz_postgres_spark.streaming.stateful import _ewma_fold
 from streamz_postgres_spark.streaming.runner import run_to_table
 from tests.conftest import SF_DIR
 
