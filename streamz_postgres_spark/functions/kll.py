@@ -1,155 +1,81 @@
-"""Deterministic KLL/MRL-style quantile sketch with an exact
-rank-error ledger.
+"""KLL quantile sketches on Spark's native DataSketches KLL.
 
-The classic KLL sketch (Karnin-Lang-Liberty 2016) compacts a full
-level buffer by sorting it and keeping every other item at doubled
-weight, choosing the starting parity by a coin flip. This
-implementation replaces the coin with a deterministic per-level
-alternating parity (the Manku-Rajagopalan-Lindsay deterministic
-lineage), which trades the randomized sqrt-error guarantee for a
-WORST-CASE one that is itself computable at run time:
+The KLL sketch (Karnin-Lang-Liberty 2016) keeps a hierarchy of
+compactors: a full level is sorted and every other item moves up at
+doubled weight, the starting parity chosen at random. Its state is
+O(k log(n/k)) retained items per group and partial sketches merge, so
+Spark runs it as an ordinary two-phase aggregate
+(``kll_sketch_agg_double``: a partial sketch per task before the
+shuffle, a merge after it) and as streaming aggregation state, where
+the state store holds the binary sketch.
 
-    a compaction at level l (item weight 2^l) shifts any rank
-    estimate by at most 2^l, so after C_l compactions at each level
-    the total rank error of every quantile read-out is bounded by
-
-        err = sum_l C_l * 2^l
-
-and the sketch simply MAINTAINS that integer ledger as it runs.
-This makes the sketch self-calibrating: a consumer can assert
-|realized rank - target rank| <= err against exact order statistics,
-and the assertion is deterministic — no distributional argument, no
-failure probability — which is what lets the oracle gate VALUE-check
-the bound (see q_stream_kll_quantile).
-
-Space: the level buffers hold at most k items each across
-O(log2(n/k)) levels — O(k log(n/k)) values of state per key,
-vs O(n) for the exact multiset. Merge is lossless concatenation
-followed by the same compaction rule, and the ledger adds, so
-partial sketches from different partitions/batches combine exactly
-like any mergeable aggregate.
-
-Determinism note: the SKETCH CONTENTS depend on insertion order (as
-every compacting sketch's do), so the estimate itself is not a
-cross-engine value-checkable output; the calibration read-out
-(exact quantiles + in-bound flags + the ledger-vs-realized check)
-is, and that is what the registered query exposes.
+The error bound is the library's own: ``Epsilon`` in
+``kll_sketch_to_string_double`` is the normalized rank error at 99%
+confidence (1.046% at k = 256), so a read-out misses its target rank
+by more than ``ceil(epsilon * n)`` with probability under 1%. The
+sketch is randomized, so the estimate varies between runs once
+n > k, and it is not a cross-engine value. The registered queries
+therefore self-check it, as q_hll_partial does with its 3-sigma
+``est_ok``: ``calibrated_readout`` ranks each estimate against the
+exact order statistics and emits in-bound flags, which the oracle
+expects to be 1. Below k items nothing is compacted and every
+read-out is exact.
 """
 
 from __future__ import annotations
 
-import json
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 DEFAULT_K = 256
 
 
-class KLLSketch:
-    """Deterministic compacting quantile sketch over doubles.
+def kll_sketch(value: str) -> Column:
+    """The KLL aggregate over a double column. NULL values never enter
+    the sketch (the SQL aggregate convention), and neither do NaNs."""
+    return F.kll_sketch_agg_double(value, F.lit(DEFAULT_K))
 
-    ``k`` is the per-level buffer capacity (compaction trigger);
-    ``err`` is the exact worst-case rank-error ledger described in
-    the module docstring.
-    """
 
-    __slots__ = ("k", "levels", "parity", "n", "err")
+def _summary_field(summary: Column, name: str) -> Column:
+    return F.regexp_extract(summary, rf"\n\s*{name}\s+: ([0-9.]+)", 1)
 
-    def __init__(self, k: int = DEFAULT_K):
-        if k < 4:
-            raise ValueError("k must be >= 4")
-        self.k = int(k)
-        self.levels: list[list[float]] = [[]]
-        self.parity: list[int] = [0]
-        self.n = 0
-        self.err = 0
 
-    # -- updates ------------------------------------------------------------
+def sketch_estimates(sketches: DataFrame) -> DataFrame:
+    """One row per event_type with its sketch ``sk``, read out as
+    (n_events, p50_est, p90_est, err_bound, state_items): the
+    estimates at normalized ranks 0.5 and 0.9, the rank-error bound
+    ceil(epsilon * n) and the retained item count.
 
-    def add(self, v: float) -> None:
-        self.levels[0].append(float(v))
-        self.n += 1
-        if len(self.levels[0]) >= self.k:
-            self._compact(0)
+    Spark takes the rank as a constant, so each estimate answers the
+    nearest-rank target ceil(r * n). The audited targets of
+    ``calibrated_readout``, (n-1) DIV 2 + 1 and (n-1)*9 DIV 10 + 1,
+    equal it for p50 and sit at most one rank lower for p90, a rank
+    the p90 check counts against the bound. An empty sketch (a group
+    whose values are all NULL) has n = 0 and NULL estimates: the
+    library refuses a quantile of it."""
+    s = sketches.select(
+        "event_type",
+        "sk",
+        F.kll_sketch_get_n_double("sk").alias("n_events"),
+        F.kll_sketch_to_string_double("sk").alias("summary"),
+    )
+    n = F.col("n_events")
 
-    def merge(self, other: "KLLSketch") -> "KLLSketch":
-        if other.k != self.k:
-            raise ValueError("cannot merge sketches with different k")
-        for lvl, buf in enumerate(other.levels):
-            while lvl >= len(self.levels):
-                self.levels.append([])
-                self.parity.append(0)
-            self.levels[lvl].extend(buf)
-        self.n += other.n
-        self.err += other.err
-        for lvl in range(len(self.levels)):
-            if len(self.levels[lvl]) >= self.k:
-                self._compact(lvl)
-        return self
+    def est(rank: float) -> Column:
+        quantile = F.kll_sketch_get_quantile_double("sk", F.lit(rank))
+        return F.when(n > 0, quantile)
 
-    def _compact(self, lvl: int) -> None:
-        """Sort level ``lvl``, promote every other item (alternating
-        start parity) at doubled weight, leave at most one leftover
-        item in place so total weight is conserved exactly."""
-        buf = sorted(self.levels[lvl])
-        m_even = len(buf) - (len(buf) & 1)
-        take = buf[self.parity[lvl] : m_even : 2]
-        self.parity[lvl] ^= 1
-        self.err += 1 << lvl
-        self.levels[lvl] = buf[m_even:]  # 0 or 1 leftover item
-        if lvl + 1 == len(self.levels):
-            self.levels.append([])
-            self.parity.append(0)
-        self.levels[lvl + 1].extend(take)
-        if len(self.levels[lvl + 1]) >= self.k:
-            self._compact(lvl + 1)
-
-    # -- reads --------------------------------------------------------------
-
-    def query(self, rank: int) -> float | None:
-        """Smallest retained value whose cumulative weight reaches
-        ``rank`` (1-based). Total weight equals n exactly (weight is
-        conserved by compaction), so rank=n returns the max."""
-        items = sorted(
-            (v, 1 << lvl)
-            for lvl, buf in enumerate(self.levels)
-            for v in buf
-        )
-        if not items:
-            return None
-        cum = 0
-        for v, w in items:
-            cum += w
-            if cum >= rank:
-                return v
-        return items[-1][0]
-
-    def size(self) -> int:
-        """Number of retained items (the state footprint)."""
-        return sum(len(b) for b in self.levels)
-
-    # -- state (de)serialization --------------------------------------------
-
-    def to_json(self) -> str:
-        # json round-trips Python floats exactly (repr-based), so
-        # serialize/deserialize never perturbs a retained value
-        return json.dumps(
-            {
-                "k": self.k,
-                "levels": self.levels,
-                "parity": self.parity,
-                "n": self.n,
-                "err": self.err,
-            }
-        )
-
-    @classmethod
-    def from_json(cls, blob: str) -> "KLLSketch":
-        d = json.loads(blob)
-        sk = cls(d["k"])
-        sk.levels = [list(map(float, b)) for b in d["levels"]]
-        sk.parity = list(d["parity"])
-        sk.n = int(d["n"])
-        sk.err = int(d["err"])
-        return sk
+    eps = _summary_field(F.col("summary"), "Epsilon").cast("double") / 100
+    return s.select(
+        "event_type",
+        "n_events",
+        est(0.5).alias("p50_est"),
+        est(0.9).alias("p90_est"),
+        F.ceil(eps * n).cast("bigint").alias("err_bound"),
+        _summary_field(F.col("summary"), "Retained Items")
+        .cast("bigint")
+        .alias("state_items"),
+    )
 
 
 def calibrated_readout(latest, events):
@@ -163,14 +89,12 @@ def calibrated_readout(latest, events):
     Emits only cross-engine-deterministic columns: the exact
     integer-index order statistics (value-checked against the
     oracle) and flags asserting the sketch's realized rank error
-    sits within its ledger and its state within the
+    sits within its bound and its state within the
     k*(2+ceil(log2(2n/k))) cap — a sketch bug flips a flag and
     fails the hash gate (the q_kmv_distinct calibration pattern).
     The O(n) exact side exists only to AUDIT the sketch (the
     q_ann_recall shape); production consumers read the sketch alone.
     """
-    from pyspark.sql import functions as F
-
     exact = events.groupBy("event_type").agg(
         # count NON-NULL values: collect_list already drops NULLs, so
         # a COUNT(*) would desynchronize the index arithmetic from
@@ -190,7 +114,9 @@ def calibrated_readout(latest, events):
         le = F.expr(f"size(filter(vals, v -> v <= {est_col}))").cast("bigint")
         t = F.expr(target_expr).cast("bigint")
         dist = F.greatest(lt + 1 - t, t - le, F.lit(0).cast("bigint"))
-        return (dist <= F.col("err_bound")).cast("int")
+        # an all-NULL group has no rank to miss, if its estimate is NULL
+        empty = (F.col("n_exact") == 0) & F.col(est_col).isNull()
+        return ((dist <= F.col("err_bound")) | empty).cast("int")
 
     state_cap = F.expr(
         f"CAST({DEFAULT_K} * (2 + ceil(log2(greatest(2.0 * n_events / "

@@ -14,6 +14,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from streamz_postgres_spark.catalog import load_table
+from streamz_postgres_spark.functions.kll import (
+    KLL_ORACLE_SQL,
+    calibrated_readout,
+    kll_sketch,
+    sketch_estimates,
+)
 from streamz_postgres_spark.functions.numeric import (
     dsum,
     qround,
@@ -668,112 +674,27 @@ def q_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kll_partials(it):
-    """mapInPandas stage: one KLL partial sketch per (input
-    partition, event_type) — the map-side combine of the mergeable
-    aggregate. Emits kilobyte JSON blobs, never raw values."""
-    import pandas as pd
-
-    from streamz_postgres_spark.functions.kll import DEFAULT_K, KLLSketch
-
-    sketches = {}
-    for pdf in it:
-        # dropna=False: pandas groupby DROPS a None group key by
-        # default, but SQL GROUP BY keeps the NULL group — a NULL
-        # event_type must still get its sketch (hostile-sweep v5
-        # find)
-        for t, g in pdf.groupby("event_type", dropna=False):
-            if t is not None and not isinstance(t, str):
-                t = None  # pandas may surface the None key as NaN
-            sk = sketches.setdefault(t, KLLSketch(DEFAULT_K))
-            # SQL aggregate semantics: NULLs never enter the sketch
-            # (a NaN would otherwise poison the order statistics;
-            # hostile-fixture sweep find, r12)
-            for v in g["value"].dropna():
-                sk.add(float(v))
-    yield pd.DataFrame(
-        {
-            "event_type": list(sketches),
-            "sketch": [s.to_json() for s in sketches.values()],
-        }
-    )
-
-
-def _kll_merge(key: tuple, pdf) -> "object":
-    """Reduce stage: merge one type's partial sketches (concatenate
-    level buffers + re-compact; the ledger adds) and read out."""
-    import pandas as pd
-
-    from streamz_postgres_spark.functions.kll import KLLSketch
-
-    # deterministic merge order so reruns produce identical sketches
-    blobs = sorted(pdf["sketch"])
-    sk = KLLSketch.from_json(blobs[0])
-    for blob in blobs[1:]:
-        sk.merge(KLLSketch.from_json(blob))
-    t50 = (sk.n - 1) // 2 + 1
-    t90 = ((sk.n - 1) * 9) // 10 + 1
-    return pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "n_events": [sk.n],
-            "p50_est": [sk.query(t50)],
-            "p90_est": [sk.query(t90)],
-            "err_bound": [sk.err],
-            "state_items": [sk.size()],
-        }
-    )
-
-
+@register(
+    "q_kll_quantile",
+    oracle=KLL_ORACLE_SQL,
+    tags=("stats", "sketch", "agg"),
+)
 def q_kll_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BATCH mergeable KLL percentiles — the two-phase aggregate
-    shape of the streaming twin q_stream_kll_quantile: mapInPandas
-    builds one partial sketch per (partition, type) so the SHUFFLE
-    carries kilobyte sketch blobs instead of the value multiset
-    (like q_hll_partial for counts), then applyInPandas merges each
-    type's partials (KLLSketch.merge: concatenate + re-compact,
-    ledgers add) and reads out p50/p90. The read-out is then
-    self-calibrated against the exact order statistics exactly as
-    the streaming twin (shared functions/kll.py calibrated_readout;
-    same oracle). At 100 TB the sketch path shuffles
-    O(partitions x types) KB while the audit side's O(n) multiset is
-    dropped — the registered query keeps it because auditing IS the
-    query (the q_ann_recall shape)."""
-    from streamz_postgres_spark.functions.kll import calibrated_readout
-
+    """BATCH mergeable KLL percentiles, the batch twin of
+    q_stream_kll_quantile: Spark's native KLL sketch
+    (``kll_sketch_agg_double``, k = 256) per event type, a two-phase
+    aggregate whose partial sketches are built before the shuffle,
+    so the exchange carries kilobyte sketches per (task, type)
+    instead of the value multiset (like q_hll_partial for counts).
+    The p50/p90 estimates are then self-calibrated against the exact
+    order statistics exactly as in the streaming twin (shared
+    functions/kll.py calibrated_readout; same oracle). At 100 TB the
+    sketch path shuffles O(tasks x types) KB while the audit side's
+    O(n) multiset is dropped — the registered query keeps it because
+    auditing IS the query (the q_ann_recall shape)."""
     e = load_table(spark, sf_dir, "events")
-    # re-split before the Python stage (the _vecs_parallel lesson): a
-    # single-file input is ONE split and would serialize every add()
-    # onto one task; the shuffle moves only the 2-column projection
-    partials = (
-        e.select("event_type", "value")
-        # round-robin, NOT by event_type: partials need no
-        # co-location (merge handles it) and a hash split would cap
-        # parallelism at the type count
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(_kll_partials, schema="event_type string, sketch string")
-    )
-    latest = partials.groupBy("event_type").applyInPandas(
-        _kll_merge,
-        schema=(
-            "event_type string, n_events long, p50_est double, "
-            "p90_est double, err_bound long, state_items long"
-        ),
-    )
-    return calibrated_readout(latest, e)
-
-
-def _register_kll_batch() -> None:
-    from streamz_postgres_spark.functions.kll import KLL_ORACLE_SQL
-
-    register(
-        "q_kll_quantile",
-        oracle=KLL_ORACLE_SQL,
-        tags=("stats", "sketch", "agg"),
-    )(q_kll_quantile)
-
-
-_register_kll_batch()
+    sketches = e.groupBy("event_type").agg(kll_sketch("value").alias("sk"))
+    return calibrated_readout(sketch_estimates(sketches), e)
 
 
 # -- one-scan correlation matrix --------------------------------------------

@@ -67,6 +67,15 @@ def _load_all() -> None:
     import streamz_postgres_spark.operators  # noqa: F401
 
 
+def oracle_of(key: str) -> str | None:
+    """The oracle of registered key ``key``, loading every operator
+    module first. A live twin whose answer must equal its batch key's
+    registers with ``oracle=oracle_of(batch_key)``: one oracle string
+    for both, so the twins cannot drift apart."""
+    _load_all()
+    return REGISTRY[key].oracle
+
+
 def is_live(key: str) -> bool:
     """True for a streaming or CDC key: building its DataFrame runs the
     bounded stream, and its plan materializes through a sink, so plan

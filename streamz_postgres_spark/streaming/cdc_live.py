@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from streamz_postgres_spark.catalog import load_table
-from streamz_postgres_spark.registry import register
+from streamz_postgres_spark.registry import oracle_of, register
 from streamz_postgres_spark.sources.cdc import (
     ParquetReplayLoader,
     apply_changes,
@@ -426,12 +426,6 @@ def _scd2_fold(
     )
 
 
-def _scd2_oracle() -> str:
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_cdc_scd2"].oracle
-
-
 def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE SCD type-2 maintenance from the CDC change stream (the
     streaming twin of q_cdc_scd2): the only carried state is each
@@ -496,7 +490,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_stream_scd2",
-    oracle=_scd2_oracle(),
+    oracle=oracle_of("q_cdc_scd2"),
     tags=("streaming", "cdc", "scd2", "stateful"),
 )(q_stream_scd2)
 

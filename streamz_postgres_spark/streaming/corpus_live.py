@@ -15,21 +15,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from streamz_postgres_spark.catalog import load_table
 from streamz_postgres_spark.functions.numeric import sql_dsum
-from streamz_postgres_spark.registry import register
+from streamz_postgres_spark.registry import oracle_of, register
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
 
 # -- streaming per-segment OLS trend ----------------------------------------
-
-
-def _trend_oracle() -> str:
-    # importing the module runs @register for q_trend_ols, whose
-    # oracle is shared verbatim (same moments, same closed form)
-    import streamz_postgres_spark.operators.stats  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_trend_ols"].oracle
 
 
 def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,26 +67,14 @@ def q_stream_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_stream_trend() -> None:
-    register(
-        "q_stream_trend",
-        oracle=_trend_oracle(),
-        tags=("streaming", "stats", "timeseries"),
-    )(q_stream_trend)
-
-
-_register_stream_trend()
+register(
+    "q_stream_trend",
+    oracle=oracle_of("q_trend_ols"),
+    tags=("streaming", "stats", "timeseries"),
+)(q_stream_trend)
 
 
 # -- streaming bitmap audience overlap --------------------------------------
-
-
-def _bitmap_overlap_oracle() -> str:
-    import streamz_postgres_spark.operators.aggregates  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_bitmap_overlap"].oracle
 
 
 def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,7 +104,7 @@ def q_stream_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_stream_bitmap_overlap",
-    oracle=_bitmap_overlap_oracle(),
+    oracle=oracle_of("q_bitmap_overlap"),
     tags=("streaming", "agg", "bitmap", "analytics"),
 )(q_stream_bitmap_overlap)
 
@@ -218,14 +196,6 @@ def q_stream_percentile_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- streaming rollup cascade (continuous aggregate) ------------------------
 
 
-def _rollup_cascade_oracle() -> str:
-    import streamz_postgres_spark.operators.aggregates  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_rollup_cascade"].oracle
-
-
 def q_stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE continuous aggregate: the stream maintains HOURLY partial
     state (count + exact DECIMAL sum per hour — the mergeable partial
@@ -248,7 +218,7 @@ def q_stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_stream_rollup_cascade",
-    oracle=_rollup_cascade_oracle(),
+    oracle=oracle_of("q_rollup_cascade"),
     tags=("streaming", "agg", "rollup", "timeseries"),
 )(q_stream_rollup_cascade)
 
@@ -589,14 +559,6 @@ register(
 # -- live benchmark-contamination guard -------------------------------------
 
 
-def _contamination_oracle() -> str:
-    import streamz_postgres_spark.operators.pipeline  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_contamination"].oracle
-
-
 def q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE eval-set contamination guard: incoming corpus documents
     are checked against the STATIC benchmark shingle set as they
@@ -645,7 +607,7 @@ def q_stream_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_stream_contamination",
-    oracle=_contamination_oracle(),
+    oracle=oracle_of("q_contamination"),
     tags=("streaming", "pipeline", "dedup"),
 )(q_stream_contamination)
 
@@ -653,19 +615,9 @@ register(
 # -- streaming half-life-decayed engagement ----------------------------------
 
 
-def _decay_oracle() -> str:
-    # importing the module runs @register for q_decay_score, whose
-    # oracle (fixed anchor, exact power-of-two decay) applies verbatim
-    import streamz_postgres_spark.operators.timewindows  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_decay_score"].oracle
-
-
 @register(
     "q_stream_decay_score",
-    oracle=_decay_oracle(),
+    oracle=oracle_of("q_decay_score"),
     tags=("streaming", "time", "agg", "analytics"),
 )
 def q_stream_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:

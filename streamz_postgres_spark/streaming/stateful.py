@@ -22,8 +22,13 @@ from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from streamz_postgres_spark import protobuf_shim
 from streamz_postgres_spark.catalog import load_table
+from streamz_postgres_spark.functions.kll import (
+    calibrated_readout,
+    kll_sketch,
+    sketch_estimates,
+)
 from streamz_postgres_spark.functions.numeric import micro6, sql_dsum
-from streamz_postgres_spark.registry import register
+from streamz_postgres_spark.registry import oracle_of, register
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
 
@@ -1025,103 +1030,39 @@ if protobuf_shim.available():  # pragma: no cover - depends on environment
     )(q_stream_percentile)
 
 
-
-
 # -- streaming KLL quantile sketch (bounded rank error, self-calibrating) ----
-
-
-
-
-def _kll_fold(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-key KLL fold: state is the serialized sketch (functions/
-    kll.py) plus its exact rank-error ledger; each batch folds its
-    rows in event_id order and emits the current read-out. Rows are
-    O(k log n) JSON in a single string state column — bounded
-    forever, vs the exact percentile fold's O(n) multiset."""
-    from streamz_postgres_spark.functions.kll import DEFAULT_K, KLLSketch
-
-    if state.exists:
-        _, blob = state.get
-        sk = KLLSketch.from_json(blob)
-    else:
-        # DEFAULT_K (256): ~2-3% worst-case rank-error ledger at the
-        # fixtures' n, O(k log(n/k)) state; shared with the batch
-        # twin and calibrated_readout's state cap
-        sk = KLLSketch(DEFAULT_K)
-    pdf = pd.concat(list(batches), ignore_index=True)
-    # SQL aggregate semantics: NULL values never enter the sketch
-    # (matches the batch twin and the quantile oracle's NULL skip)
-    for v in pdf.sort_values("event_id")["value"].dropna():
-        sk.add(float(v))
-    state.update((sk.n, sk.to_json()))
-    t50 = (sk.n - 1) // 2 + 1
-    t90 = ((sk.n - 1) * 9) // 10 + 1
-    yield pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "n_events": [sk.n],
-            "p50_est": [sk.query(t50)],
-            "p90_est": [sk.query(t90)],
-            "err_bound": [sk.err],
-            "state_items": [sk.size()],
-        }
-    )
-
-
-def _kll_oracle() -> str:
-    from streamz_postgres_spark.functions.kll import KLL_ORACLE_SQL
-
-    return KLL_ORACLE_SQL
 
 
 @register(
     "q_stream_kll_quantile",
-    oracle=_kll_oracle(),
+    oracle=oracle_of("q_kll_quantile"),
     tags=("streaming", "stateful", "stats", "sketch"),
 )
 def q_stream_kll_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOUNDED-RANK-ERROR streaming percentiles (round-6 verdict #3,
-    upgrading the log2-histogram's bucket-relative error): a
-    deterministic KLL/MRL sketch (functions/kll.py) runs per event
-    type as an applyInPandasWithState fold with O(k log n) state and
-    an EXACT worst-case rank-error ledger (sum of 2^level over
-    compactions) maintained alongside. Because a compacting sketch's
-    contents are insertion-order-dependent, the estimate itself is
-    not cross-engine checkable; instead the query is SELF-CALIBRATING
-    in the q_kmv_distinct pattern: it reads the final sketch, ranks
-    its p50/p90 answers against the exact value multiset, and emits
-    the exact order statistics (value-checked against the oracle)
-    plus in-bound flags asserting |realized rank - target rank| <=
-    ledger and a state-cap flag asserting size <= k*(2+ceil(log2(2n/
-    k))) — any sketch bug flips a flag and fails the hash gate. The
-    exact side exists only to AUDIT the sketch (the q_ann_recall
-    shape); the 100 TB consumer reads the sketch alone, whose
-    per-key state is a few KB forever and whose partials merge
-    losslessly (KLLSketch.merge) like any mergeable aggregate."""
+    upgrading the log2-histogram's bucket-relative error): Spark's
+    native KLL sketch (functions/kll.py, k = 256) per event type as
+    an ordinary complete-mode streaming aggregate, so the state store
+    holds one binary sketch of O(k log n) items per type, merged
+    with each micro-batch's partial sketch. The sketch is randomized,
+    so the estimate itself is not cross-engine checkable; instead the
+    query is SELF-CALIBRATING in the q_kmv_distinct pattern: it reads
+    the final sketch, ranks its p50/p90 answers against the exact
+    value multiset, and emits the exact order statistics
+    (value-checked against the oracle) plus in-bound flags asserting
+    |realized rank - target rank| <= ceil(epsilon * n), with epsilon
+    the library's 99%-confidence rank error, and a state-cap flag
+    asserting size <= k*(2+ceil(log2(2n/k))) — a sketch bug flips a
+    flag and fails the hash gate. The exact side exists only to AUDIT
+    the sketch (the q_ann_recall shape); the 100 TB consumer reads
+    the sketch alone, whose per-key state is a few KB forever and
+    whose partials merge like any mergeable aggregate."""
     s = replay_events(spark, sf_dir)
-    out = s.groupBy("event_type").applyInPandasWithState(
-        _kll_fold,
-        outputStructType=(
-            "event_type string, n_events long, p50_est double, "
-            "p90_est double, err_bound long, state_items long"
-        ),
-        stateStructType="n long, sketch string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    agg = s.groupBy("event_type").agg(kll_sketch("value").alias("sk"))
+    tbl = run_to_table(agg, "complete", spark)
+    return calibrated_readout(
+        sketch_estimates(tbl), load_table(spark, sf_dir, "events")
     )
-    tbl = run_to_table(out, "append", spark)
-    latest = tbl.groupBy("event_type").agg(
-        F.max_by(
-            F.struct("n_events", "p50_est", "p90_est", "err_bound",
-                     "state_items"),
-            F.col("n_events"),
-        ).alias("s")
-    ).select("event_type", "s.*")
-    from streamz_postgres_spark.functions.kll import calibrated_readout
-
-    return calibrated_readout(latest, load_table(spark, sf_dir, "events"))
 
 
 # -- streaming TWAP -----------------------------------------------------------
@@ -1227,17 +1168,9 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_twap_oracle() -> str:
-    import streamz_postgres_spark.operators.timewindows  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_twap"].oracle
-
-
 register(
     "q_stream_twap",
-    oracle=_stream_twap_oracle(),
+    oracle=oracle_of("q_twap"),
     tags=("streaming", "stateful", "timeseries"),
 )(q_stream_twap)
 
@@ -1354,17 +1287,9 @@ def q_stream_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stream_seq_oracle() -> str:
-    import streamz_postgres_spark.operators.windows  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_sequence_match"].oracle
-
-
 register(
     "q_stream_sequence_match",
-    oracle=_stream_seq_oracle(),
+    oracle=oracle_of("q_sequence_match"),
     tags=("streaming", "stateful", "sequence"),
 )(q_stream_sequence_match)
 
@@ -1637,19 +1562,9 @@ def _stream_pattern_query(
     )
 
 
-def _batch_oracle(key: str) -> str:
-    """The live twins' oracle IS the batch key's (one home for the
-    four identical helper functions the r12 review flagged)."""
-    import streamz_postgres_spark.operators.windows  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY[key].oracle
-
-
 register(
     "q_stream_pattern_measures",
-    oracle=_batch_oracle("q_pattern_measures"),
+    oracle=oracle_of("q_pattern_measures"),
     tags=("streaming", "stateful", "sequence"),
 )(q_stream_pattern_measures)
 
@@ -1684,7 +1599,7 @@ def q_stream_pattern_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 register(
     "q_stream_pattern_overlap",
-    oracle=_batch_oracle("q_pattern_overlap"),
+    oracle=oracle_of("q_pattern_overlap"),
     tags=("streaming", "stateful", "sequence"),
 )(q_stream_pattern_overlap)
 
@@ -1776,7 +1691,7 @@ def q_stream_pattern_symbol_measures(
 
 register(
     "q_stream_pattern_symbol_measures",
-    oracle=_batch_oracle("q_pattern_symbol_measures"),
+    oracle=oracle_of("q_pattern_symbol_measures"),
     tags=("streaming", "stateful", "sequence"),
 )(q_stream_pattern_symbol_measures)
 
@@ -1888,6 +1803,6 @@ def q_stream_pattern_skip_to(
 
 register(
     "q_stream_pattern_skip_to",
-    oracle=_batch_oracle("q_pattern_skip_to"),
+    oracle=oracle_of("q_pattern_skip_to"),
     tags=("streaming", "stateful", "sequence"),
 )(q_stream_pattern_skip_to)

@@ -32,7 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from streamz_postgres_spark.catalog import load_table
 from streamz_postgres_spark.functions.numeric import sql_dsum
-from streamz_postgres_spark.registry import register
+from streamz_postgres_spark.registry import oracle_of, register
 from streamz_postgres_spark.streaming.runner import replay_events, run_to_table
 
 
@@ -1116,17 +1116,9 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_table(out, "complete", spark).orderBy("event_type", "bar")
 
 
-def _stream_ohlc_oracle() -> str:
-    import streamz_postgres_spark.operators.timewindows  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_ohlc_bars"].oracle
-
-
 register(
     "q_stream_ohlc",
-    oracle=_stream_ohlc_oracle(),
+    oracle=oracle_of("q_ohlc_bars"),
     tags=("streaming", "time", "timeseries"),
 )(q_stream_ohlc)
 
@@ -1172,16 +1164,8 @@ def q_stream_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dau_mau_readout(tbl)
 
 
-def _stream_dau_mau_oracle() -> str:
-    import streamz_postgres_spark.operators.aggregates  # noqa: F401
-
-    from streamz_postgres_spark.registry import REGISTRY
-
-    return REGISTRY["q_dau_mau"].oracle
-
-
 register(
     "q_stream_dau_mau",
-    oracle=_stream_dau_mau_oracle(),
+    oracle=oracle_of("q_dau_mau"),
     tags=("streaming", "bitmap", "time"),
 )(q_stream_dau_mau)

@@ -239,16 +239,16 @@ def test_tws_restart_resumes_typed_state(spark, dirs):
 
 @pytest.mark.slow
 def test_kll_restart_resumes_sketch_state(spark, dirs):
-    """KLL sketch recovery: the serialized sketch (level buffers +
-    rank-error ledger) must survive a stop/restart boundary. After
-    restarting with file b, each type's final emission must carry
-    the FULL-history count (a lost state store would restart n at
-    file-b counts) and its p50 estimate must sit within the ledger
-    of the full-data exact rank — the sketch keeps its guarantee
+    """KLL sketch recovery: the streaming aggregate's state (one
+    binary sketch per type) must survive a stop/restart boundary.
+    Each run writes its complete-mode result through foreachBatch
+    (a file sink takes append mode only). After restarting with file
+    b, each type's sketch must carry the FULL-history count (a lost
+    state store would restart n at file-b counts, a replayed file a
+    would double it) and its p50 estimate must sit within the bound
+    of the full-data exact rank: the sketch keeps its guarantee
     across the crash boundary, not just within one run."""
-    from streamz_postgres_spark.streaming.stateful import _kll_fold
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from streamz_postgres_spark.functions.kll import kll_sketch, sketch_estimates
 
     src, sink = dirs
     data, ckpt = os.path.join(sink, "data"), os.path.join(sink, "ckpt")
@@ -259,23 +259,16 @@ def test_kll_restart_resumes_sketch_state(spark, dirs):
     half = t.num_rows // 2
     schema = "event_id bigint, event_type string, value double"
 
+    def write_result(df, _batch_id):
+        df.write.mode("overwrite").parquet(data)
+
     def run_available_now():
         s = spark.readStream.schema(schema).parquet(src)
-        out = s.groupBy("event_type").applyInPandasWithState(
-            _kll_fold,
-            outputStructType=(
-                "event_type string, n_events long, p50_est double, "
-                "p90_est double, err_bound long, state_items long"
-            ),
-            stateStructType="n long, sketch string",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        out = s.groupBy("event_type").agg(kll_sketch("value").alias("sk"))
         q = (
-            out.writeStream.format("parquet")
-            .option("path", data)
+            out.writeStream.foreachBatch(write_result)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
+            .outputMode("complete")
             .trigger(availableNow=True)
             .start()
         )
@@ -286,31 +279,19 @@ def test_kll_restart_resumes_sketch_state(spark, dirs):
     pq.write_table(t.slice(half), f"{src}/b.parquet")
     run_available_now()
 
-    final = (
-        spark.read.parquet(data)
-        .groupBy("event_type")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("p50_est", "n_events").alias("p50_est"),
-            F.max_by("err_bound", "n_events").alias("err_bound"),
-        )
-    )
+    final = sketch_estimates(spark.read.parquet(data))
     full = spark.createDataFrame(t.to_pandas())
-    want_n = {
-        r.event_type: r.n
+    exact = {
+        r.event_type: (r.n, sorted(r.vals))
         for r in full.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count("value").alias("n"), F.collect_list("value").alias("vals"))
         .collect()
     }
-    vals = {
-        r.event_type: sorted(r.vals)
-        for r in full.groupBy("event_type")
-        .agg(F.collect_list("value").alias("vals"))
-        .collect()
-    }
-    for r in final.collect():
-        assert r.n_events == want_n[r.event_type], r.event_type
-        sv = vals[r.event_type]
+    rows = final.collect()
+    assert {r.event_type for r in rows} == set(exact)
+    for r in rows:
+        want_n, sv = exact[r.event_type]
+        assert r.n_events == want_n, r.event_type
         target = (r.n_events - 1) // 2 + 1
         lt = sum(1 for v in sv if v < r.p50_est)
         le = sum(1 for v in sv if v <= r.p50_est)

@@ -16,7 +16,8 @@ First sweep (NULL/tie classes), nine keys:
 - q_asof_nearest: the ORACLE desynchronized candidate ts and value
   under per-column IGNORE NULLS (now one struct per direction),
 - q_kll_quantile (+ streaming twin's shared readout): NaNs entered
-  the sketch and COUNT(*)-vs-collect_list index desync,
+  the then hand-written sketch and COUNT(*)-vs-collect_list index
+  desync,
 - q_multimodal / _frames / _dedup, q_udtf_explode: pandas UDFs
   crashed on NULL payloads,
 - q_text_fingerprint: DuckDB's list_prepend(0, NULL) = [0] folded a
@@ -93,8 +94,9 @@ keys in six root causes:
   (q_funnel, q_user_features + the streaming funnel twin) — now
   CASE WHEN ... ELSE 0 like the oracles,
 - pandas groupby drops a None group key by default
-  (q_kll_quantile's partial stage) — dropna=False + NaN
-  normalization, and the calibration re-join is now eqNullSafe,
+  (q_kll_quantile's former pandas partial stage, since replaced by
+  Spark's native sketch aggregate) — the calibration re-join is
+  eqNullSafe,
 - signature training on a NULL class (q_text_langid): a NULL lang
   is not a language and ties engine-divergently (Spark NULLS FIRST
   asc vs DuckDB NULLS LAST) — signatures train on labeled docs
@@ -140,6 +142,8 @@ streaming/stateful.py).
 """
 
 from __future__ import annotations
+
+import shutil
 
 import pytest
 
@@ -287,7 +291,9 @@ assert not any(map(is_live, PINNED)) and all(map(is_live, PINNED_STREAMING))
 def hostile_dir():
     from scripts.sweep import build_hostile_dir
 
-    return build_hostile_dir(SF_DIR)
+    d = build_hostile_dir(SF_DIR)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.fixture(scope="module")
@@ -299,7 +305,9 @@ def hostile_duck(hostile_dir):
 def hostile_stream_dir():
     from scripts.sweep import build_hostile_dir
 
-    return build_hostile_dir(SF_DIR, timeshift=False)
+    d = build_hostile_dir(SF_DIR, timeshift=False)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.fixture(scope="module")

@@ -1,18 +1,37 @@
-"""Deterministic KLL sketch invariants (functions/kll.py).
+"""KLL sketch invariants of Spark's native sketch (functions/kll.py).
 
-The sketch's value proposition is the EXACT rank-error ledger: for
-any insertion order and any merge tree, every quantile read-out must
-sit within ``err`` ranks of its target against the exact multiset.
-These tests drive the sketch pure-Python (no Spark) over adversarial
-orders and merge splits; the streaming integration is covered by the
-q_stream_kll_quantile oracle gate.
+The sketch's contract is its rank-error bound: for any insertion
+order and any merge tree, a quantile read-out sits within
+ceil(epsilon * n) ranks of its target against the exact multiset,
+where epsilon is the library's 99%-confidence normalized rank error
+(the ``err_bound`` of ``sketch_estimates``). These tests drive
+``kll_sketch_agg_double`` at the keys' k over adversarial orders and
+merge splits; the registered keys are covered by the oracle gate.
 """
 
 from __future__ import annotations
 
+import math
+
+import duckdb
+import pandas as pd
 import pytest
 
-from streamz_postgres_spark.functions.kll import KLLSketch
+from pyspark.sql import functions as F
+
+from streamz_postgres_spark.functions.kll import (
+    DEFAULT_K,
+    KLL_ORACLE_SQL,
+    calibrated_readout,
+    kll_sketch,
+    sketch_estimates,
+)
+from streamz_postgres_spark.oracle import row_multiset
+
+# duplicates + a non-monotone pattern, deterministic (no RNG)
+_VALS = [float((i * 2654435761) % 997) / 7 for i in range(20000)]
+
+_RANKS = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 
 
 def _realized_rank_dist(sorted_vals, est, target):
@@ -21,28 +40,36 @@ def _realized_rank_dist(sorted_vals, est, target):
     return max(0, lt + 1 - target, target - le)
 
 
-def _check_bound(vals, k, nsplits):
-    chunks = [vals[i::nsplits] for i in range(nsplits)]
-    sketches = []
-    for ch in chunks:
-        sk = KLLSketch(k)
-        for v in ch:
-            sk.add(v)
-        sketches.append(sk)
-    sk = sketches[0]
-    for other in sketches[1:]:
-        sk.merge(other)
-    assert sk.n == len(vals)
+def _sketch(spark, vals, nsplits=1):
+    """One sketch over ``vals``: ``nsplits`` partial sketches, each
+    fed its values in list order (split i takes vals[i::nsplits]),
+    merged into one. Returns the ``sketch_estimates`` row plus the
+    read-outs at ``_RANKS`` as ``qs``."""
+    split = [i % nsplits for i in range(len(vals))]
+    pdf = pd.DataFrame({"split": split, "value": vals})
+    # one partition keeps each split's values in list order
+    df = spark.createDataFrame(pdf).coalesce(1)
+    parts = df.groupBy("split").agg(kll_sketch("value").alias("sk"))
+    # the sketch is randomized: read every field off one copy of it
+    sk = parts.agg(F.kll_merge_agg_double("sk")).first()[0]
+    merged = spark.createDataFrame([("t", sk)], "event_type string, sk binary")
+    ranks = F.array(*[F.lit(r) for r in _RANKS])
+    qs = merged.select(
+        "event_type", F.kll_sketch_get_quantile_double("sk", ranks).alias("qs")
+    )
+    return sketch_estimates(merged).join(qs, "event_type").first()
+
+
+def _check_bound(spark, vals, nsplits):
+    r = _sketch(spark, vals, nsplits)
+    assert r.n_events == len(vals)
     sv = sorted(vals)
-    for q in (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99):
-        t = int((len(vals) - 1) * q) + 1
-        dist = _realized_rank_dist(sv, sk.query(t), t)
-        assert dist <= sk.err, (q, dist, sk.err)
-    return sk
-
-
-# duplicates + a non-monotone pattern, deterministic (no RNG)
-_VALS = [float((i * 2654435761) % 997) / 7 for i in range(20000)]
+    # each read-out answers the nearest-rank target ceil(rank * n)
+    for rank, est in zip(_RANKS, r.qs):
+        t = math.ceil(rank * len(vals))
+        dist = _realized_rank_dist(sv, est, t)
+        assert dist <= r.err_bound, (rank, dist, r.err_bound)
+    return r
 
 
 @pytest.mark.parametrize(
@@ -50,83 +77,89 @@ _VALS = [float((i * 2654435761) % 997) / 7 for i in range(20000)]
     ["asc", "desc", "interleaved"],
 )
 @pytest.mark.parametrize("nsplits", [1, 8])
-def test_rank_error_within_ledger(order, nsplits):
+def test_rank_error_within_ledger(spark, order, nsplits):
     vals = {
         "asc": sorted(_VALS),
         "desc": sorted(_VALS, reverse=True),
         "interleaved": _VALS,
     }[order]
-    _check_bound(vals, k=64, nsplits=nsplits)
+    _check_bound(spark, vals, nsplits=nsplits)
 
 
-def test_ledger_is_meaningfully_small():
+def test_ledger_is_meaningfully_small(spark):
     """The bound must be an actual guarantee, not vacuous: at k=256
-    over 20k items the ledger stays under 3% of n (the accuracy
-    class the round-6 verdict asked for vs the log2-histogram's
-    bucket-relative error)."""
-    sk = _check_bound(_VALS, k=256, nsplits=4)
-    assert sk.err < 0.03 * sk.n
+    over 20k items it stays under 3% of n (the accuracy class the
+    round-6 verdict asked for vs the log2-histogram's bucket-relative
+    error); the library's epsilon at k=256 is 1.046%."""
+    r = _check_bound(spark, _VALS, nsplits=4)
+    assert r.err_bound < 0.03 * r.n_events
 
 
-def test_exact_below_k():
-    sk = KLLSketch(256)
-    for v in range(100):
-        sk.add(float(v))
-    assert sk.err == 0
-    assert sk.size() == 100
-    # with zero compactions every read-out is the exact order stat
-    for t in (1, 50, 100):
-        assert sk.query(t) == float(t - 1)
+def test_exact_below_k(spark):
+    vals = [float(v) for v in range(100)]
+    r = _sketch(spark, vals)
+    assert r.state_items == 100
+    # with nothing compacted every read-out is the exact order stat
+    assert list(r.qs) == [float(math.ceil(q * 100) - 1) for q in _RANKS]
+    assert (r.p50_est, r.p90_est) == (49.0, 89.0)
 
 
-def test_state_stays_logarithmic():
-    sk = KLLSketch(64)
-    for v in _VALS:
-        sk.add(v)
-    import math
-
-    cap = 64 * (2 + math.ceil(math.log2(max(1.0, 2.0 * sk.n / 64))))
-    assert sk.size() <= cap
+def test_state_stays_logarithmic(spark):
+    r = _sketch(spark, _VALS)
+    levels = math.ceil(math.log2(max(1.0, 2.0 * r.n_events / DEFAULT_K)))
+    cap = DEFAULT_K * (2 + levels)
+    assert r.state_items <= cap
+    assert r.state_items < r.n_events / 10
 
 
-def test_weight_conservation_and_extremes():
-    sk = KLLSketch(32)
-    for v in _VALS[:5000]:
-        sk.add(v)
-    # total weight must equal n exactly (odd buffers leave a
-    # leftover item instead of dropping weight)
-    total_w = sum(len(b) << lvl for lvl, b in enumerate(sk.levels))
-    assert total_w == sk.n
-    # extremes are rank-bounded, not preserved (compaction may drop
-    # the exact min/max -- standard for compacting sketches)
-    sv = sorted(_VALS[:5000])
-    assert _realized_rank_dist(sv, sk.query(sk.n), sk.n) <= sk.err
-    assert _realized_rank_dist(sv, sk.query(1), 1) <= sk.err
+def test_weight_conservation_and_extremes(spark):
+    vals = _VALS[:5000]
+    r = _sketch(spark, vals, nsplits=3)
+    # the sketch's n is the exact item count across merges
+    assert r.n_events == len(vals)
+    # extremes are rank-bounded like every other read-out
+    sv = sorted(vals)
+    for rank, est in ((_RANKS[0], r.qs[0]), (_RANKS[-1], r.qs[-1])):
+        t = math.ceil(rank * len(vals))
+        assert _realized_rank_dist(sv, est, t) <= r.err_bound, rank
 
 
-def test_json_roundtrip_is_exact():
-    sk = KLLSketch(64)
-    for v in _VALS[:3000]:
-        sk.add(v)
-    rt = KLLSketch.from_json(sk.to_json())
-    assert rt.n == sk.n and rt.err == sk.err
-    assert rt.levels == sk.levels and rt.parity == sk.parity
-    for t in (1, 1500, 3000):
-        assert rt.query(t) == sk.query(t)
+def test_merge_matches_sequential_counts(spark):
+    merged = _sketch(spark, _VALS[:8000], nsplits=2)
+    sequential = _sketch(spark, _VALS[:8000])
+    assert merged.n_events == sequential.n_events == 8000
 
 
-def test_merge_matches_sequential_counts():
-    a, b = KLLSketch(64), KLLSketch(64)
-    for v in _VALS[:4000]:
-        a.add(v)
-    for v in _VALS[4000:8000]:
-        b.add(v)
-    a.merge(b)
-    assert a.n == 8000
-    # every level buffer below capacity after the merge's compactions
-    assert all(len(buf) < 64 for buf in a.levels)
+def test_all_null_group_reads_out_null(spark):
+    """A group whose values are all NULL yields an empty sketch (n =
+    0) that the library refuses a quantile of: its estimates read out
+    NULL, and the calibrated read-out still matches the oracle."""
+    events = spark.createDataFrame(
+        [("a", float(v)) for v in range(300)]
+        + [("a", None), ("b", None), ("b", None), (None, 1.0)],
+        "event_type string, value double",
+    )
+    sketches = events.groupBy("event_type").agg(
+        kll_sketch("value").alias("sk")
+    )
+    est = {r.event_type: r for r in sketch_estimates(sketches).collect()}
+    assert est["a"].n_events == 300
+    b = est["b"]
+    assert (b.n_events, b.p50_est, b.p90_est, b.err_bound, b.state_items) == (
+        0, None, None, 0, 0,
+    )
+
+    out = calibrated_readout(sketch_estimates(sketches), events)
+    con = duckdb.connect()
+    con.register("events", events.toPandas())
+    want = con.execute(KLL_ORACLE_SQL)
+    assert row_multiset(out.columns, out.collect()) == row_multiset(
+        [d[0] for d in want.description], want.fetchall()
+    )
 
 
-def test_merge_k_mismatch_rejected():
-    with pytest.raises(ValueError):
-        KLLSketch(64).merge(KLLSketch(128))
+def test_nan_never_enters_the_sketch(spark):
+    df = spark.createDataFrame(
+        [(float("nan"),), (1.0,), (2.0,)], "value double"
+    ).agg(kll_sketch("value").alias("sk"))
+    assert df.select(F.kll_sketch_get_n_double("sk")).first()[0] == 2

@@ -10,6 +10,8 @@ and comparing the full value multiset."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from streamz_postgres_spark.oracle import row_multiset
@@ -44,7 +46,9 @@ def _values(spark, key):
 def shuffled_dir():
     from scripts.sweep import build_shuffled_dir
 
-    return build_shuffled_dir(SF_DIR)
+    d = build_shuffled_dir(SF_DIR)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.mark.parametrize("key", [k for k in KEYS if "stream" not in k])

@@ -320,12 +320,25 @@ def test_oov_vocab_topv_is_distributed(spark):
 
 
 def test_kll_partials_run_after_resplit(spark):
-    """q_kll_quantile's Python partial-sketch stage must run after a
-    round-robin re-split (RoundRobinPartitioning exchange), not on
-    the fixture's single input split — the _vecs_parallel lesson
-    applied to mapInPandas."""
-    plan = _plan(spark, "q_kll_quantile")
-    assert "RoundRobinPartitioning" in plan or "ROUND_ROBIN" in plan, plan
+    """q_kll_quantile builds its sketches in Spark: no Python node,
+    and a partial aggregate builds one sketch per (task, type) right
+    above the scan, so the one exchange on the sketch path carries
+    sketches, never the value multiset."""
+    from streamz_postgres_spark.plans.scale import explain_summary
+
+    df = REGISTRY["q_kll_quantile"].spark_fn(spark, SF_DIR)
+    assert explain_summary(df)["python_nodes"] == 0
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    tree = [line.lstrip(" :+-") for line in buf.getvalue().splitlines()]
+    final = next(
+        i for i, line in enumerate(tree)
+        if "functions=[kll_sketch_agg_double(" in line
+    )
+    assert tree[final + 1].startswith("Exchange hashpartitioning(event_type"), tree
+    assert "functions=[partial_kll_sketch_agg_double(" in tree[final + 2], tree
+    assert tree[final + 3].startswith("FileScan parquet"), tree
 
 
 @pytest.fixture(scope="module")

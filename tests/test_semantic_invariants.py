@@ -198,3 +198,27 @@ def test_kmv_intersect_error_bounded_and_exact_below_k(spark):
             assert r.rel_err <= bound, (
                 f"{r.type_a}/{r.type_b} rel_err {r.rel_err} > {bound}"
             )
+
+
+def test_stream_pattern_measures_closes_to_batch(spark):
+    """The live per-match MEASURES twin must converge to the batch
+    MATCH_RECOGNIZE lowering exactly. Both share one DuckDB oracle,
+    but the closure here is engine-internal (stream fold vs batch HOF
+    arithmetic), so a drift in EITHER shows even if both keep passing
+    their shared oracle on a lucky fixture."""
+    batch = sorted(
+        map(
+            tuple,
+            REGISTRY["q_pattern_measures"].spark_fn(spark, SF_DIR).collect(),
+        )
+    )
+    live = sorted(
+        map(
+            tuple,
+            REGISTRY["q_stream_pattern_measures"]
+            .spark_fn(spark, SF_DIR)
+            .collect(),
+        )
+    )
+    assert batch == live
+    assert len(batch) > 0  # the fixture has matches — not vacuous
